@@ -1,0 +1,12 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+  /** Block until every posted event has reached every listener, so
+    * a request's job, stage and task events are attributed before the
+    * next request starts.
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
