@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark — NOISE-ROBUST since round 10: the whole
@@ -223,18 +224,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark) // graft SQL functions, as Engine does
+    val spark = Engine.session("graft-bench")
     // forked fresh-JVM calibration, START bookend (END runs after the
     // sweeps; the pair's agreement is the ledger's precision claim)
     val calibForkStart = calibrateForked()
@@ -260,17 +251,25 @@ object Bench {
     // A throwing item records its error, not a ~4 ms phantom success:
     // r8's regenerated events parquet broke 15 queries and the bench
     // reported them as the fastest entries of the round.
-    def timed(fn: () => Unit): (Double, Option[String]) = {
+    // Also counts the Janino compiles inside the item: once sweep 1
+    // has warmed the generated-class cache, a later sweep that still
+    // compiles means the cache is thrashing (see Engine.CodegenCacheEntries).
+    def timed(fn: () => Unit): (Double, Long, Option[String]) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val err = try { fn(); None } catch { case e: Throwable =>
         Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       }
-      ((System.nanoTime() - t0) / 1e9, err)
+      ((System.nanoTime() - t0) / 1e9,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, err)
     }
     val buildFns = Bench.buildFns(spark, sfDir)
     val queryFns = SparkEntry.queries.toSeq.sortBy(_._1)
     val bTimes = buildFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
     val qTimes = queryFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+    // per item, the codegen compiles of every sweep (failed ones too)
+    val bCompiles = buildFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Long]).toMap
+    val qCompiles = queryFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Long]).toMap
     val errs = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val errCount = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     // SPARK_GRAFT_BENCH_WARM=1: clear the build memos only before the
@@ -283,14 +282,16 @@ object Bench {
     for (rep <- 1 to reps) {
       if (!warmBuilds || rep == 1) Caches.clearAll()
       buildFns.foreach { case (name, fn) =>
-        val (t, err) = timed(fn)
+        val (t, c, err) = timed(fn)
+        bCompiles(name) += c
         err match {
           case None => bTimes(name) += t
           case Some(e) => errs(name) = e; errCount(name) += 1
         }
       }
       queryFns.foreach { case (name, fn) =>
-        val (t, err) = timed(() => { fn(spark, sfDir).count(); () })
+        val (t, c, err) = timed(() => { fn(spark, sfDir).count(); () })
+        qCompiles(name) += c
         // release per-query persisted relations so cached blocks don't
         // accumulate GC pressure across the suite — outside the timed
         // window, so one query's teardown doesn't bill the next
@@ -314,15 +315,20 @@ object Bench {
     // per item: {"med":…,"min":…,"max":…,"n":…} over successful reps
     // (max doubles as the spread indicator next to med); an item with
     // ZERO successful reps reports {"err":…} instead of numbers, and
-    // a flaky item (some reps failed) carries "errs" alongside stats
-    def statsJson(name: String, ts: Seq[Double]): String =
-      if (ts.isEmpty) "{\"err\":" + jstr(errs(name)) + "}"
+    // a flaky item (some reps failed) carries "errs" alongside stats;
+    // every item carries "codegen_compiles", one count per sweep
+    def statsJson(name: String, ts: Seq[Double], cs: Seq[Long]): String = {
+      val comp = cs.mkString(""""codegen_compiles":[""", ",", "]")
+      if (ts.isEmpty) "{\"err\":" + jstr(errs(name)) + "," + comp + "}"
       else {
         val base = f"""{"med":${med(ts)},"min":${ts.min},"max":${ts.max},"n":${ts.size}"""
-        (if (errCount(name) > 0) base + s""","errs":${errCount(name)}""" else base) + "}"
+        (if (errCount(name) > 0) base + s""","errs":${errCount(name)}""" else base) +
+          "," + comp + "}"
       }
-    def block(items: Seq[String], times: Map[String, scala.collection.mutable.ArrayBuffer[Double]]): String =
-      items.map(n => jstr(n) + ":" + statsJson(n, times(n).toSeq))
+    }
+    def block(items: Seq[String], times: Map[String, scala.collection.mutable.ArrayBuffer[Double]],
+        comps: Map[String, scala.collection.mutable.ArrayBuffer[Long]]): String =
+      items.map(n => jstr(n) + ":" + statsJson(n, times(n).toSeq, comps(n).toSeq))
         .mkString("{", ",", "}")
     val failures = queryFns.count { case (n, _) => qTimes(n).isEmpty }
     // headline total = Σ per-item MIN across sweeps (builds + queries).
@@ -348,7 +354,7 @@ object Bench {
       case _ => ""
     }
     val calibJson = f""""calib_sec":$calib%.3f,"host_factor":$hostFactor%.3f,"reference_set":"$CalibReferenceSet"""" + forkJson
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm":$warmBuilds,"med_total":$medTotal,"reps":$reps,"failures":$failures,$calibJson,"builds":${block(buildFns.map(_._1), bTimes)},"queries":${block(queryFns.map(_._1), qTimes)},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm":$warmBuilds,"med_total":$medTotal,"reps":$reps,"failures":$failures,$calibJson,"builds":${block(buildFns.map(_._1), bTimes, bCompiles)},"queries":${block(queryFns.map(_._1), qTimes, qCompiles)},"sf":"$sfDir"}"""
     println(line)
     // stdout is shared with stray log lines; the file is the
     // machine-parseable copy (r6 item: BENCH_r08 had "parsed": null).

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,22 +21,14 @@ object Verify {
         "dump; combining it with a query-name filter would silently " +
         "shrink the gate. Drop the filter (or run a filtered dump " +
         "without --oracle-only into a fresh outDir).")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    lazy val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // lazy: --oracle-only never starts Spark
+    lazy val spark = Engine.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A throwing query must NOT vanish silently: it is recorded in
     // failed.json (name → error) next to oracle_sql.json, so a gate
     // shrink is visible as an artifact, not inferred from absence.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     if (!oracleOnly) {
-      spark.sparkContext.setLogLevel("WARN")
-      GraftExtensions.register(spark) // graft SQL functions, as Engine does
       SparkEntry.queries
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .foreach { case (name, fn) =>

@@ -73,10 +73,6 @@ object Dedup {
       .select(col("doc_id"),
         graft.plans.VectorExpressions.distinctShingles(col("txt"), 5).as("gs"))
 
-  /** The shared 32-bit md5-prefix hash. */
-  def hash32(c: String): org.apache.spark.sql.Column =
-    expr(s"cast(conv(substring(md5($c), 1, 8), 16, 10) as bigint)")
-
   /** The k MinHash permutation parameters as a broadcastable table. */
   def hashParams(spark: SparkSession): DataFrame = {
     import spark.implicits._

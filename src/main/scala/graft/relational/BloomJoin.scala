@@ -70,9 +70,6 @@ object BloomJoin extends QueryModule {
   private def posExprM(i: Int, key: String, bits: Long): String =
     s"((${Sketches.h48("bf", key)} div ${1L << (shiftOf(bits) * i)}) % $bits)"
 
-  private def posExpr(i: Int, key: String): String =
-    posExprM(i, key, BloomBits.toLong)
-
   // the slice offset derives from BloomBits exactly like posExprM's —
   // retuning BloomBits cannot desynchronize the oracle replay
   private def sqlPos(i: Int, key: String): String =

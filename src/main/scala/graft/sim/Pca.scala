@@ -123,12 +123,6 @@ object Pca extends QueryModule {
     java.math.BigDecimal.valueOf(x)
       .setScale(12, java.math.RoundingMode.HALF_UP)
 
-  private def dsum(terms: Iterator[Double]): Double = {
-    var acc = java.math.BigDecimal.ZERO
-    while (terms.hasNext) acc = acc.add(d12(terms.next()))
-    acc.doubleValue
-  }
-
   /** SQL `sum` over nullable terms: null terms are SKIPPED, a sum
     * with no non-null term is null — the exact aggregate semantics
     * the previous distributed form (and the oracle) apply to null

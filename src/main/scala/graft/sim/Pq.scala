@@ -932,20 +932,6 @@ object Pq extends QueryModule {
     true
   }
 
-  /** [[rebalanceIvfPq]] iterated to convergence — same contract as
-    * `IndexStore.rebalanceUntilBand` (eager per-pass commits; a
-    * return equal to `maxPasses` signals an unsatisfiable band).
-    */
-  def rebalanceIvfPqUntilBand(spark: SparkSession, dir: String,
-      policy: IndexStore.RebalancePolicy =
-        IndexStore.RebalancePolicy.Standard,
-      maxPasses: Int = 8): Int = {
-    var passes = 0
-    while (passes < maxPasses && rebalanceIvfPq(spark, dir, policy))
-      passes += 1
-    passes
-  }
-
   /** J20 — a STREAM of query vectors answered from the SAVED composed
     * IVFPQ index (the online half of G26's serving story, under the
     * same Structured-Streaming constraints as the IVF serve stream):

@@ -115,10 +115,6 @@ object PqTrained extends graft.QueryModule {
       .toSeq.toDF("cid", "ce")
   }
 
-  private def cbLit(codebook: Array[Array[Array[Double]]],
-      m: Int): Column =
-    typedlit(codebook(m).map(_.toSeq).toSeq)
-
   /** Per-vector PQ codes: for each subspace the argmin codeword
     * (strict `<` keeps the FIRST minimum — ties to the smaller code,
     * the [[Pq.codes]] rule). Deterministic pure function of

@@ -30,14 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Vectors {
 
-  private def qsum(terms: String): String =
-    s"""cast(aggregate($terms, cast(0 as decimal(24,12)),
-       |  (acc, v) -> cast(acc + v as decimal(24,12))) as double)""".stripMargin
-
-  private def products(x: String, y: String): String =
-    s"""zip_with($x, $y, (xv, yv) ->
-       |  cast(cast(xv as double) * cast(yv as double) as decimal(24,12)))""".stripMargin
-
   /** Quantized-exact dot product of two float-array columns — the
     * codegen'd [[graft.plans.QuantFold]] kernel (bit-identical to the
     * former zip_with/aggregate HOF chain, which evaluated interpreted
@@ -68,15 +60,4 @@ object Vectors {
   /** Cosine similarity from precomputed squared norms. */
   def cosineFrom(dotCol: Column, normSqX: Column, normSqY: Column): Column =
     dotCol / (sqrt(normSqX) * sqrt(normSqY))
-
-  /** DuckDB mirror: the same quantized dot, relationally, as a scalar
-    * subquery over dimension indexes. `x`/`y` are list-typed SQL
-    * expressions; dims is the dimensionality. Both casts route
-    * through VARCHAR — see the class doc's tie-rounding note.
-    */
-  def sqlDot(x: String, y: String, dims: Int): String =
-    s"""(SELECT CAST(CAST(sum(CAST(CAST(CAST($x[CAST(i AS INT)] AS DOUBLE)
-       |  * CAST($y[CAST(i AS INT)] AS DOUBLE) AS VARCHAR)
-       |  AS DECIMAL(24,12))) AS VARCHAR) AS DOUBLE)
-       |  FROM UNNEST(range(1, ${dims + 1})) u(i))""".stripMargin
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev lab: time the recursive-horizon forecast in isolation — build
   * the pooled GBT once, then per rep clear ONLY the small-frame memo
   * so the recursion re-runs cold while the fitted model stays warm
@@ -12,17 +10,7 @@ object ForecastLab {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.Engine.session("graft-forecast-lab")
     val obs = graft.etl.Observations.panel(spark, sfDir)
     graft.forecast.Gbt.prebuild(obs)
     for (i <- 1 to reps) {

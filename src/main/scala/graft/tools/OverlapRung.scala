@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure the §2.6 job-overlap (Par.jobs) at a DATA-BOUND
@@ -19,19 +18,9 @@ object OverlapRung {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val mult = if (args.length > 1) args(1).toInt else 24
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mode = if (sys.env.get("SPARK_GRAFT_PAR_SEQ").contains("1"))
       "seq" else "overlap"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.Engine.session("graft-overlap-rung")
     import graft.sources.Tables
 
     // ×mult events with distinct event/user ids — the sketch store's

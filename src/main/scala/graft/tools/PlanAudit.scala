@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: sweep every SparkEntry query's physical plan for scale
   * red flags. Usage: runMain graft.tools.PlanAudit [sfDir] [queryName]
   *
@@ -17,17 +15,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val only = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark) // graft SQL functions (qdot/qdistsq in served plans)
     val names = only.map(Seq(_)).getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
     names.foreach { name =>
       try {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev lab: time the quantized dot kernels — HOF chain vs QuantFold —
@@ -11,14 +10,7 @@ object QdotLab {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 200000L
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.Engine.session("graft-qdot-lab")
 
     val df = spark.range(n)
       .selectExpr(

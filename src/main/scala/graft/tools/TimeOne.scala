@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a single SparkEntry query N times.
   * Usage: runMain graft.tools.TimeOne <queryName> [sfDir] [reps]
   */
@@ -10,17 +8,7 @@ object TimeOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark) // graft SQL functions (qdot/qdistsq in served plans)
+    val spark = graft.Engine.session("graft-time-one")
     for (q <- name.split(",").toSeq; i <- 1 to reps) {
       val fn = graft.SparkEntry.queries(q)
       val t0 = System.nanoTime()

@@ -86,15 +86,7 @@ object UnicodeGate {
     val outDir = args.headOption.getOrElse("/tmp/graft_unicode_gate")
     val srcDir =
       if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark) // graft SQL functions (qdot/qdistsq in served plans)
+    val spark = graft.Engine.session("graft-unicode-gate")
     writeFixture(spark, srcDir, outDir)
     val n = spark.read.parquet(s"$outDir/documents.parquet").count()
     println(s"unicode-gate fixture at $outDir: $n documents " +

@@ -82,15 +82,7 @@ object UpperRung {
     val outDir = args.headOption.getOrElse("/tmp/graft_upper_rung")
     val nDocs = if (args.length > 1) args(1).toLong else DefaultDocs
     val nVecs = if (args.length > 2) args(2).toLong else DefaultVecs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark) // graft SQL functions (qdot/qdistsq in served plans)
+    val spark = graft.Engine.session("graft-upper-rung")
     writeFixture(spark, outDir, nDocs, nVecs)
     println(s"upper-rung fixture at $outDir: $nDocs docs " +
       s"(simhash W=${graft.dedup.Dedup.simhashBandBits(nDocs)}), " +
