@@ -3,6 +3,7 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Session-scoped memo of SMALL derived frames (model selections,
   * fitted parameters, forecast horizons — O(#series) rows, never raw
@@ -11,6 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `catalog.clearCache()` between queries doesn't force a rebuild.
   * Multiple operators composing the same expensive derivation (e.g.
   * model_select inside forecast_series) each pay it once per session.
+  *
+  * A memo frame is a single-partition leaf with exact statistics
+  * ([[org.apache.spark.sql.graftbridge.Bridge.smallCheckpoint]]). A
+  * plain checkpoint reports unknown partitioning and a size estimated
+  * from the build's plan (petabytes above a join), so Catalyst put an
+  * `Exchange` above every aggregate, sort and join over a KB-sized
+  * frame, and each ran as its own job. With `SinglePartition` and the
+  * exact row count and size, those operators run in the reading stage.
+  * A join keeps a single-partition side unshuffled only while the
+  * side is ≤ `spark.sql.maxSinglePartitionBytes` (128m by default), so
+  * a memo frame that outgrows "small" shuffles again instead of
+  * funnelling a large join into one task.
   *
   * Keys are tag + the input frame's canonicalized plan TEXT —
   * file-source relations compare by reference, so plan-object
@@ -70,11 +83,17 @@ object Memo {
        else sourcePaths.mkString("|src:", ";", ""))
   }
 
-  def small(tag: String, input: DataFrame)(build: => DataFrame): DataFrame = {
-    val key = (input.sparkSession, tag + "|" + planKey(input))
+  def small(tag: String, input: DataFrame)(build: => DataFrame): DataFrame =
+    small(tag, input.sparkSession, planKey(input))(build)
+
+  /** The keyed entry, for a frame whose plan is a pure function of
+    * `key` within a session: the caller skips building (and analyzing)
+    * an input plan just to compute its [[planKey]]. */
+  def small(tag: String, spark: SparkSession, key: String)(
+      build: => DataFrame): DataFrame = {
     cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
     cache.synchronized {
-      cache.getOrElseUpdate(key, build.localCheckpoint(true))
+      cache.getOrElseUpdate((spark, tag + "|" + key), Bridge.smallCheckpoint(build))
     }
   }
 }

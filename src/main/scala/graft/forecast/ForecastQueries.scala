@@ -353,6 +353,16 @@ object ForecastQueries extends QueryModule {
     * reference's dropna filter — relationally identical to
     * [[Gbt.supervised]] (year is unique per series, so joining on it
     * alone equals the Spark join that also carries value).
+    *
+    * Cents are DECIMAL(38,0) here and in the lag_features / rmse_eval
+    * oracles: DuckDB keeps a DECIMAL(18) product at 18 digits and
+    * overflows once a value passes ~3e7 (cents² > 1e18), while Spark
+    * widens its decimal(18,0) product to decimal(37,0). The integer
+    * product is exact in both, so results are unchanged. The sum of
+    * squares reaches DOUBLE through VARCHAR: DuckDB's direct cast of a
+    * DECIMAL(38) above ~1e19 is not correctly rounded (Spark's is),
+    * and the std's cancellation turns that last-bit difference into
+    * a visibly different value; parsing the exact digits rounds once.
     */
   private val lfSupCtes: String =
     """lf AS (SELECT geo, indicator, year, value,
@@ -363,12 +373,12 @@ object ForecastQueries extends QueryModule {
       |      CAST(sum(CAST(value AS DECIMAL(27,6))) OVER f AS DOUBLE) / 3
       |    END AS roll_mean_3,
       |    CASE WHEN count(*) OVER f = 3 THEN
-      |      sqrt((CAST(sum(cents * cents) OVER f AS DOUBLE)
+      |      sqrt((CAST(CAST(sum(cents * cents) OVER f AS VARCHAR) AS DOUBLE)
       |            - CAST(sum(cents) OVER f AS DOUBLE)
       |              * CAST(sum(cents) OVER f AS DOUBLE) / 3) / 2) / 100
       |    END AS roll_std_3
       |  FROM (SELECT *,
-      |          CAST(CAST(value AS DECIMAL(27,2)) * 100 AS DECIMAL(18,0))
+      |          CAST(CAST(value AS DECIMAL(27,2)) * 100 AS DECIMAL(38,0))
       |            AS cents
       |        FROM observations)
       |  WINDOW w AS (PARTITION BY geo, indicator ORDER BY year),
@@ -660,12 +670,12 @@ object ForecastQueries extends QueryModule {
         |    CAST(sum(CAST(value AS DECIMAL(27,6))) OVER f AS DOUBLE) / 3
         |  END AS roll_mean_3,
         |  CASE WHEN count(*) OVER f = 3 THEN
-        |    sqrt((CAST(sum(cents * cents) OVER f AS DOUBLE)
+        |    sqrt((CAST(CAST(sum(cents * cents) OVER f AS VARCHAR) AS DOUBLE)
         |          - CAST(sum(cents) OVER f AS DOUBLE)
         |            * CAST(sum(cents) OVER f AS DOUBLE) / 3) / 2) / 100
         |  END AS roll_std_3
         |FROM (SELECT *,
-        |        CAST(CAST(value AS DECIMAL(27,2)) * 100 AS DECIMAL(18,0)) AS cents
+        |        CAST(CAST(value AS DECIMAL(27,2)) * 100 AS DECIMAL(38,0)) AS cents
         |      FROM observations)
         |WINDOW w AS (PARTITION BY geo, indicator ORDER BY year),
         |       f AS (PARTITION BY geo, indicator ORDER BY year
@@ -683,11 +693,11 @@ object ForecastQueries extends QueryModule {
         |ORDER BY geo, indicator, year""".stripMargin),
     "rmse_eval" -> (cte +
       """SELECT geo, indicator, count(*) AS n_terms,
-        |  sqrt(CAST(sum(dc * dc) AS DOUBLE) / count(*)) / 100 AS rmse_naive
+        |  sqrt(CAST(CAST(sum(dc * dc) AS VARCHAR) AS DOUBLE) / count(*)) / 100 AS rmse_naive
         |FROM (
         |  SELECT geo, indicator,
         |    CAST((CAST(value AS DECIMAL(27,2)) - CAST(lag1 AS DECIMAL(27,2)))
-        |         * 100 AS DECIMAL(18,0)) AS dc
+        |         * 100 AS DECIMAL(38,0)) AS dc
         |  FROM (
         |    SELECT geo, indicator, value,
         |      lag(value, 1) OVER (PARTITION BY geo, indicator ORDER BY year) AS lag1

@@ -6,6 +6,7 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** E5 + E6 — gradient-boosted-tree forecasting on lag features (the
   * reference trains per-series XGBoost models and forecasts the
@@ -85,7 +86,7 @@ object Gbt {
           // transform branches) read materialized blocks instead of
           // racing the cache fill
           val feats = graft.Profiling.phase("gbt.supervised") {
-            supervised(obs).localCheckpoint(true) }
+            Bridge.smallCheckpoint(supervised(obs)) }
           val train = feats.filter(col("split") === "train")
           val fit =
             if (train.isEmpty) None
