@@ -64,16 +64,10 @@ object Bench {
     try {
       val javaBin = java.nio.file.Paths
         .get(System.getProperty("java.home"), "bin", "java").toString
-      val opens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar"
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val cmd = (javaBin +: opens) ++ Seq(
+      // the JDK module options spark-submit would inject
+      val moduleOpts = org.apache.spark.launcher.JavaModuleOptions
+        .defaultModuleOptionArray().toSeq
+      val cmd = (javaBin +: moduleOpts) ++ Seq(
         "-Xmx4g", "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
         "graft.tools.CalibOnly")

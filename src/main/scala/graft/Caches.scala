@@ -6,30 +6,12 @@ package graft
   * would measure a memo hit (~ms) instead of the build. Production
   * code never calls this: memo entries otherwise live until their
   * session stops, which is the documented semantics (one consistent
-  * build per session).
+  * build per session). Every such cache is an entry of [[Memo]]'s
+  * registry, so emptying it is the whole job.
   *
   * Checkpoint blocks held by evicted frames are released by Spark's
   * ContextCleaner once the frame references are garbage-collected.
   */
 object Caches {
-  def clearAll(): Unit = {
-    Memo.clearCacheForBench()
-    dedup.NearDup.clearCacheForBench()
-    text.Tfidf.clearCacheForBench()
-    text.Bpe.clearCacheForBench()
-    forecast.Gbt.clearCacheForBench()
-    pipeline.QualityModel.clearCacheForBench()
-    sim.Pq.clearCacheForBench()
-    sim.PqTrained.clearCacheForBench()
-    sim.Ivf.clearCacheForBench()
-    sim.IndexStore.clearCacheForBench()
-    relational.SketchStore.clearCacheForBench()
-    relational.Compactor.clearCacheForBench()
-    relational.RangeExport.clearCacheForBench()
-    relational.ZOrderExport.clearCacheForBench()
-    relational.BloomJoin.clearCacheForBench()
-    relational.SnapshotStore.clearCacheForBench()
-    sim.Pca.clearCacheForBench()
-    relational.SnapshotDiff.clearCacheForBench()
-  }
+  def clearAll(): Unit = Memo.clearAll()
 }

@@ -50,9 +50,9 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
     spark
   }
 }

@@ -10,8 +10,9 @@ import graft.plans.{DotF32, HoltGridFit, MinHashSig, QuantFold}
 
 /** Session extensions: registers graft's native codegen expressions
   * into the SQL function registry, so they're callable from pure SQL
-  * on any cluster launched with
-  * `spark.sql.extensions=graft.GraftExtensions`:
+  * in any session built with
+  * `spark.sql.extensions=graft.GraftExtensions` (`Engine.session` sets
+  * it; a cluster sets it at launch):
   *
   *   - `dot_f32(x, y)` — whole-stage-codegen float-array dot product
   *   - `minhash_sig(hashes, numHashes, prime)` — all-k MinHash
@@ -21,9 +22,6 @@ import graft.plans.{DotF32, HoltGridFit, MinHashSig, QuantFold}
   *   - `collect_topk(item, k, largestFirst)` — bounded-heap per-group
   *     top-k aggregate (map-side partial; k/largestFirst literals) —
   *     the aggregate-shaped alternative to `row_number() OVER` + filter
-  *
-  * `Engine.session` also registers them imperatively, so library
-  * sessions get them without the extensions conf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -108,11 +106,4 @@ object GraftExtensions {
           case other => throw new IllegalArgumentException(
             s"collect_topk largestFirst must be a boolean literal, got: $other")
         })))
-
-  /** Imperative registration for an already-built session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
 }

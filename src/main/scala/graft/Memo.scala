@@ -1,11 +1,35 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Session-scoped memo of SMALL derived frames (model selections,
+/** graft's one registry of session-scoped state: memo frames, fitted
+  * models, retrieval indexes and persisted-store fixtures that are
+  * built once per session and reused by later requests. Every cache site
+  * calls [[once]]; no other object keeps its own map. The contract:
+  *
+  *  - **Key.** An entry is keyed by `(session, tag, keyParts)`. `tag`
+  *    is a unique `"<Object>.<def>"` literal; `keyParts` is kept as a
+  *    structural `Seq` of values (strings, numbers) and never joined
+  *    into one string, so `("a|b", "c")` and `("a", "b|c")` are
+  *    different keys. A frame
+  *    input enters as its [[planKey]], a persisted store as its dir,
+  *    followed by the build's parameters (columns, thresholds, …).
+  *  - **Locking.** Per key: concurrent first calls for one key run
+  *    `build` once and all get its value, while builds of other keys
+  *    proceed in parallel. `build` runs outside the registry map's own
+  *    update, so a build may itself call [[once]] for other keys.
+  *  - **Failures.** A build that throws caches nothing; the next call
+  *    builds again.
+  *  - **Eviction.** Entries of stopped sessions are dropped on every
+  *    lookup, so a new session is never served an old session's value.
+  *  - **Bench clearing.** [[clearAll]] empties the registry, so the
+  *    next call of every site builds cold (what `Caches.clearAll` does
+  *    between bench sweeps).
+  *
+  * [[small]] is the entry for SMALL derived frames (model selections,
   * fitted parameters, forecast horizons — O(#series) rows, never raw
   * data), eagerly localCheckpoint'ed: materialized once, lineage
   * truncated, blocks outside the SQL cache manager so
@@ -24,21 +48,40 @@ import org.apache.spark.sql.graftbridge.Bridge
   * side is ≤ `spark.sql.maxSinglePartitionBytes` (128m by default), so
   * a memo frame that outgrows "small" shuffles again instead of
   * funnelling a large join into one task.
-  *
-  * Keys are tag + the input frame's canonicalized plan TEXT —
-  * file-source relations compare by reference, so plan-object
-  * equality would never hit. Entries of stopped sessions are evicted;
-  * builds are serialized so concurrent first calls can't double-run.
   */
 object Memo {
 
-  private val cache = TrieMap.empty[(SparkSession, String), DataFrame]
+  /** One entry; its monitor serializes the entry's build. */
+  private final class Slot { var value: Option[Any] = None }
 
-  /** Bench instrumentation only: evict so a sweep re-times builds cold. */
-  private[graft] def clearCacheForBench(): Unit = cache.clear()
+  private val registry =
+    new ConcurrentHashMap[(SparkSession, String, Seq[Any]), Slot]()
 
-  /** The memo key text for a frame: canonicalized plan text PLUS the
-    * ids of any RDD-backed leaves. Canonicalization normalizes
+  /** The value built for `(spark, tag, keyParts)` in this session,
+    * building it on the first call (see the contract above). */
+  def once[V](tag: String, spark: SparkSession, keyParts: Any*)(build: => V): V = {
+    registry.keySet.removeIf(_._1.sparkContext.isStopped)
+    val slot = registry.computeIfAbsent((spark, tag, keyParts.toSeq), _ => new Slot)
+    slot.synchronized {
+      slot.value match {
+        case Some(v) => v.asInstanceOf[V]
+        case None =>
+          val v = build // a throw leaves the slot empty: nothing cached
+          slot.value = Some(v)
+          v
+      }
+    }
+  }
+
+  /** Empty the registry: every site's next call builds cold. */
+  private[graft] def clearAll(): Unit = registry.clear()
+
+  /** Entries held, built or not (for specs). */
+  private[graft] def size: Int = registry.size
+
+  /** The memo key text for a frame: canonicalized plan TEXT (file-source
+    * relations compare by reference, so plan-object equality would
+    * never hit) PLUS the ids of any RDD-backed leaves. Canonicalization normalizes
     * exprIds — which also means two DIFFERENT checkpointed frames
     * with the same schema print identically (a LogicalRDD leaf
     * carries no identity in its canonical text), so a memo built on
@@ -90,10 +133,6 @@ object Memo {
     * `key` within a session: the caller skips building (and analyzing)
     * an input plan just to compute its [[planKey]]. */
   def small(tag: String, spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    cache.synchronized {
-      cache.getOrElseUpdate((spark, tag + "|" + key), Bridge.smallCheckpoint(build))
-    }
-  }
+      build: => DataFrame): DataFrame =
+    once("Memo.small", spark, tag, key)(Bridge.smallCheckpoint(build))
 }

@@ -1,9 +1,6 @@
 package graft.dedup
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** The shared near-duplicate index over one corpus: verified MinHash
@@ -40,50 +37,36 @@ object NearDup {
       Clusters.connectedComponents(pairs).localCheckpoint(true)
   }
 
-  private val cache = TrieMap.empty[(SparkSession, String, Double), Index]
-
-  /** Bench instrumentation only: evict so a sweep re-times the build cold. */
-  private[graft] def clearCacheForBench(): Unit = cache.clear()
-
   /** The memoized index for a (doc_id, text) corpus at threshold tau. */
-  def index(docs: DataFrame, tau: Double = 0.5): Index = {
-    val key = (docs.sparkSession, graft.Memo.planKey(docs), tau)
-    cache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    cache.synchronized {
-      cache.get(key) match {
-        case Some(ix) => ix
-        case None =>
-          // each stage materializes EAGERLY before the next consumes
-          // it: the pair build reads sets through three plan branches
-          // (signatures + both verify sides) — under a lazy persist
-          // each branch would re-run the shingle chain while the
-          // cache fills
-          val sh = graft.Profiling.phase("neardup.shingleSets") {
-            Dedup.shingleSets(docs, "doc_id", "text")
-              .localCheckpoint(true) }
-          val sigs = graft.Profiling.phase("neardup.sigs") {
-            Dedup.minhashSigs(sh).localCheckpoint(true) }
-          val cand = graft.Profiling.phase("neardup.cand") {
-            Dedup.bucketPairs(Dedup.bandBuckets(sigs))
-              .localCheckpoint(true) }
-          val pairs = graft.Profiling.phase("neardup.verify") {
-            // ship only CANDIDATE docs' gram sets into the verify
-            // joins (guide §3.2 — reduce the big side before it is
-            // broadcast/shuffled): docs in no candidate pair never
-            // contribute a verify row, and the multi-KB gram arrays
-            // are the verify's dominant join bytes (r18 phase split:
-            // 2.5 s of the 4.1 s build). Result-identical — the
-            // verify's own equi-joins on doc_a/doc_b apply the same
-            // membership filter, just AFTER shipping the payload.
-            val candDocs = cand.select(col("doc_a").as("doc_id"))
-              .unionByName(cand.select(col("doc_b").as("doc_id")))
-              .distinct()
-            Dedup.jaccardVerify(cand, sh.join(candDocs, "doc_id"), tau)
-              .localCheckpoint(true) }
-          val ix = new Index(sh, sigs, pairs)
-          cache.put(key, ix)
-          ix
-      }
+  def index(docs: DataFrame, tau: Double = 0.5): Index =
+    graft.Memo.once("NearDup.index", docs.sparkSession, graft.Memo.planKey(docs), tau) {
+      // each stage materializes EAGERLY before the next consumes
+      // it: the pair build reads sets through three plan branches
+      // (signatures + both verify sides) — under a lazy persist
+      // each branch would re-run the shingle chain while the
+      // cache fills
+      val sh = graft.Profiling.phase("neardup.shingleSets") {
+        Dedup.shingleSets(docs, "doc_id", "text")
+          .localCheckpoint(true) }
+      val sigs = graft.Profiling.phase("neardup.sigs") {
+        Dedup.minhashSigs(sh).localCheckpoint(true) }
+      val cand = graft.Profiling.phase("neardup.cand") {
+        Dedup.bucketPairs(Dedup.bandBuckets(sigs))
+          .localCheckpoint(true) }
+      val pairs = graft.Profiling.phase("neardup.verify") {
+        // ship only CANDIDATE docs' gram sets into the verify
+        // joins (guide §3.2 — reduce the big side before it is
+        // broadcast/shuffled): docs in no candidate pair never
+        // contribute a verify row, and the multi-KB gram arrays
+        // are the verify's dominant join bytes (r18 phase split:
+        // 2.5 s of the 4.1 s build). Result-identical — the
+        // verify's own equi-joins on doc_a/doc_b apply the same
+        // membership filter, just AFTER shipping the payload.
+        val candDocs = cand.select(col("doc_a").as("doc_id"))
+          .unionByName(cand.select(col("doc_b").as("doc_id")))
+          .distinct()
+        Dedup.jaccardVerify(cand, sh.join(candDocs, "doc_id"), tau)
+          .localCheckpoint(true) }
+      new Index(sh, sigs, pairs)
     }
-  }
 }

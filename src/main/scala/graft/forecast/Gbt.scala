@@ -1,10 +1,8 @@
 package graft.forecast
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -56,60 +54,37 @@ object Gbt {
   // model_select and forecast_series all reuse it. The model is a
   // driver-side object — clearCache() only drops the (recomputable)
   // supervised frame's blocks, never invalidates the model.
-  // keyed on the canonicalized plan's TEXT: file-source relations
-  // compare by reference, so two reads of the same parquet would
-  // never be plan-equal
-  private val modelCache =
-    TrieMap.empty[(SparkSession, String), Option[(GBTRegressionModel, DataFrame)]]
-
-  /** Bench instrumentation only: evict so a sweep re-times the build cold. */
-  private[graft] def clearCacheForBench(): Unit = modelCache.clear()
-
   /** None when the panel has ZERO supervised train rows (too small /
     * too gappy to fit anything) — callers degrade to empty results
     * instead of surfacing an MLlib fit error.
     */
-  private def trained(obs: DataFrame): Option[(GBTRegressionModel, DataFrame)] = {
-    val key = (obs.sparkSession, graft.Memo.planKey(obs))
-    // entries for stopped sessions hold dead DataFrames/models — drop
-    // them so the map stays bounded across session lifecycles
-    modelCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    // synchronized: TrieMap.getOrElseUpdate may run a thunk twice under
-    // concurrent first calls — training twice is minutes of waste
-    modelCache.synchronized {
-      modelCache.get(key) match {
-        case Some(hit) => hit
-        case None =>
-          // eager checkpoint: blocks live outside the SQL cache
-          // (clearCache-proof, no re-mark dance), and the multi-branch
-          // consumers (holdoutRmse reads feats through its counts AND
-          // transform branches) read materialized blocks instead of
-          // racing the cache fill
-          val feats = graft.Profiling.phase("gbt.supervised") {
-            Bridge.smallCheckpoint(supervised(obs)) }
-          val train = feats.filter(col("split") === "train")
-          val fit =
-            if (train.isEmpty) None
-            else graft.Profiling.phase("gbt.fit") {
-              System.err.println("[graft] training pooled GBT forecaster")
-              // fixed key-partitioned training layout (same reasoning as
-              // the IVF quantizer): boosting runs ~2 jobs per tree over
-              // the training frame, so task count — not data volume —
-              // dominates at panel size, and a deterministic layout makes
-              // the fitted model a pure function of (data, seed) instead
-              // of the session's core count
-              Some((new GBTRegressor()
-                .setLabelCol("value").setFeaturesCol("features")
-                .setMaxIter(20).setMaxDepth(3).setStepSize(0.1).setSeed(42)
-                .fit(assembler.transform(train)
-                  .repartition(4, col("geo"), col("indicator"))
-                  .sortWithinPartitions("geo", "indicator", "year")), feats))
-            }
-          modelCache.put(key, fit)
-          fit
+  private def trained(obs: DataFrame): Option[(GBTRegressionModel, DataFrame)] =
+    graft.Memo.once("Gbt.trained", obs.sparkSession, graft.Memo.planKey(obs)) {
+      // eager checkpoint: blocks live outside the SQL cache
+      // (clearCache-proof, no re-mark dance), and the multi-branch
+      // consumers (holdoutRmse reads feats through its counts AND
+      // transform branches) read materialized blocks instead of
+      // racing the cache fill
+      val feats = graft.Profiling.phase("gbt.supervised") {
+        Bridge.smallCheckpoint(supervised(obs)) }
+      val train = feats.filter(col("split") === "train")
+      if (train.isEmpty) None
+      else graft.Profiling.phase("gbt.fit") {
+        System.err.println("[graft] training pooled GBT forecaster")
+        // fixed key-partitioned training layout (same reasoning as
+        // the IVF quantizer): boosting runs ~2 jobs per tree over
+        // the training frame, so task count — not data volume —
+        // dominates at panel size, and a deterministic layout makes
+        // the fitted model a pure function of (data, seed) instead
+        // of the session's core count
+        Some((new GBTRegressor()
+          .setLabelCol("value").setFeaturesCol("features")
+          .setMaxIter(20).setMaxDepth(3).setStepSize(0.1).setSeed(42)
+          .fit(assembler.transform(train)
+            .repartition(4, col("geo"), col("indicator"))
+            .sortWithinPartitions("geo", "indicator", "year")), feats))
       }
     }
-  }
 
   /** Force the one-time pooled training (benchmark accounting: the
     * build is timed separately so consumers report marginal cost).

@@ -1,11 +1,9 @@
 package graft.pipeline
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** L10 — learned corpus filter: a logistic-regression quality
@@ -61,15 +59,6 @@ object QualityModel {
   private val assembler = new VectorAssembler()
     .setInputCols(featureCols.toArray).setOutputCol("features")
 
-  // keyed like the GBT model cache: session + canonical plan text
-  // (file relations compare by reference, so plan-object equality
-  // would never hit across two reads of the same parquet)
-  private val modelCache =
-    TrieMap.empty[(SparkSession, String), Option[LogisticRegressionModel]]
-
-  /** Bench instrumentation only: evict so a sweep re-times the build cold. */
-  private[graft] def clearCacheForBench(): Unit = modelCache.clear()
-
   /** Fit (memoized per docs plan): label = the L2 `keep` verdict,
     * training rows = the L1 md5 train split (bucket < 800) — fit on
     * the split you have verdicts for, score everything. None when the
@@ -77,54 +66,44 @@ object QualityModel {
     * fixed key-partitioned layout makes the fitted weights a pure
     * function of the data, not the session's core count.
     */
-  private def trained(docs: DataFrame): Option[LogisticRegressionModel] = {
-    val key = (docs.sparkSession, graft.Memo.planKey(docs))
-    modelCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    modelCache.synchronized {
-      modelCache.get(key) match {
-        case Some(hit) => hit
-        case None =>
-          val labels = graft.Profiling.phase("qlr.labels(verdictsOf)") {
-            Corpus.verdictsOf(docs)
-              .select(col("doc_id"), col("keep").cast("double").as("label"))
-          }
-          // eagerly materialized ONCE: the emptiness probe and the
-          // LBFGS fit's instance build both consume `train`; unchecked
-          // that meant running the feature/label join DAG twice (the
-          // repartition(4)+sort below fixes the fit's input layout, so
-          // checkpointing cannot perturb the fitted weights)
-          val train = graft.Profiling.phase("qlr.train_materialize") {
-            features(docs)
-              .withColumn("bucket", expr(
-                """cast(conv(substring(md5(concat('smp|', cast(doc_id as string))),
-                  |  1, 8), 16, 10) as bigint) % 1000""".stripMargin))
-              .filter(col("bucket") < 800)
-              .join(labels, "doc_id")
-              .localCheckpoint(true)
-          }
-          val fit =
-            if (graft.Profiling.phase("qlr.train_isEmpty")(train.isEmpty)) None
-            else {
-              System.err.println("[graft] training quality LR filter")
-              // 50 LBFGS iterations at tol 1e-6: the fit is ~2 jobs
-              // per iteration over combinable gradient sums, so at
-              // panel size ITERATION COUNT — not data volume — is the
-              // build's wall-clock; the margin's sign is stable well
-              // before 1e-6
-              Some(graft.Profiling.phase("qlr.lbfgs_fit") {
-                new LogisticRegression()
-                .setLabelCol("label").setFeaturesCol("features")
-                .setMaxIter(50).setRegParam(0.01).setElasticNetParam(0.0)
-                .setTol(1e-6)
-                .fit(assembler.transform(train)
-                  .repartition(4, col("doc_id"))
-                  .sortWithinPartitions("doc_id"))})
-            }
-          modelCache.put(key, fit)
-          fit
+  private def trained(docs: DataFrame): Option[LogisticRegressionModel] =
+    graft.Memo.once("QualityModel.trained", docs.sparkSession, graft.Memo.planKey(docs)) {
+      val labels = graft.Profiling.phase("qlr.labels(verdictsOf)") {
+        Corpus.verdictsOf(docs)
+          .select(col("doc_id"), col("keep").cast("double").as("label"))
+      }
+      // eagerly materialized ONCE: the emptiness probe and the
+      // LBFGS fit's instance build both consume `train`; unchecked
+      // that meant running the feature/label join DAG twice (the
+      // repartition(4)+sort below fixes the fit's input layout, so
+      // checkpointing cannot perturb the fitted weights)
+      val train = graft.Profiling.phase("qlr.train_materialize") {
+        features(docs)
+          .withColumn("bucket", expr(
+            """cast(conv(substring(md5(concat('smp|', cast(doc_id as string))),
+              |  1, 8), 16, 10) as bigint) % 1000""".stripMargin))
+          .filter(col("bucket") < 800)
+          .join(labels, "doc_id")
+          .localCheckpoint(true)
+      }
+      if (graft.Profiling.phase("qlr.train_isEmpty")(train.isEmpty)) None
+      else {
+        System.err.println("[graft] training quality LR filter")
+        // 50 LBFGS iterations at tol 1e-6: the fit is ~2 jobs
+        // per iteration over combinable gradient sums, so at
+        // panel size ITERATION COUNT — not data volume — is the
+        // build's wall-clock; the margin's sign is stable well
+        // before 1e-6
+        Some(graft.Profiling.phase("qlr.lbfgs_fit") {
+          new LogisticRegression()
+          .setLabelCol("label").setFeaturesCol("features")
+          .setMaxIter(50).setRegParam(0.01).setElasticNetParam(0.0)
+          .setTol(1e-6)
+          .fit(assembler.transform(train)
+            .repartition(4, col("doc_id"))
+            .sortWithinPartitions("doc_id"))})
       }
     }
-  }
 
   /** Force the fit (Bench bills it in the builds section). */
   def prebuild(docs: DataFrame): Unit = { trained(docs); () }

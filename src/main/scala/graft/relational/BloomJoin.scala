@@ -370,26 +370,18 @@ object BloomJoin extends QueryModule {
       .filter(col("grp").isin(keep: _*) && col("user_id") === probeUser)
   }
 
-  private val lookupCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
-
-  private[graft] def clearCacheForBench(): Unit = lookupCache.clear()
-
   /** Compacted layout + bloom sidecar for the gate (bench bills the
     * sidecar build as `builds.bloom_index`; the layout itself is the
     * already-billed `compacted_events`).
     */
   def prebuildIndexed(spark: SparkSession, dir: String): (String, String) =
-    lookupCache.synchronized {
-      lookupCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      lookupCache.getOrElseUpdate((spark, dir), {
-        val layout = Compactor.prebuild(spark, dir)
-        val h = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val idx = s"${System.getProperty("java.io.tmpdir")}/graft_bloomidx_$h"
-        saveBatchBlooms(Compactor.loadCompacted(spark, layout), idx)
-        (layout, idx)
-      })
+    graft.Memo.once("BloomJoin.prebuildIndexed", spark, dir) {
+      val layout = Compactor.prebuild(spark, dir)
+      val h = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_bloomidx_$h"
+      saveBatchBlooms(Compactor.loadCompacted(spark, layout), idx)
+      (layout, idx)
     }
 
   /** K74 gate — the probe user's events served through the pruned

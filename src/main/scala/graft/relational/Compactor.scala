@@ -99,21 +99,13 @@ object Compactor extends QueryModule {
     s"${System.getProperty("java.io.tmpdir")}/graft_compacted_$h"
   }
 
-  // compact once per (session, corpus); evicted per bench sweep so
-  // the rewrite is billed as a build (`builds.compacted_events`)
-  private val savedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private[graft] def clearCacheForBench(): Unit = savedCache.clear()
-
+  // compact once per (session, corpus): the bench bills the rewrite
+  // as a build (`builds.compacted_events`)
   def prebuild(spark: SparkSession, dir: String): String =
-    savedCache.synchronized {
-      savedCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      savedCache.getOrElseUpdate((spark, dir), {
-        val p = compactedDirFor(dir)
-        execute(Tables.events(spark, dir), p)
-        p
-      })
+    graft.Memo.once("Compactor.prebuild", spark, dir) {
+      val p = compactedDirFor(dir)
+      execute(Tables.events(spark, dir), p)
+      p
     }
 
   /** K62 — the gated round-trip: per rewrite batch of the COMPACTED

@@ -71,21 +71,13 @@ object RangeExport extends QueryModule {
     s"${System.getProperty("java.io.tmpdir")}/graft_range_export_$h"
   }
 
-  // export once per (session, corpus); evicted per bench sweep so the
-  // write is billed as a build (`builds.range_export`)
-  private val savedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private[graft] def clearCacheForBench(): Unit = savedCache.clear()
-
+  // export once per (session, corpus): the bench bills the write as a
+  // build (`builds.range_export`)
   def prebuild(spark: SparkSession, dir: String): String =
-    savedCache.synchronized {
-      savedCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      savedCache.getOrElseUpdate((spark, dir), {
-        val p = exportDirFor(dir)
-        execute(spark, dir, p)
-        p
-      })
+    graft.Memo.once("RangeExport.prebuild", spark, dir) {
+      val p = exportDirFor(dir)
+      execute(spark, dir, p)
+      p
     }
 
   /** K63 — the gated round-trip: per bucket of the EXPORTED layout

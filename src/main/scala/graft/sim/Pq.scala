@@ -99,9 +99,6 @@ object Pq extends QueryModule {
   // one encode build serves both queries (the Ivf givenListed
   // discipline); the codes frame is narrow (vec_id + M ints) and
   // checkpointed so clearCache between queries doesn't rebuild
-  private val codesCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** Per-vector PQ codes, WIDE (vec_id, code_0..code_{M-1}): argmin
     * codeword per subspace, ties to the smaller codeword id. One
     * broadcast join + one combinable aggregate. The former long
@@ -111,26 +108,21 @@ object Pq extends QueryModule {
     * min_bys over the same (dsq, cid) order yield identical codes
     * (the residualCodes r18/r19 fusion applied to the flat encode).
     */
-  def codes(emb: DataFrame): DataFrame = {
-    val key = (emb.sparkSession, graft.Memo.planKey(emb))
-    codesCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    codesCache.synchronized {
-      codesCache.getOrElseUpdate(key, {
-        val e = graft.Par.spread(emb.select("vec_id", "embedding"))
-        e.crossJoin(broadcast(codebook(emb)))
-          .select(col("vec_id") +: col("cid") +:
-            (0 until NumSub).map(m =>
-              subDistSq("embedding", "ce", m).as(s"d$m")): _*)
-          .groupBy("vec_id")
-          .agg(
-            min_by(col("cid"), struct(col("d0"), col("cid"))).as("code_0"),
-            (1 until NumSub).map(m =>
-              min_by(col("cid"), struct(col(s"d$m"), col("cid")))
-                .as(s"code_$m")): _*)
-          .localCheckpoint(true)
-      })
+  def codes(emb: DataFrame): DataFrame =
+    graft.Memo.once("Pq.codes", emb.sparkSession, graft.Memo.planKey(emb)) {
+      val e = graft.Par.spread(emb.select("vec_id", "embedding"))
+      e.crossJoin(broadcast(codebook(emb)))
+        .select(col("vec_id") +: col("cid") +:
+          (0 until NumSub).map(m =>
+            subDistSq("embedding", "ce", m).as(s"d$m")): _*)
+        .groupBy("vec_id")
+        .agg(
+          min_by(col("cid"), struct(col("d0"), col("cid"))).as("code_0"),
+          (1 until NumSub).map(m =>
+            min_by(col("cid"), struct(col(s"d$m"), col("cid")))
+              .as(s"code_$m")): _*)
+        .localCheckpoint(true)
     }
-  }
 
   /** Force the encode build (Bench bills it separately). */
   def prebuild(spark: SparkSession, dir: String): Unit = {
@@ -282,48 +274,35 @@ object Pq extends QueryModule {
     */
   // one residual-encode build serves search + any re-probe (the codes
   // memo discipline); narrow rows, checkpointed past clearCache
-  private val residCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Bench instrumentation only: evict so a sweep re-times the builds cold. */
-  private[graft] def clearCacheForBench(): Unit = {
-    codesCache.clear(); residCache.clear()
-  }
-
-  def residualCodes(emb: DataFrame): DataFrame = {
-    val key = (emb.sparkSession, graft.Memo.planKey(emb))
-    residCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    residCache.synchronized {
-      residCache.getOrElseUpdate(key, {
-        val (cents, assigned) = Ivf.givenListed(emb)
-        val resid = assigned
-          .join(broadcast(cents.select(col("cid").as("list_id"), col("ce"))),
-            "list_id")
-          .withColumn("resid", expr(
-            "zip_with(embedding, ce, (x, c) -> cast(x as double) - cast(c as double))"))
-          .select("vec_id", "list_id", "resid")
-        // per-subspace argmins fused into ONE aggregate over the
-        // (vec, candidate-codeword) rows, kept WIDE (vec_id, list_id,
-        // code_0..3): the former stack-first form exploded the
-        // distance rows ×NumSub before aggregating and shuffled 4
-        // rows per vector, and every consumer (ivfPqScores' ADC,
-        // saveIvfPq's partitioned write) re-pivoted wide anyway.
-        // min_by per m over the same (dsq, cid) order — codes
-        // identical.
-        resid.crossJoin(broadcast(codebook(emb)))
-          .select(col("vec_id") :: col("list_id") :: col("cid") ::
-            (0 until NumSub).map(m =>
-              subDistSqD("resid", "ce", m).as(s"d$m")).toList: _*)
-          .groupBy("vec_id", "list_id")
-          .agg(
-            min_by(col("cid"), struct(col("d0"), col("cid"))).as("code_0"),
-            (1 until NumSub).map(m =>
-              min_by(col("cid"), struct(col(s"d$m"), col("cid")))
-                .as(s"code_$m")): _*)
-          .localCheckpoint(true)
-      })
+  def residualCodes(emb: DataFrame): DataFrame =
+    graft.Memo.once("Pq.residualCodes", emb.sparkSession, graft.Memo.planKey(emb)) {
+      val (cents, assigned) = Ivf.givenListed(emb)
+      val resid = assigned
+        .join(broadcast(cents.select(col("cid").as("list_id"), col("ce"))),
+          "list_id")
+        .withColumn("resid", expr(
+          "zip_with(embedding, ce, (x, c) -> cast(x as double) - cast(c as double))"))
+        .select("vec_id", "list_id", "resid")
+      // per-subspace argmins fused into ONE aggregate over the
+      // (vec, candidate-codeword) rows, kept WIDE (vec_id, list_id,
+      // code_0..3): the former stack-first form exploded the
+      // distance rows ×NumSub before aggregating and shuffled 4
+      // rows per vector, and every consumer (ivfPqScores' ADC,
+      // saveIvfPq's partitioned write) re-pivoted wide anyway.
+      // min_by per m over the same (dsq, cid) order — codes
+      // identical.
+      resid.crossJoin(broadcast(codebook(emb)))
+        .select(col("vec_id") :: col("list_id") :: col("cid") ::
+          (0 until NumSub).map(m =>
+            subDistSqD("resid", "ce", m).as(s"d$m")).toList: _*)
+        .groupBy("vec_id", "list_id")
+        .agg(
+          min_by(col("cid"), struct(col("d0"), col("cid"))).as("code_0"),
+          (1 until NumSub).map(m =>
+            min_by(col("cid"), struct(col(s"d$m"), col("cid")))
+              .as(s"code_$m")): _*)
+        .localCheckpoint(true)
     }
-  }
 
   /** Force the residual-encode build (Bench bills it separately). */
   def prebuildResidual(spark: SparkSession, dir: String): Unit = {

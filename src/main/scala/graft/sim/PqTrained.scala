@@ -89,12 +89,6 @@ object PqTrained extends graft.QueryModule {
       codebook: Array[Array[Array[Double]]],
       codes: DataFrame)
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[Index]]
-
-  /** Bench instrumentation only: evict so a sweep re-times the build cold. */
-  private[graft] def clearCacheForBench(): Unit = cache.clear()
-
   /** Quantized squared L2 between a double-array column and a
     * double-array column (plain double math: the trained path is
     * rows-only by design — approximate scores need no cross-engine
@@ -147,13 +141,9 @@ object PqTrained extends graft.QueryModule {
       out
     })
 
-  private[graft] def index(emb: DataFrame): Option[Index] = {
-    val key = (emb.sparkSession, graft.Memo.planKey(emb))
-    cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    cache.synchronized {
-      cache.getOrElseUpdate(key, build(emb))
-    }
-  }
+  private[graft] def index(emb: DataFrame): Option[Index] =
+    graft.Memo.once("PqTrained.index", emb.sparkSession,
+      graft.Memo.planKey(emb))(build(emb))
 
   private def build(emb: DataFrame): Option[Index] =
     graft.Profiling.phase("trained.coarse(Ivf.index)") {

@@ -36,24 +36,11 @@ object Bpe {
   // One BPE training per (session, corpus plan, text column):
   // bpe_merges and bpe_fertility both consume the identical learned
   // state — unshared, each re-ran the full multi-round merge loop
-  // (the NearDup/Tfidf memo discipline; evicted per bench sweep so
-  // the training is still timed cold each sweep).
-  private val trainedCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String),
-      (DataFrame, DataFrame)]
-
-  /** Bench instrumentation only: evict so a sweep re-times the build cold. */
-  private[graft] def clearCacheForBench(): Unit = trainedCache.clear()
-
+  // (the NearDup/Tfidf memo discipline).
   private def trained(docs: DataFrame, textCol: String)
-      : (DataFrame, DataFrame) = {
-    val key = (docs.sparkSession, graft.Memo.planKey(docs), textCol)
-    trainedCache.filterInPlace { case ((s, _, _), _) =>
-      !s.sparkContext.isStopped }
-    trainedCache.synchronized {
-      trainedCache.getOrElseUpdate(key, trainedBuild(docs, textCol))
-    }
-  }
+      : (DataFrame, DataFrame) =
+    graft.Memo.once("Bpe.trained", docs.sparkSession, graft.Memo.planKey(docs),
+      textCol)(trainedBuild(docs, textCol))
 
   /** The training loop: learns [[Merges]] merges AND carries the
     * word-frequency table through them — (merge table, final word

@@ -1,7 +1,5 @@
 package graft.text
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -79,14 +77,6 @@ object Tfidf {
     weights.groupBy("id")
       .agg(expr("cast(sum(cast(w * w as decimal(24,8))) as double)").as("nsq"))
 
-  // plan keyed by its canonicalized TEXT — file-source relations
-  // compare by reference, so plan-object equality would always miss
-  private val indexCache =
-    TrieMap.empty[(SparkSession, String, String, String), TfidfIndex]
-
-  /** Bench instrumentation only: evict so a sweep re-times the build cold. */
-  private[graft] def clearCacheForBench(): Unit = indexCache.clear()
-
   /** The memoized corpus index, lazily localCheckpoint'ed: unlike
     * `persist()`, the materialized blocks live outside the SQL cache
     * manager, so `catalog.clearCache()` between queries doesn't force
@@ -95,38 +85,28 @@ object Tfidf {
     * cluster the blocks are executor-local; an executor loss would
     * cost a rebuild of that partition's lineage-truncated blocks, the
     * standard localCheckpoint trade — a long-lived serving index
-    * would use a reliable checkpoint dir instead.) Entries of stopped
-    * sessions are evicted; the build is serialized so concurrent
-    * first calls can't double-build.
+    * would use a reliable checkpoint dir instead.)
     */
-  def index(docs: DataFrame, idCol: String, textCol: String): TfidfIndex = {
-    val key = (docs.sparkSession, graft.Memo.planKey(docs), idCol, textCol)
-    indexCache.filterInPlace { case ((s, _, _, _), _) => !s.sparkContext.isStopped }
-    indexCache.synchronized {
-      indexCache.get(key) match {
-        case Some(ix) => ix
-        case None =>
-          // EAGER checkpoints, built in dependency order: a lazy
-          // checkpoint materializes on the consumer's first action,
-          // and that action's plan reads `p` through several branches
-          // (weights, dl, idf) — each branch recomputes the postings
-          // chain while the blocks are still filling (the same
-          // per-branch-scan trap as the CC edge input). Eager = one
-          // build each, every downstream branch reads blocks.
-          val p = graft.Profiling.phase("tfidf.postings") {
-            postings(docs, idCol, textCol).localCheckpoint(true) }
-          val i = graft.Profiling.phase("tfidf.idf") {
-            idf(p, docs).localCheckpoint(true) }
-          val w = graft.Profiling.phase("tfidf.weights") {
-            weights(p, i).localCheckpoint(true) }
-          val ix = TfidfIndex(docs, idCol, textCol, p, i, w,
-            graft.Profiling.phase("tfidf.norms") {
-              norms(w).localCheckpoint(true) })
-          indexCache.put(key, ix)
-          ix
-      }
+  def index(docs: DataFrame, idCol: String, textCol: String): TfidfIndex =
+    graft.Memo.once("Tfidf.index", docs.sparkSession, graft.Memo.planKey(docs),
+        idCol, textCol) {
+      // EAGER checkpoints, built in dependency order: a lazy
+      // checkpoint materializes on the consumer's first action,
+      // and that action's plan reads `p` through several branches
+      // (weights, dl, idf) — each branch recomputes the postings
+      // chain while the blocks are still filling (the same
+      // per-branch-scan trap as the CC edge input). Eager = one
+      // build each, every downstream branch reads blocks.
+      val p = graft.Profiling.phase("tfidf.postings") {
+        postings(docs, idCol, textCol).localCheckpoint(true) }
+      val i = graft.Profiling.phase("tfidf.idf") {
+        idf(p, docs).localCheckpoint(true) }
+      val w = graft.Profiling.phase("tfidf.weights") {
+        weights(p, i).localCheckpoint(true) }
+      TfidfIndex(docs, idCol, textCol, p, i, w,
+        graft.Profiling.phase("tfidf.norms") {
+          norms(w).localCheckpoint(true) })
     }
-  }
 
   /** Cosine top-k of `queryText` against the corpus (memoized
     * index under the hood).

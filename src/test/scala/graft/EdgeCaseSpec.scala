@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 
 /** Degenerate-input robustness: empty strings, single tokens, and
   * texts shorter than k-gram/shingle windows must flow through the
@@ -127,6 +128,104 @@ class EdgeCaseSpec extends SparkSpec {
     val firstB = memoOf(dirB) // different corpus → MISS (new build)
     assert(builds == 2)
     assert(firstA.head.getLong(0) == 1L && firstB.head.getLong(0) == 1L)
+  }
+
+  // --- memo key properties: generated pairs of inputs that must NOT
+  // share a registry entry, each checked by counting builds
+
+  private val keySeed = org.scalacheck.rng.Seed(7L)
+
+  /** Deterministic sample of size n from a generator. */
+  private def sample[A](g: Gen[A], n: Int): Seq[A] =
+    Iterator.iterate(keySeed)(_.next).slice(1, n + 1)
+      .map(s => g.pureApply(Gen.Parameters.default, s)).toSeq
+
+  private val rowsGen: Gen[List[(Long, String)]] = Gen.choose(1, 4).flatMap(n =>
+    Gen.listOfN(n, Gen.zip(Gen.choose(0L, 99L), Gen.listOfN(3, Gen.alphaLowerChar)
+      .map(_.mkString))))
+
+  private val distinctRowPairs: Gen[(List[(Long, String)], List[(Long, String)])] =
+    Gen.zip(rowsGen, rowsGen).suchThat { case (a, b) => a != b }
+
+  /** Builds run when keying `a`, then `b`, then `a` again (freshly
+    * derived) under one fresh tag: 2 when the keys differ and a
+    * repeat hits. */
+  private def builds(tag: String)(a: () => Seq[Any], b: () => Seq[Any]): Int = {
+    var n = 0
+    Memo.once(tag, spark, a(): _*) { n += 1 }
+    Memo.once(tag, spark, b(): _*) { n += 1 }
+    Memo.once(tag, spark, a(): _*) { n += 1 }
+    n
+  }
+
+  test("memo key property: same-schema local frames with different rows") {
+    import spark.implicits._
+    sample(distinctRowPairs, 20).zipWithIndex.foreach { case ((ra, rb), i) =>
+      assert(builds(s"EdgeCaseSpec.local$i")(
+        () => Seq(Memo.planKey(ra.toDF("id", "v"))),
+        () => Seq(Memo.planKey(rb.toDF("id", "v")))) == 2, s"$ra vs $rb")
+    }
+  }
+
+  test("memo key property: same-schema parquet dirs; a re-read still hits") {
+    import spark.implicits._
+    sample(Gen.zip(rowsGen, rowsGen), 3).zipWithIndex.foreach { case ((ra, rb), i) =>
+      val (dirA, dirB) = (s"/tmp/graft_memo_prop_${i}_a", s"/tmp/graft_memo_prop_${i}_b")
+      ra.toDF("id", "v").write.mode("overwrite").parquet(dirA)
+      rb.toDF("id", "v").write.mode("overwrite").parquet(dirB)
+      assert(builds(s"EdgeCaseSpec.parquet$i")(
+        () => Seq(Memo.planKey(spark.read.parquet(dirA))),
+        () => Seq(Memo.planKey(spark.read.parquet(dirB)))) == 2, s"$dirA vs $dirB")
+    }
+  }
+
+  test("memo key property: two checkpoints of same-schema frames") {
+    import spark.implicits._
+    // the rows may even be equal: each checkpoint is its own input
+    sample(Gen.zip(rowsGen, rowsGen), 5).zipWithIndex.foreach { case ((ra, rb), i) =>
+      val a = ra.toDF("id", "v").localCheckpoint(true)
+      val b = rb.toDF("id", "v").localCheckpoint(true)
+      assert(builds(s"EdgeCaseSpec.checkpoint$i")(
+        () => Seq(Memo.planKey(a)), () => Seq(Memo.planKey(b))) == 2)
+    }
+  }
+
+  test("memo key property: the same plan with different key parts") {
+    import spark.implicits._
+    val key = Memo.planKey(Seq((1L, "a b c")).toDF("doc_id", "text"))
+    val taus = Gen.zip(Gen.choose(1, 99), Gen.choose(1, 99))
+      .suchThat { case (x, y) => x != y }.map { case (x, y) => (x / 100.0, y / 100.0) }
+    (sample(taus, 10) :+ ((0.5, 0.6))).zipWithIndex.foreach { case ((ta, tb), i) =>
+      assert(builds(s"EdgeCaseSpec.tau$i")(
+        () => Seq(key, ta), () => Seq(key, tb)) == 2, s"tau $ta vs $tb")
+    }
+    assert(builds("EdgeCaseSpec.textCol")(
+      () => Seq(key, "doc_id", "text"), () => Seq(key, "doc_id", "title")) == 2)
+    // …and through the real sites: a second build is a new value
+    val docs = tiny.withColumn("title", upper(col("text")))
+    assert(graft.dedup.NearDup.index(docs, 0.5) ne graft.dedup.NearDup.index(docs, 0.6))
+    assert(graft.dedup.NearDup.index(docs, 0.5) eq graft.dedup.NearDup.index(docs, 0.5))
+    assert(graft.text.Tfidf.index(docs, "doc_id", "text") ne
+      graft.text.Tfidf.index(docs, "doc_id", "title"))
+    assert(graft.text.Tfidf.index(docs, "doc_id", "text") eq
+      graft.text.Tfidf.index(docs, "doc_id", "text"))
+  }
+
+  test("memo key property: key parts are never joined into one string") {
+    // ("a|b", "c") and ("a", "b|c") join to the same "a|b|c"
+    val tokens = Gen.choose(3, 5).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, Gen.alphaLowerChar)
+        .map(_.mkString))))
+    val splits = tokens.flatMap(ts => Gen.zip(Gen.choose(1, ts.size - 1),
+      Gen.choose(1, ts.size - 1)).suchThat { case (i, j) => i != j }.map(ij => (ts, ij)))
+    sample(splits, 20).zipWithIndex.foreach { case ((ts, (i, j)), n) =>
+      def parts(at: Int) = Seq(ts.take(at).mkString("|"), ts.drop(at).mkString("|"))
+      assert(parts(i).mkString("|") == parts(j).mkString("|"))
+      assert(builds(s"EdgeCaseSpec.joined$n")(() => parts(i), () => parts(j)) == 2,
+        s"${parts(i)} vs ${parts(j)}")
+    }
+    assert(builds("EdgeCaseSpec.joined")(
+      () => Seq("a|b", "c"), () => Seq("a", "b|c")) == 2)
   }
 
   test("substring_dedup tolerates sub-window docs and empty corpora") {

@@ -148,7 +148,6 @@ class QuantFoldSpec extends SparkSpec {
     import spark.implicits._
     val df = mkRows(13L).toDF("x", "y")
       .withColumn("xd", expr("transform(x, v -> cast(v as double))"))
-    graft.GraftExtensions.register(spark)
     val diff = df.select(
         expr(hofDot("xd", "y")).as("a"),
         expr("qdot(xd, y)").as("b"))
