@@ -316,8 +316,8 @@ object BloomJoin extends QueryModule {
     * one (m=[[BixBits]], k=2) bloom over `user_id` per batch
     * directory — the parquet-footer-bloom / Delta bloom-index
     * artifact as an explicit table. ONE map-side-combined aggregate
-    * over the layout; O(batches × [[BixWords]]) output; staged-swap
-    * commit.
+    * over the layout; O(batches × [[BixWords]]) output; committed
+    * by [[graft.FsOps.swapDir]].
     */
   def saveBatchBlooms(layout: DataFrame, indexPath: String): Unit = {
     val spark = layout.sparkSession
@@ -328,15 +328,7 @@ object BloomJoin extends QueryModule {
       .groupBy(col("grp"), expr("pos div 64").as("w"))
       .agg(expr("bit_or(shiftleft(1L, cast(pos % 64 as int)))").as("bits"))
       .write.mode("overwrite").parquet(staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staged), spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(indexPath)
-    val old = new org.apache.hadoop.fs.Path(s"${indexPath}_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live)) fs.rename(live, old)
-    fs.rename(new org.apache.hadoop.fs.Path(staged), live)
-    fs.delete(old, true)
-    ()
+    graft.FsOps.swapDir(graft.FsOps.fs(spark, staged), staged, indexPath)
   }
 
   /** K74 — the POINT LOOKUP that ACTS on the bloom sidecar: for a

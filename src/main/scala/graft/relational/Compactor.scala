@@ -25,11 +25,8 @@ import graft.sources.Tables
   * reader's day filter still prunes whole directories, now at batch
   * granularity with the day column itself as the in-file zone map.
   *
-  * Commit is the [[graft.sim.IndexStore.compactGiven]] staging
-  * discipline: the full compacted layout lands in `<dst>_staging`,
-  * then (live → _old, staging → live, drop _old) — a crash at any
-  * prefix leaves the destination either the complete old layout or
-  * the complete new one, never a mix. Scale shape: ONE shuffle of the
+  * Commit: the full compacted layout lands in `<dst>_staging` and
+  * [[graft.FsOps.swapDir]] swaps it in. Scale shape: ONE shuffle of the
   * data (hash on grp), a metadata-sized window for the cuts, and a
   * broadcast day→grp map; nothing gathers on the driver.
   */
@@ -49,15 +46,7 @@ object Compactor extends QueryModule {
     e.join(broadcast(plan), "day")
       .repartition(col("grp"))
       .write.mode("overwrite").partitionBy("grp").parquet(staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staged), spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(dstPath)
-    val old = new org.apache.hadoop.fs.Path(s"${dstPath}_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live)) fs.rename(live, old)
-    fs.rename(new org.apache.hadoop.fs.Path(staged), live)
-    fs.delete(old, true)
-    ()
+    graft.FsOps.swapDir(graft.FsOps.fs(spark, staged), staged, dstPath)
   }
 
   /** K54's write-path executor — the nightly LOAD that obeys the

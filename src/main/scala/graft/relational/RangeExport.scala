@@ -23,7 +23,7 @@ import graft.sources.Tables
   * parquet zone maps prune maximally (K56 over this layout reports
   * n_chains == n_buckets, the clustered extreme; spec-pinned).
   *
-  * Commit is the [[Compactor.execute]] staged-swap discipline. Scale
+  * Commit is [[graft.FsOps.swapDir]]. Scale
   * shape: ONE bounded sample aggregate + ONE data shuffle on bucket;
   * the only driver materialization is the [[Sketches.RppS]]-value
   * sample.
@@ -42,15 +42,7 @@ object RangeExport extends QueryModule {
     bucketed
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staged), spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(dstPath)
-    val old = new org.apache.hadoop.fs.Path(s"${dstPath}_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live)) fs.rename(live, old)
-    fs.rename(new org.apache.hadoop.fs.Path(staged), live)
-    fs.delete(old, true)
-    ()
+    graft.FsOps.swapDir(graft.FsOps.fs(spark, staged), staged, dstPath)
   }
 
   /** The exported layout with an explicit schema (the partition-dir

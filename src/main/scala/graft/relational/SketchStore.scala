@@ -507,8 +507,7 @@ object SketchStore extends graft.QueryModule {
       val newDf = newDf0.localCheckpoint()
       val days = newDf.select("day").distinct().collect().map(_.getDate(0))
       if (days.isEmpty) return
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+      val fs = graft.FsOps.fs(spark, path)
       val existing =
         if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$sub")))
           load.filter(col("day").isin(days: _*))
@@ -582,8 +581,7 @@ object SketchStore extends graft.QueryModule {
     * (data loss, strictly worse than the double-count it replaced).
     */
   def upsertBatchOnce(batch: DataFrame, path: String, batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), batch.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = graft.FsOps.fs(batch.sparkSession, path)
     val base =
       new org.apache.hadoop.fs.Path(s"$path/_applied_batches/$batchId")
     val done = new org.apache.hadoop.fs.Path(base, "_done")

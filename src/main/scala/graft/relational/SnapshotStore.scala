@@ -17,14 +17,14 @@ import graft.sources.Tables
   *
   *  - ATOMIC VISIBILITY — versions live under `v=<n>/`; the only
   *    mutable state is the tiny `_current` pointer file, committed by
-  *    write-temp + OVERWRITE-rename (`FileContext.rename(OVERWRITE)`,
-  *    atomic on a POSIX/HDFS namespace — a plain FileSystem.rename
-  *    cannot overwrite, and delete-then-rename would open a window in
-  *    which a crash or concurrent reader sees NO pointer and the
-  *    whole committed store reads as uninitialized). A crash at ANY
-  *    point of an apply leaves the pointer readable at its old value:
-  *    before the rename readers see the old version, after it the
-  *    new one; a dangling `v=<n+1>/` directory that no reader can
+  *    write-temp + OVERWRITE-rename (`FileContext` with
+  *    `Options.Rename.OVERWRITE`, atomic on a POSIX/HDFS namespace — a
+  *    plain FileSystem rename cannot overwrite, and delete-then-rename
+  *    would open a window in which a crash or concurrent reader
+  *    sees NO pointer and the whole committed store reads as
+  *    uninitialized). A crash at ANY point of an apply leaves the
+  *    pointer readable at its old value: before the rename readers
+  *    see the old version, after it the new one; a dangling `v=<n+1>/` directory that no reader can
   *    reach is overwritten by the next apply;
   *  - CHURN-SIZED WRITES stay the [[SnapshotDiff.applyDiff]] plan
   *    (anti join + upsert union); only the NEW version's rows are
@@ -49,16 +49,12 @@ import graft.sources.Tables
   */
 object SnapshotStore extends QueryModule {
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-
   private def pointer(dir: String) =
     new org.apache.hadoop.fs.Path(s"$dir/_current")
 
   private def commitPointer(spark: SparkSession, dir: String,
       v: Long): Unit = {
-    val fs = fsOf(spark, dir)
+    val fs = graft.FsOps.fs(spark, dir)
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/_current_tmp")
     val out = fs.create(tmp, true)
     out.write(v.toString.getBytes("UTF-8"))
@@ -79,7 +75,7 @@ object SnapshotStore extends QueryModule {
     */
   private def claimVersion(spark: SparkSession, dir: String,
       v: Long): Unit = {
-    val fs = fsOf(spark, dir)
+    val fs = graft.FsOps.fs(spark, dir)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_claims"))
     val claim = new org.apache.hadoop.fs.Path(s"$dir/_claims/v$v")
     // only the exists-collision maps to "lost the race" — any other
@@ -101,7 +97,7 @@ object SnapshotStore extends QueryModule {
 
   /** The visible version, 0 if the store is uninitialized. */
   def currentVersion(spark: SparkSession, dir: String): Long = {
-    val fs = fsOf(spark, dir)
+    val fs = graft.FsOps.fs(spark, dir)
     if (!fs.exists(pointer(dir))) 0L
     else {
       val in = fs.open(pointer(dir))
@@ -149,25 +145,21 @@ object SnapshotStore extends QueryModule {
     next
   }
 
-  /** [[applyDiff]] guarded by a batch-id marker — the idempotent
-    * entry point for an at-least-once stream of change feeds (the
-    * streaming face's foreachBatch sink): a re-delivered batch id is
-    * a no-op. Marker lands AFTER the pointer commit; the residual
-    * window (crash between pointer and marker → one replayed apply)
-    * re-applies the SAME diff to the new version, which for a replay
-    * of delete/update images is harmless but duplicates insert
+  /** [[applyDiff]] guarded by [[graft.FsOps.onceByMarker]] — the
+    * idempotent entry point for an at-least-once stream of change
+    * feeds (the streaming face's foreachBatch sink): a re-delivered
+    * batch id is a no-op. Marker lands AFTER the pointer commit; the
+    * residual window (crash between pointer and marker → one replayed
+    * apply) re-applies the SAME diff to the new version, which for a
+    * replay of delete/update images is harmless but duplicates insert
     * images — the same narrowest-window trade upsertBatchOnce
     * documents, closable only by a transactional manifest.
     */
   def applyDiffOnce(spark: SparkSession, dir: String,
-      diffWide: DataFrame, batchId: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    val m = new org.apache.hadoop.fs.Path(s"$dir/_applied/$batchId")
-    if (fs.exists(m)) return
-    applyDiff(spark, dir, diffWide)
-    fs.mkdirs(m)
-    ()
-  }
+      diffWide: DataFrame, batchId: Long): Unit =
+    graft.FsOps.onceByMarker(graft.FsOps.fs(spark, dir), dir, batchId) {
+      applyDiff(spark, dir, diffWide)
+    }
 
   /** K75 — TABLE_CHANGES over a version RANGE (Delta's
     * `table_changes(from, to)`, Iceberg's incremental changelog): the
@@ -203,7 +195,7 @@ object SnapshotStore extends QueryModule {
     */
   def vacuum(spark: SparkSession, dir: String, retain: Long = 1L): Unit = {
     val cur = currentVersion(spark, dir)
-    val fs = fsOf(spark, dir)
+    val fs = graft.FsOps.fs(spark, dir)
     val keepFrom = cur - retain
     val status = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
     for (st <- status; name = st.getPath.getName
@@ -228,12 +220,12 @@ object SnapshotStore extends QueryModule {
     * DELETE with VACUUM for the same reason). Per retained version:
     * one churn-agnostic LEFT ANTI join against the key set (broadcast
     * when the request batch is small, which it is by nature), written
-    * to a staging dir and committed by the per-directory swap
-    * discipline (live→old, staging→live, drop old) — a crash prefix
-    * leaves every version either wholly old or wholly new, and the
-    * recovery guard at the top of each step rolls a half-swapped
-    * version back before rewriting it. The `_current` pointer is
-    * NEVER touched: purge changes content, not visibility.
+    * to a staging dir and committed by [[graft.FsOps.swapDir]] — a
+    * crash prefix leaves every version either wholly old or wholly
+    * new, and the recovery guard at the top rolls a half-swapped
+    * version (its `v=<n>_old`) back before rewriting it. The
+    * `_current` pointer is NEVER touched: purge changes content, not
+    * visibility.
     *
     * NOT idempotent-by-marker like [[applyDiffOnce]] — it is
     * idempotent by ALGEBRA (anti join of an already-purged version
@@ -241,34 +233,25 @@ object SnapshotStore extends QueryModule {
     * (spec-pinned).
     */
   def purgeKeys(spark: SparkSession, dir: String, keys: DataFrame): Unit = {
-    val fs = fsOf(spark, dir)
+    val fs = graft.FsOps.fs(spark, dir)
     // crash recovery FIRST — a half-swapped version is not in the
     // live listing (its v=<n> dir was renamed away before the crash):
-    // roll every orphan _purge_old back, then list versions fresh
+    // roll every orphan v=<n>_old back, then list versions fresh
     val entries = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath.getName)
-    for (name <- entries if name.endsWith("_purge_old")) {
-      val live = new org.apache.hadoop.fs.Path(
-        s"$dir/${name.stripSuffix("_purge_old")}")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      if (!fs.exists(live)) fs.rename(old, live)
-      else fs.delete(old, true)
-    }
+    for (name <- entries if name.startsWith("v=") && name.endsWith("_old"))
+      graft.FsOps.recoverSwap(fs, s"$dir/${name.stripSuffix("_old")}")
     val versions = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath.getName)
       .filter(_.startsWith("v=")).map(_.drop(2))
       .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).sorted
     for (v <- versions) {
-      val live = new org.apache.hadoop.fs.Path(s"$dir/v=$v")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/v=${v}_purge_old")
       val staged = s"$dir/v=${v}_purge_staging"
       readAt(spark, dir, v)
         .join(broadcast(keys.select("o_orderkey")),
           Seq("o_orderkey"), "left_anti")
         .write.mode("overwrite").parquet(staged)
-      fs.rename(live, old)
-      fs.rename(new org.apache.hadoop.fs.Path(staged), live)
-      fs.delete(old, true)
+      graft.FsOps.swapDir(fs, staged, s"$dir/v=$v")
     }
   }
 
@@ -289,7 +272,7 @@ object SnapshotStore extends QueryModule {
       val p = storeDirFor(dir)
       // a bench re-run must rebuild the chain from scratch: drop
       // any prior chain so v numbers stay deterministic
-      val fs = fsOf(spark, p)
+      val fs = graft.FsOps.fs(spark, p)
       fs.delete(new org.apache.hadoop.fs.Path(p), true)
       val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
       init(old, p)
@@ -328,7 +311,7 @@ object SnapshotStore extends QueryModule {
   def prebuildPurged(spark: SparkSession, dir: String): String =
     graft.Memo.once("SnapshotStore.prebuildPurged", spark, dir) {
       val p = storeDirFor(dir) + "_prg"
-      val fs = fsOf(spark, p)
+      val fs = graft.FsOps.fs(spark, p)
       fs.delete(new org.apache.hadoop.fs.Path(p), true)
       val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
       init(old, p)
@@ -347,7 +330,7 @@ object SnapshotStore extends QueryModule {
   def prebuildRange(spark: SparkSession, dir: String): String =
     graft.Memo.once("SnapshotStore.prebuildRange", spark, dir) {
       val p = storeDirFor(dir) + "_rng"
-      val fs = fsOf(spark, p)
+      val fs = graft.FsOps.fs(spark, p)
       fs.delete(new org.apache.hadoop.fs.Path(p), true)
       val (old, diff) = SnapshotDiff.carvedDiffWideMat(spark, dir)
       init(old, p)

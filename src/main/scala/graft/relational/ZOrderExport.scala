@@ -21,7 +21,7 @@ import graft.sources.Tables
   * Scale shape: the z-key projection is codegen'd integer arithmetic
   * off two broadcast min/max rows ([[SqlApi.zorderFrame]], shared
   * code); ONE bucket-hashed shuffle lands one file per bucket; commit
-  * is the [[Compactor.execute]] staged-swap discipline. The gated
+  * is [[graft.FsOps.swapDir]]. The gated
   * read-back's oracle replays bounds → cells → interleave → bucket
   * from raw orders, so the hash proves the landed layout is exactly
   * the planned one.
@@ -44,15 +44,7 @@ object ZOrderExport extends QueryModule {
     keyed
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staged), spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(dstPath)
-    val old = new org.apache.hadoop.fs.Path(s"${dstPath}_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live)) fs.rename(live, old)
-    fs.rename(new org.apache.hadoop.fs.Path(staged), live)
-    fs.delete(old, true)
-    ()
+    graft.FsOps.swapDir(graft.FsOps.fs(spark, staged), staged, dstPath)
   }
 
   /** The exported layout with an explicit schema (the partition-dir

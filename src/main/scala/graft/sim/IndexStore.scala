@@ -131,65 +131,32 @@ object IndexStore extends graft.QueryModule {
     * file per touched list, so a long-lived index accumulates small
     * files (the classic ops cost — listing + per-file open dominate a
     * probe's read). Compaction rewrites the lists layout at one file
-    * per list directory via a staging dir + atomic-ish swap (write
-    * staged, swap names, drop old): a crash mid-compact leaves either
-    * the old or the staged layout whole, never a half layout.
-    * Serving results are unchanged (spec-pinned).
+    * per list directory through a staging dir and
+    * [[graft.FsOps.swapDir]]. Serving results are unchanged
+    * (spec-pinned).
     */
   def compactGiven(spark: SparkSession, dir: String): Unit = {
-    val lists = loadLists(spark, dir)
+    val fs = graft.FsOps.fs(spark, dir)
+    graft.FsOps.recoverDeleteOld(fs, dir, Seq("lists"))
     val staged = s"$dir/lists_compact_staging"
-    lists.repartition(col("list_id"))
+    loadLists(spark, dir).repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staged), spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$dir/lists")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/lists_compact_old")
-    fs.rename(live, old)
-    fs.rename(new org.apache.hadoop.fs.Path(staged), live)
-    fs.delete(old, true)
-    ()
+    graft.FsOps.swapDir(fs, staged, s"$dir/lists")
   }
 
   /** Deletion — the last face of the index CRUD lifecycle
     * (save / serve / append / compact / DELETE): remove a set of
-    * vec_ids from the saved lists. The rewrite is bounded by the
-    * TOUCHED lists, not the index: the delete set joins the lists
-    * once to find which directories hold its ids (O(nLists) driver
-    * rows — the same √n bound as the probe set), those lists are
-    * rewritten minus the deleted rows through a staging dir, and each
-    * touched directory is swapped individually — so a delete of k
-    * vectors re-reads and re-writes only the lists they lived in,
-    * never the other ~nLists−k directories. A list whose every row is
-    * deleted writes no staged partition and its live directory is
-    * removed. Per-list swap keeps the crash contract of
-    * [[compactGiven]] at directory granularity: any prefix of swaps
-    * leaves every list whole, either old or new.
+    * vec_ids from the saved lists through [[Pq.deleteFromListLayout]],
+    * the same touched-lists rewrite and per-list swap as the IVFPQ
+    * layouts. Only the lists the deleted ids lived in are re-read and
+    * re-written; a list whose every row is deleted drops.
     */
   def deleteGiven(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val lists = loadLists(spark, dir)
+    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir, Seq("lists"))
     // join strategy left to Catalyst/AQE: a daily delete set
     // broadcasts, a bulk one shuffles — both stay correct
-    val del = ids.select(col("vec_id")).distinct()
-    val touched = lists.join(del, "vec_id")
-      .select("list_id").distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (touched.isEmpty) return
-    val staged = s"$dir/lists_delete_staging"
-    lists.filter(col("list_id").isin(touched: _*))
-      .join(del, Seq("vec_id"), "left_anti")
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staged), spark.sparkContext.hadoopConfiguration)
-    for (lid <- touched) {
-      val live = new org.apache.hadoop.fs.Path(s"$dir/lists/list_id=$lid")
-      val next = new org.apache.hadoop.fs.Path(s"$staged/list_id=$lid")
-      fs.delete(live, true)
-      if (fs.exists(next)) fs.rename(next, live) // absent ⇒ list emptied
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-    ()
+    Pq.deleteFromListLayout(spark, dir, "lists", loadLists(spark, dir),
+      ids.select(col("vec_id")).distinct())
   }
 
   /** J11 — a STREAM of query vectors served against the saved index
@@ -699,25 +666,44 @@ object IndexStore extends graft.QueryModule {
     *    per-action rather than as a global max claim).
     *
     * Commit: staged rows land under `lists_rebalance_staging`
-    * partitioned by their NEW list_id, then per-directory swaps (the
-    * [[deleteGiven]] crash contract — any prefix leaves every list
-    * directory whole): drop split parents, swap staged sub-list and
-    * merge-target directories in, drop merge sources, swap
-    * `centroids/`. Scale: the decisions ride the O(√n) counts/
-    * centroid frames (the only driver materializations, the probe-set
-    * bound); data I/O is bounded by the TOUCHED lists (split members,
-    * merge members, merge-target rows) — keep lists are never read or
-    * rewritten.
+    * partitioned by their NEW list_id, then [[commitRebalance]].
+    * Scale: the decisions ride the O(√n) counts/centroid frames (the
+    * only driver materializations, the probe-set bound); data I/O is
+    * bounded by the TOUCHED lists (split members, merge members,
+    * merge-target rows) — keep lists are never read or rewritten.
     */
   def rebalanceGiven(spark: SparkSession, dir: String,
       policy: RebalancePolicy = RebalancePolicy.Standard): Boolean = {
-    import spark.implicits._
-    val lists = loadLists(spark, dir)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val counts = lists.groupBy("list_id")
+    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir, Seq("lists"))
+    rebalancePlan(loadLists(spark, dir),
+        spark.read.parquet(s"$dir/centroids"), policy, dir) match {
+      case None => false
+      case Some(plan) =>
+        commitRebalance(spark, dir, plan, Seq("lists" -> plan.staged))
+        true
+    }
+  }
+
+  /** One rebalance pass's decisions: the lists to `drop` (split
+    * parents and dissolved merge lists), the `staged`
+    * (vec_id, embedding, nsq, list_id) rows of every rewritten list
+    * under its NEW list_id, and the post-rebalance quantizer `cents`.
+    */
+  private[sim] final case class Rebalance(drop: Seq[Long],
+      staged: DataFrame, cents: DataFrame)
+
+  /** The rebalance decision algebra of [[rebalanceGiven]] over a
+    * (vec_id, embedding, nsq, list_id) frame and its (cid, ce, cn)
+    * centroids, shared with [[Pq.rebalanceIvfPq]]; None when every
+    * list is inside the band.
+    */
+  private[sim] def rebalancePlan(rows: DataFrame, cents: DataFrame,
+      policy: RebalancePolicy, dir: String): Option[Rebalance] = {
+    import rows.sparkSession.implicits._
+    val counts = rows.groupBy("list_id")
       .agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    if (counts.isEmpty) return false
+    if (counts.isEmpty) return None
     val total = counts.values.sum
     val nl = counts.size.toLong
     val splits = counts.collect { case (l, n)
@@ -728,7 +714,7 @@ object IndexStore extends graft.QueryModule {
     // nothing to dissolve into ⇒ under-full lists stay (documented
     // guard; a corpus with no keep list is one the band mis-fits)
     val merges = if (keeps.isEmpty) Set.empty[Long] else mergesRaw
-    if (splits.isEmpty && merges.isEmpty) return false
+    if (splits.isEmpty && merges.isEmpty) return None
 
     // merge targets: nearest KEEP centroid per merge centroid —
     // O(merges × keeps) on the √n centroid frame, collected O(L)
@@ -747,7 +733,7 @@ object IndexStore extends graft.QueryModule {
     // members into nothing; fail loudly instead of losing data
     require(mtgt.keySet == merges,
       s"rebalance at $dir: merge lists ${merges -- mtgt.keySet} have " +
-        "no centroid row — centroids/ diverged from lists/")
+        "no centroid row — centroids/ diverged from the list layout")
 
     // sub-centroids: quantile-seeded members of each split list
     val splitSeq = splits.toSeq.sorted
@@ -759,7 +745,7 @@ object IndexStore extends graft.QueryModule {
           val s = math.max(2L, math.min((n * nl + total - 1) / total, n))
           (0L until s).map(j => (p, ((2 * j + 1) * n) / (2 * s) + 1))
         }.toDF("list_id", "mr")
-        val ranked = lists.filter(col("list_id").isin(splitSeq: _*))
+        val ranked = rows.filter(col("list_id").isin(splitSeq: _*))
           .join(broadcast(cents), col("list_id") === col("cid"))
           .withColumn("pcos", Vectors.cosineFrom(
             Vectors.dot("embedding", "ce"), col("nsq"), col("cn")))
@@ -768,81 +754,75 @@ object IndexStore extends graft.QueryModule {
         Some(ranked.join(broadcast(ranks), Seq("list_id", "mr"))
           .select(col("list_id").as("parent"), col("vec_id").as("subcid"),
             col("embedding").as("se"), col("nsq").as("sn"))
-          .localCheckpoint(true)) // read by re-assign AND centroids2
+          .localCheckpoint(true)) // read by re-assign AND the quantizer
       }
 
     // staged rows: split members re-assigned among their sub-lists,
     // merge members moved whole to their target, target originals
     val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     subcents.foreach { sc =>
-      val sa = lists.filter(col("list_id").isin(splitSeq: _*))
+      val sa = rows.filter(col("list_id").isin(splitSeq: _*))
         .join(broadcast(sc), col("list_id") === col("parent"))
         .withColumn("scos", Vectors.cosineFrom(
           Vectors.dot("embedding", "se"), col("nsq"), col("sn")))
         .groupBy("vec_id")
         .agg(max_by(col("subcid"), struct(col("scos"), -col("subcid")))
           .as("new_list"))
-      staged += lists.filter(col("list_id").isin(splitSeq: _*))
+      staged += rows.filter(col("list_id").isin(splitSeq: _*))
         .join(sa, "vec_id")
         .select(col("vec_id"), col("embedding"), col("nsq"),
           col("new_list").as("list_id"))
     }
     if (merges.nonEmpty) {
       val mt = mtgt.toSeq.sorted.toDF("m", "tgt")
-      staged += lists.filter(col("list_id").isin(merges.toSeq: _*))
+      staged += rows.filter(col("list_id").isin(merges.toSeq: _*))
         .join(broadcast(mt), col("list_id") === col("m"))
         .select(col("vec_id"), col("embedding"), col("nsq"),
           col("tgt").as("list_id"))
       val targets = mtgt.values.toSet.toSeq.sorted
-      staged += lists.filter(col("list_id").isin(targets: _*))
+      staged += rows.filter(col("list_id").isin(targets: _*))
         .select("vec_id", "embedding", "nsq", "list_id")
     }
-    val stagingDir = s"$dir/lists_rebalance_staging"
-    staged.reduce(_.unionByName(_))
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(stagingDir)
 
-    // post-rebalance quantizer, staged before the directory surgery.
-    // SURVIVORS, not keeps: when the no-keep guard cancels the
-    // merges, the under-full lists STAY on disk and must keep their
-    // centroids — filtering to `keeps` alone orphaned those
-    // directories (unreachable by any probe, and the next pass's
-    // merge-target lookup found no centroid rows and silently
-    // dissolved their members into nothing — the mass-loss bug the
-    // round-16 convergence spec caught at pass 6)
-    val survivors = counts.keySet -- splits -- merges
+    // post-rebalance quantizer. SURVIVORS, not keeps: when the
+    // no-keep guard cancels the merges, the under-full lists STAY on
+    // disk and must keep their centroids — filtering to `keeps` alone
+    // orphaned those directories (unreachable by any probe, and the
+    // next pass's merge-target lookup found no centroid rows and
+    // silently dissolved their members into nothing — the mass-loss
+    // bug the round-16 convergence spec caught at pass 6)
+    val survivors = cents.filter(col("cid").isin(
+      (counts.keySet -- splits -- merges).toSeq: _*))
+    val newCents = subcents.fold(survivors)(sc =>
+      survivors.unionByName(sc.select(col("subcid").as("cid"),
+        col("se").as("ce"), col("sn").as("cn"))))
+    Some(Rebalance((splits ++ merges).toSeq.sorted,
+      staged.reduce(_.unionByName(_)), newCents))
+  }
+
+  /** Commit a [[Rebalance]]: stage the quantizer, then per layout
+    * stage its rows partitioned by list_id and run
+    * [[graft.FsOps.replaceLists]], then swap `centroids/` in. The
+    * layouts and the quantizer do not flip atomically — a crash or
+    * concurrent read mid-commit can observe the OLD quantizer over
+    * partially-moved lists and miss moved vectors, so serving must be
+    * QUIESCED for a rebalance pass (only between-pass states are
+    * serveable). Serve-during-rebalance would need all layouts behind
+    * one version pointer (the SnapshotStore `v=<n>/_current`
+    * discipline) at the cost of a full-index copy per pass.
+    */
+  private[sim] def commitRebalance(spark: SparkSession, dir: String,
+      plan: Rebalance, layouts: Seq[(String, DataFrame)]): Unit = {
+    val fs = graft.FsOps.fs(spark, dir)
     val centsStaging = s"$dir/centroids_rebalance_staging"
-    val newCents = subcents match {
-      case Some(sc) => cents.filter(col("cid").isin(survivors.toSeq: _*))
-        .unionByName(sc.select(col("subcid").as("cid"),
-          col("se").as("ce"), col("sn").as("cn")))
-      case None => cents.filter(col("cid").isin(survivors.toSeq: _*))
+    plan.cents.write.mode("overwrite").parquet(centsStaging)
+    for ((sub, df) <- layouts) {
+      val staging = s"$dir/${sub}_rebalance_staging"
+      df.repartition(col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id").parquet(staging)
+      graft.FsOps.replaceLists(fs, dir, sub, staging, plan.drop)
     }
-    newCents.write.mode("overwrite").parquet(centsStaging)
-
-    // directory surgery — per-directory swaps, each atomic: a crash
-    // prefix leaves every list directory whole (old or new)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    def listDir(l: Long) = new org.apache.hadoop.fs.Path(
-      s"$dir/lists/list_id=$l")
-    for (p <- splitSeq) fs.delete(listDir(p), true)
-    for (st <- fs.listStatus(new org.apache.hadoop.fs.Path(stagingDir))
-         if st.getPath.getName.startsWith("list_id=")) {
-      val live = new org.apache.hadoop.fs.Path(
-        s"$dir/lists/${st.getPath.getName}")
-      if (fs.exists(live)) fs.delete(live, true)
-      fs.rename(st.getPath, live)
-    }
-    for (m <- merges.toSeq.sorted) fs.delete(listDir(m), true)
-    val centsLive = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-    val centsOld = new org.apache.hadoop.fs.Path(s"$dir/centroids_rebalance_old")
-    if (fs.exists(centsOld)) fs.delete(centsOld, true)
-    fs.rename(centsLive, centsOld)
-    fs.rename(new org.apache.hadoop.fs.Path(centsStaging), centsLive)
-    fs.delete(centsOld, true)
-    fs.delete(new org.apache.hadoop.fs.Path(stagingDir), true)
-    true
+    graft.FsOps.swapDir(fs, centsStaging, s"$dir/centroids")
   }
 
   /** Iterate [[rebalanceGiven]] to CONVERGENCE: one pass is not
@@ -850,8 +830,8 @@ object IndexStore extends graft.QueryModule {
     * a keep list absorbing several dissolved lists can cross the
     * split threshold, and a split can leave sub-lists under-full), so
     * a deployment loops plan→act until the plan is all-keep or a
-    * pass cap hits. Each pass COMMITS eagerly through the
-    * per-directory swap discipline — a crash between passes leaves a
+    * pass cap hits. Each pass COMMITS eagerly through
+    * [[commitRebalance]] — a crash between passes leaves a
     * whole, serveable, strictly-more-balanced index, and the next
     * call resumes where it left off. Returns the number of acting
     * passes (0 = already in band).
@@ -933,8 +913,7 @@ object IndexStore extends graft.QueryModule {
     * quantile-seeded sub-centroids → sub-assignment → merge targets →
     * `newlists` + `cents2`), appended after [[Ivf.givenAssignSql]]'s
     * `lists`/`cdots`/`norms` CTEs. Shared by the G23 flat-IVF gate
-    * and the G31 IVFPQ gate — the decision algebra is identical by
-    * construction (Pq.rebalanceIvfPq mirrors rebalanceGiven).
+    * and the G31 IVFPQ gate — both run [[rebalancePlan]].
     */
   private[sim] def rebalanceArcSql(p: RebalancePolicy): String = s"""
       |counts AS (SELECT list_id, CAST(count(*) AS BIGINT) AS n_vectors

@@ -548,8 +548,8 @@ object Pq extends QueryModule {
           .parquet(s"$dir/refine"))) }
   }
 
-  /** [[appendIvfPq]] guarded by a batch-id marker (the
-    * SnapshotStore.applyDiffOnce discipline): an at-least-once
+  /** [[appendIvfPq]] guarded by a batch-id marker
+    * ([[graft.FsOps.onceByMarker]]): an at-least-once
     * re-delivered batch — the Structured Streaming foreachBatch
     * contract — is a no-op instead of appending duplicate vec_id rows
     * into codes/ and refine/. This is the ingest entry the J-block
@@ -577,21 +577,18 @@ object Pq extends QueryModule {
     * lays one file per touched list in BOTH layouts, so a long-lived
     * index accumulates small files (listing + per-file open dominate
     * a probe's read). Rewrites codes/ and refine/ to one file per
-    * list directory via CHECKED staged swaps ([[graft.FsOps.swapDir]]
-    * — rename failures throw instead of silently losing a layout, and
-    * stale `_old` leftovers from a prior crash are cleared first).
+    * list directory, each committed by [[graft.FsOps.swapDir]].
     * Crash contract: per-LAYOUT atomicity — each layout is swapped
-    * whole (mid-swap the data survives under its `_old`); a crash
-    * BETWEEN the two layouts' swaps leaves codes/ and refine/ from
-    * different compaction generations, both complete and serving
-    * identically (compaction never changes content) — re-run to
-    * reconverge. Serving is unchanged (spec-pinned); the rewrite
+    * whole; a crash BETWEEN the two layouts' swaps leaves codes/ and
+    * refine/ from different compaction generations, both complete and
+    * serving identically (compaction never changes content) — re-run
+    * to reconverge. Serving is unchanged (spec-pinned); the rewrite
     * touches each layout once, bounded by index size, never the raw
     * corpus.
     */
   def compactIvfPq(spark: SparkSession, dir: String): Unit = {
-    recoverDeleteOld(spark, dir)
     val fs = graft.FsOps.fs(spark, dir)
+    graft.FsOps.recoverDeleteOld(fs, dir, Layouts)
     // the two layout rewrites are independent (disjoint staging dirs,
     // per-layout swap atomicity — the documented crash contract
     // already allows the layouts to sit in different compaction
@@ -608,60 +605,25 @@ object Pq extends QueryModule {
     })
   }
 
-  /** G30 — deletion from the composed index, completing its CRUD
-    * lifecycle (save / serve / append / compact / DELETE — the
-    * [[graft.sim.IndexStore.deleteGiven]] discipline applied to both
-    * IVFPQ layouts): the delete set joins the codes once to find the
-    * TOUCHED lists (O(nLists) driver rows, the probe-set bound), only
-    * those list directories rewrite in codes/ AND refine/ via
-    * staging + per-directory swap (an emptied list's directory
-    * drops), untouched lists never read.
-    */
-  /** Crash recovery for [[deleteIvfPq]]'s per-list swap: a list
-    * directory stranded under a `_delete_old` sidecar whose live
-    * counterpart is ABSENT is the surviving copy from an interrupted
-    * swap (renamed out; crash before the staged rewrite renamed in) —
-    * roll it back into the live layout before proceeding (the
-    * SnapshotStore purge roll-back-first discipline). Lists present
-    * in BOTH places are superseded copies, left for the next delete's
-    * stale sweep. Every maintenance entry point that reads or rewrites
-    * the layouts ([[deleteIvfPq]], [[compactIvfPq]],
-    * [[rebalanceIvfPq]]) runs this first; pure serve loads don't
-    * mutate, so a post-crash serve before any maintenance can still
-    * miss the stranded lists — the price of read paths staying
-    * read-only.
-    */
-  private[sim] def recoverDeleteOld(spark: SparkSession, dir: String,
-      subs: Seq[String] = Seq("codes", "refine")): Unit = {
-    val fs = graft.FsOps.fs(spark, dir)
-    def path(s: String) = new org.apache.hadoop.fs.Path(s)
-    for (sub <- subs) {
-      val oldRoot = path(s"$dir/${sub}_delete_old")
-      if (fs.exists(oldRoot))
-        for (st <- fs.listStatus(oldRoot)
-            if st.getPath.getName.startsWith("list_id=")) {
-          val live = path(s"$dir/$sub/${st.getPath.getName}")
-          if (!fs.exists(live))
-            require(fs.rename(st.getPath, live),
-              s"ivfpq delete recovery at $dir: " +
-                s"rename ${st.getPath} to $live failed")
-        }
-      // the emptied sidecar holds only COMMITTED-deleted rows (lists
-      // a delete legitimately emptied — parked there precisely so
-      // the live-absent rollback above cannot resurrect them); clear
-      fs.delete(path(s"$dir/${sub}_delete_emptied"), true)
-    }
-  }
+  /** The two list-partitioned layouts of the composed index. */
+  private val Layouts = Seq("codes", "refine")
 
+  /** G30 — deletion from the composed index, completing its CRUD
+    * lifecycle (save / serve / append / compact / DELETE): the delete
+    * set joins each layout once to find the TOUCHED lists (O(nLists)
+    * driver rows, the probe-set bound), only those list directories
+    * rewrite in codes/ AND refine/ via [[deleteFromListLayout]] (an
+    * emptied list's directory drops), untouched lists never read.
+    */
   def deleteIvfPq(spark: SparkSession, dir: String,
       ids: DataFrame): Unit = {
     // recover FIRST: after a mid-loop crash the live layout can be
     // missing lists whose only copy sits under _delete_old — roll
     // those back before anything reads the layout (the touched-list
-    // scan below would silently miss their rows) and before the old
+    // scan would silently miss their rows) and before the old
     // sidecar is cleared as stale (the r17 ADVICE window: re-running
     // the delete — the natural recovery — destroyed them)
-    recoverDeleteOld(spark, dir)
+    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir, Layouts)
     val del = ids.select(col("vec_id")).distinct().localCheckpoint(true)
     // touched lists computed PER LAYOUT, not from codes alone: after
     // a crash between the codes and refine passes the ids are
@@ -671,70 +633,29 @@ object Pq extends QueryModule {
     // (found by review in round 18)
     for ((sub, df) <- Seq(
         "codes" -> loadIvfPqCodes(spark, dir),
-        "refine" -> loadIvfPqRefine(spark, dir))) {
-      val touched = df.join(del, "vec_id")
-        .select("list_id").distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (touched.nonEmpty)
-        deleteFromListLayout(spark, dir, sub, df, del, touched)
-    }
+        "refine" -> loadIvfPqRefine(spark, dir)))
+      deleteFromListLayout(spark, dir, sub, df, del)
   }
 
-  /** The per-layout half of [[deleteIvfPq]], shared with the trained
-    * index's codes-only delete ([[PqTrained.deleteTrained]]): stage
-    * the touched lists' anti-joined rewrite, then per-list swap with
-    * CHECKED renames — the live directory moves to a sidecar
-    * `_delete_old` root FIRST (outside the layout, so partition
-    * discovery never sees it), then the staged rewrite renames in; a
-    * crash mid-swap leaves every touched list's data recoverable
-    * under _delete_old, never destroyed (callers run
-    * [[recoverDeleteOld]] before reading or clearing anything). A
-    * concurrent reader during the loop can still observe a touched
-    * list briefly absent (quiesce serving during deletes, or read
-    * through a snapshot) — the old rows, however, are never the only
-    * casualty of a crash.
+  /** The per-layout delete shared by [[deleteIvfPq]],
+    * [[PqTrained.deleteTrained]] and [[IndexStore.deleteGiven]]: find
+    * the lists of `sub` that hold `del`'s ids, stage their anti-joined
+    * rewrite, and commit it with [[graft.FsOps.swapLists]]. Callers
+    * run [[graft.FsOps.recoverDeleteOld]] before loading `df`.
     */
   private[sim] def deleteFromListLayout(spark: SparkSession,
-      dir: String, sub: String, df: DataFrame, del: DataFrame,
-      touched: Array[Long]): Unit = {
-    val fs = graft.FsOps.fs(spark, dir)
-    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+      dir: String, sub: String, df: DataFrame, del: DataFrame): Unit = {
+    val touched = df.join(del, "vec_id")
+      .select("list_id").distinct()
+      .collect().map(_.getLong(0)).sorted
+    if (touched.isEmpty) return
     val staged = s"$dir/${sub}_delete_staging"
     df.filter(col("list_id").isin(touched: _*))
       .join(del, Seq("vec_id"), "left_anti")
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(staged)
-    val oldRoot = s"$dir/${sub}_delete_old"
-    val emptiedRoot = s"$dir/${sub}_delete_emptied"
-    // safe to clear: recoverDeleteOld already rolled back any list
-    // whose only copy lived under _delete_old, and _delete_emptied
-    // only ever holds committed-deleted data
-    fs.delete(path(oldRoot), true)
-    fs.delete(path(emptiedRoot), true)
-    fs.mkdirs(path(oldRoot))
-    fs.mkdirs(path(emptiedRoot))
-    for (lid <- touched) {
-      val live = path(s"$dir/$sub/list_id=$lid")
-      val next = path(s"$staged/list_id=$lid")
-      if (fs.exists(next)) {
-        require(fs.rename(live, path(s"$oldRoot/list_id=$lid")),
-          s"ivfpq delete at $dir: rename $live to $oldRoot failed")
-        require(fs.rename(next, live),
-          s"ivfpq delete at $dir: rename $next to $live failed")
-      } else
-        // the delete emptied this list: live-absent IS the final
-        // state, so the old rows must NOT land under _delete_old —
-        // recoverDeleteOld's live-absent rollback heuristic would
-        // resurrect them into the next compact/rebalance (found by
-        // review in round 18). They park under the emptied sidecar,
-        // which recovery only ever clears.
-        require(fs.rename(live, path(s"$emptiedRoot/list_id=$lid")),
-          s"ivfpq delete at $dir: rename $live to $emptiedRoot failed")
-    }
-    fs.delete(path(staged), true)
-    fs.delete(path(oldRoot), true)
-    fs.delete(path(emptiedRoot), true)
-    ()
+    graft.FsOps.swapLists(graft.FsOps.fs(spark, dir), dir, sub, staged,
+      touched.toSeq)
   }
 
   /** G31 — occupancy REBALANCE for the composed index (the G23
@@ -747,168 +668,51 @@ object Pq extends QueryModule {
     * touched lists only, re-encoded against the loaded codebook, and
     * both layouts rewrite through per-directory staged swaps.
     *
-    * Decision algebra is [[graft.sim.IndexStore.rebalanceGiven]]'s
-    * (same policy bands, quantile seeding, keep-only merge targets,
-    * survivors-not-keeps quantizer filter — the round-16 mass-loss
-    * lesson baked in from the start); target lists' own members keep
-    * their centroid, so their re-encode is a bit-identical no-op and
-    * staging them costs only their directory rewrite. Returns whether
-    * the pass acted; iterate with a cap for convergence exactly like
-    * `rebalanceUntilBand`.
+    * Decisions and commit are [[IndexStore.rebalancePlan]] and
+    * [[IndexStore.commitRebalance]], run over the refine layout's raw
+    * vectors; target lists' own members keep their centroid, so their
+    * re-encode is a bit-identical no-op and staging them costs only
+    * their directory rewrite. Returns whether the pass acted; iterate
+    * with a cap for convergence exactly like `rebalanceUntilBand`.
     */
   def rebalanceIvfPq(spark: SparkSession, dir: String,
       policy: IndexStore.RebalancePolicy =
         IndexStore.RebalancePolicy.Standard): Boolean = {
-    import spark.implicits._
-    recoverDeleteOld(spark, dir)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val cb = spark.read.parquet(s"$dir/codebook")
-    val counts = loadIvfPqCodes(spark, dir).groupBy("list_id")
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    if (counts.isEmpty) return false
-    val total = counts.values.sum
-    val nl = counts.size.toLong
-    val splits = counts.collect { case (l, n)
-      if n * nl * policy.splitDen > policy.splitNum * total => l }.toSet
-    val mergesRaw = counts.collect { case (l, n)
-      if n * nl * policy.mergeDen < policy.mergeNum * total => l }.toSet
-    val keeps = counts.keySet -- splits -- mergesRaw
-    val merges = if (keeps.isEmpty) Set.empty[Long] else mergesRaw
-    if (splits.isEmpty && merges.isEmpty) return false
-    val survivors = counts.keySet -- splits -- merges
-
-    val mtgt: Map[Long, Long] =
-      if (merges.isEmpty) Map.empty
-      else cents.filter(col("cid").isin(merges.toSeq: _*))
-        .select(col("cid").as("mc"), col("ce").as("me"), col("cn").as("mn"))
-        .crossJoin(broadcast(cents.filter(col("cid").isin(keeps.toSeq: _*))))
-        .withColumn("cos", Vectors.cosineFrom(
-          Vectors.dot("me", "ce"), col("mn"), col("cn")))
-        .groupBy("mc")
-        .agg(max_by(col("cid"), struct(col("cos"), -col("cid"))).as("tgt"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    require(mtgt.keySet == merges,
-      s"ivfpq rebalance at $dir: merge lists ${merges -- mtgt.keySet} " +
-        "have no centroid row — centroids/ diverged from codes/")
-
+    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir, Layouts)
     val refine = loadIvfPqRefine(spark, dir)
       .withColumn("nsq", Vectors.normSq("embedding"))
-    val splitSeq = splits.toSeq.sorted
-    val subcents: Option[DataFrame] =
-      if (splits.isEmpty) None
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val ranks = splitSeq.flatMap { p =>
-          val n = counts(p)
-          val s = math.max(2L, math.min((n * nl + total - 1) / total, n))
-          (0L until s).map(j => (p, ((2 * j + 1) * n) / (2 * s) + 1))
-        }.toDF("list_id", "mr")
-        val ranked = refine.filter(col("list_id").isin(splitSeq: _*))
-          .join(broadcast(cents), col("list_id") === col("cid"))
-          .withColumn("pcos", Vectors.cosineFrom(
-            Vectors.dot("embedding", "ce"), col("nsq"), col("cn")))
-          .withColumn("mr", row_number().over(Window
-            .partitionBy("list_id").orderBy(desc("pcos"), asc("vec_id"))))
-        Some(ranked.join(broadcast(ranks), Seq("list_id", "mr"))
-          .select(col("list_id").as("parent"), col("vec_id").as("subcid"),
-            col("embedding").as("se"), col("nsq").as("sn"))
-          .localCheckpoint(true))
-      }
-
-    // staged raw rows, each under its NEW list id
-    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    subcents.foreach { sc =>
-      val sa = refine.filter(col("list_id").isin(splitSeq: _*))
-        .join(broadcast(sc), col("list_id") === col("parent"))
-        .withColumn("scos", Vectors.cosineFrom(
-          Vectors.dot("embedding", "se"), col("nsq"), col("sn")))
-        .groupBy("vec_id")
-        .agg(max_by(col("subcid"), struct(col("scos"), -col("subcid")))
-          .as("new_list"))
-      staged += refine.filter(col("list_id").isin(splitSeq: _*))
-        .join(sa, "vec_id")
-        .select(col("vec_id"), col("embedding"),
-          col("new_list").as("list_id"))
+    IndexStore.rebalancePlan(refine, spark.read.parquet(s"$dir/centroids"),
+        policy, dir) match {
+      case None => false
+      case Some(plan) =>
+        val stagedRaw = plan.staged.localCheckpoint(true)
+        // RE-ENCODE staged rows against their NEW centroid — the step
+        // that distinguishes this from the flat-IVF rebalance
+        val stagedResid = stagedRaw
+          .join(broadcast(plan.cents.select(col("cid").as("list_id"),
+            col("ce"))), "list_id")
+          .withColumn("resid", expr(
+            "zip_with(embedding, ce, (x, c) -> cast(x as double) - cast(c as double))"))
+          .select("vec_id", "list_id", "resid")
+        // per-subspace argmins in ONE aggregate (r19 — the
+        // residualCodes/append fusion applied here too): the former
+        // stack-unpivot + double groupBy ran TWO shuffles and exploded
+        // the distance rows ×NumSub first; min_by per m over the same
+        // (dsq, cid) order yields identical codes
+        val codeCols = (0 until NumSub).map(m =>
+          min_by(col("cid"), struct(col(s"d$m"), col("cid"))).as(s"code_$m"))
+        val stagedCodes = stagedResid
+          .crossJoin(broadcast(spark.read.parquet(s"$dir/codebook")))
+          .select(col("vec_id") :: col("list_id") :: col("cid") ::
+            (0 until NumSub).map(m =>
+              subDistSqD("resid", "ce", m).as(s"d$m")).toList: _*)
+          .groupBy("vec_id", "list_id")
+          .agg(codeCols.head, codeCols.tail: _*)
+        IndexStore.commitRebalance(spark, dir, plan, Seq(
+          "codes" -> stagedCodes,
+          "refine" -> stagedRaw.select("vec_id", "embedding", "list_id")))
+        true
     }
-    if (merges.nonEmpty) {
-      val mt = mtgt.toSeq.sorted.toDF("m", "tgt")
-      staged += refine.filter(col("list_id").isin(merges.toSeq: _*))
-        .join(broadcast(mt), col("list_id") === col("m"))
-        .select(col("vec_id"), col("embedding"), col("tgt").as("list_id"))
-      val targets = mtgt.values.toSet.toSeq.sorted
-      staged += refine.filter(col("list_id").isin(targets: _*))
-        .select("vec_id", "embedding", "list_id")
-    }
-    val stagedRaw = staged.reduce(_.unionByName(_)).localCheckpoint(true)
-
-    // the post-rebalance quantizer (survivors + sub-centroids)
-    val newCents = subcents match {
-      case Some(sc) => cents.filter(col("cid").isin(survivors.toSeq: _*))
-        .unionByName(sc.select(col("subcid").as("cid"),
-          col("se").as("ce"), col("sn").as("cn")))
-      case None => cents.filter(col("cid").isin(survivors.toSeq: _*))
-    }
-
-    // RE-ENCODE staged rows against their NEW centroid — the step
-    // that distinguishes this from the flat-IVF rebalance
-    val stagedResid = stagedRaw
-      .join(broadcast(newCents.select(col("cid").as("list_id"),
-        col("ce"))), "list_id")
-      .withColumn("resid", expr(
-        "zip_with(embedding, ce, (x, c) -> cast(x as double) - cast(c as double))"))
-      .select("vec_id", "list_id", "resid")
-    // per-subspace argmins in ONE aggregate (r19 — the residualCodes/
-    // append fusion applied here too): the former stack-unpivot +
-    // double groupBy ran TWO shuffles and exploded the distance rows
-    // ×NumSub first; min_by per m over the same (dsq, cid) order
-    // yields identical codes
-    val codeCols = (0 until NumSub).map(m =>
-      min_by(col("cid"), struct(col(s"d$m"), col("cid"))).as(s"code_$m"))
-    val stagedCodes = stagedResid.crossJoin(broadcast(cb))
-      .select(col("vec_id") :: col("list_id") :: col("cid") ::
-        (0 until NumSub).map(m =>
-          subDistSqD("resid", "ce", m).as(s"d$m")).toList: _*)
-      .groupBy("vec_id", "list_id")
-      .agg(codeCols.head, codeCols.tail: _*)
-
-    // commit: staged layouts + centroids, then per-directory swaps
-    // in BOTH layouts (split parents out, staged in, merges out),
-    // every rename CHECKED (a false return throws instead of leaving
-    // a half-swapped layout silently). CONSISTENCY CONTRACT: the
-    // three layouts (codes, refine, centroids) do not flip atomically
-    // — a crash or concurrent read between the codes swap and the
-    // centroids swap observes the OLD quantizer over partially-moved
-    // lists and can silently miss the moved vectors. Serving must be
-    // QUIESCED for the duration of a rebalance pass (only
-    // between-pass states are serveable); a deployment wanting
-    // serve-during-rebalance would commit all three layouts through
-    // one version pointer (the SnapshotStore v=<n>/_current
-    // discipline) at the cost of a full-index copy per pass.
-    val fs = graft.FsOps.fs(spark, dir)
-    val centsStaging = s"$dir/centroids_rebalance_staging"
-    newCents.write.mode("overwrite").parquet(centsStaging)
-    for ((sub, df) <- Seq("codes" -> stagedCodes,
-        "refine" -> stagedRaw.select("vec_id", "embedding", "list_id"))) {
-      val stagingDir = s"$dir/${sub}_rebalance_staging"
-      df.repartition(col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(stagingDir)
-      def listDir(l: Long) = new org.apache.hadoop.fs.Path(
-        s"$dir/$sub/list_id=$l")
-      for (p <- splitSeq) fs.delete(listDir(p), true)
-      for (st <- fs.listStatus(new org.apache.hadoop.fs.Path(stagingDir))
-           if st.getPath.getName.startsWith("list_id=")) {
-        val live = new org.apache.hadoop.fs.Path(
-          s"$dir/$sub/${st.getPath.getName}")
-        if (fs.exists(live)) fs.delete(live, true)
-        require(fs.rename(st.getPath, live),
-          s"ivfpq rebalance at $dir: rename ${st.getPath} to $live failed")
-      }
-      for (m <- merges.toSeq.sorted) fs.delete(listDir(m), true)
-      fs.delete(new org.apache.hadoop.fs.Path(stagingDir), true)
-    }
-    graft.FsOps.swapDir(fs, centsStaging, s"$dir/centroids")
-    true
   }
 
   /** J20 — a STREAM of query vectors answered from the SAVED composed

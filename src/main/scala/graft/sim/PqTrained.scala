@@ -591,42 +591,32 @@ object PqTrained extends graft.QueryModule {
       .parquet(s"$dir/codes")
   }
 
-  /** G35 — deletion from the trained index ([[Pq.deleteIvfPq]]'s
-    * per-list-swap discipline on the single codes layout): the delete
-    * set joins the codes once to find the TOUCHED lists, only those
-    * list directories rewrite (staging + checked per-list swap with
-    * the `_delete_old` crash sidecar; a stranded list rolls back
-    * before anything reads or sweeps), untouched lists never read.
-    * No refine sidecar exists here, so rerank-style serving after a
+  /** G35 — deletion from the trained index: [[Pq.deleteFromListLayout]]
+    * on the single codes layout, after the per-list recovery (contract
+    * 2 of [[graft.FsOps]]); untouched lists are never read. No refine sidecar exists here, so rerank-style serving after a
     * delete re-fetches raw vectors from the caller's corpus frame as
     * [[knnRerank]] always does.
     */
   def deleteTrained(spark: SparkSession, dir: String,
       ids: DataFrame): Unit = {
-    Pq.recoverDeleteOld(spark, dir, Seq("codes"))
-    val del = ids.select(col("vec_id")).distinct()
-    val codes = Pq.loadIvfPqCodes(spark, dir)
-    val touched = codes.join(del, "vec_id")
-      .select("list_id").distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (touched.isEmpty) return
-    Pq.deleteFromListLayout(spark, dir, "codes", codes, del, touched)
+    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir, Seq("codes"))
+    Pq.deleteFromListLayout(spark, dir, "codes", Pq.loadIvfPqCodes(spark, dir),
+      ids.select(col("vec_id")).distinct())
   }
 
   /** G36 — compaction for the trained index: each [[appendTrained]]
     * lays one file per touched list, so a long-lived index
     * accumulates small files; rewrite `codes/` to one file per list
-    * via a checked staged swap (the [[Pq.compactIvfPq]] discipline,
-    * single layout). Serving is unchanged.
+    * and commit it with [[graft.FsOps.swapDir]]. Serving is unchanged.
     */
   def compactTrained(spark: SparkSession, dir: String): Unit = {
-    Pq.recoverDeleteOld(spark, dir, Seq("codes"))
+    val fs = graft.FsOps.fs(spark, dir)
+    graft.FsOps.recoverDeleteOld(fs, dir, Seq("codes"))
     val staged = s"$dir/codes_compact_staging"
     Pq.loadIvfPqCodes(spark, dir)
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(staged)
-    graft.FsOps.swapDir(graft.FsOps.fs(spark, dir),
-      staged, s"$dir/codes")
+    graft.FsOps.swapDir(fs, staged, s"$dir/codes")
   }
 
   /** [[appendTrained]] guarded by a batch-id marker (the

@@ -491,8 +491,8 @@ object Streaming {
     * J17 completed ingestion: a stream of right-to-be-forgotten
     * requests (rows carrying `o_orderkey`) consumed via foreachBatch
     * into [[graft.relational.SnapshotStore.purgeKeys]], which
-    * rewrites EVERY retained version through the per-directory swap
-    * discipline. No batch-id marker is needed here — the purge is
+    * rewrites EVERY retained version through
+    * [[graft.FsOps.swapDir]]. No batch-id marker is needed here — the purge is
     * idempotent by ALGEBRA (the anti join of an already-purged
     * version removes nothing), so at-least-once re-delivery of a
     * request micro-batch is exactly a no-op (spec-pinned), and a

@@ -138,8 +138,8 @@ object Bm25 {
       s"$dir/stats_staged", s"$dir/stats")
   }
 
-  /** [[appendSaved]] guarded by a batch-id marker (the
-    * SnapshotStore.applyDiffOnce discipline): an at-least-once
+  /** [[appendSaved]] guarded by a batch-id marker
+    * ([[graft.FsOps.onceByMarker]]): an at-least-once
     * re-delivered batch — the Structured Streaming foreachBatch
     * contract — is a no-op instead of appending duplicate postings.
     * This is the entry [[graft.streaming.Streaming.bm25IngestStream]]

@@ -190,18 +190,18 @@ class SnapshotStoreSpec extends SparkSpec {
     SnapshotStore.applyDiff(spark, d, diff)
     val keys = SnapshotStore.purgeSet(spark, sf)
     // simulate the crash window: live renamed away, staging never
-    // promoted — v=1 is missing, v=1_purge_old holds the content
+    // promoted — v=1 is missing, v=1_old holds the content
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(d), spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(s"$d/v=1"),
-      new org.apache.hadoop.fs.Path(s"$d/v=1_purge_old"))
+      new org.apache.hadoop.fs.Path(s"$d/v=1_old"))
     SnapshotStore.purgeKeys(spark, d, keys)
     val v1 = SnapshotStore.readAt(spark, d, 1L)
     val expectV1 = old.join(keys, Seq("o_orderkey"), "left_anti")
     assert(v1.count() == expectV1.count() &&
       v1.exceptAll(expectV1).isEmpty && expectV1.exceptAll(v1).isEmpty,
       "crash recovery lost the half-swapped version")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$d/v=1_purge_old")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$d/v=1_old")))
   }
 
   test("table_changes from the landed chain equals the in-session diff") {

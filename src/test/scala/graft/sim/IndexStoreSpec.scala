@@ -219,38 +219,72 @@ class IndexStoreSpec extends SparkSpec {
     assert(served.collect().toSeq == fresh.collect().toSeq)
   }
 
+  /** A list-partitioned index family for the delete crash tests: the
+    * composed IVFPQ index (codes + refine) and the flat IVF index
+    * (lists) commit deletes through the same per-list swap and
+    * recovery. `rows` reads (vec_id, list_id) of the first layout;
+    * `served` serves the saved index at a dir, `fresh` builds over a
+    * corpus frame.
+    */
+  private case class ListIndex(name: String, subs: Seq[String],
+      save: String => Unit,
+      delete: (String, org.apache.spark.sql.DataFrame) => Unit,
+      compact: String => Unit,
+      rows: String => org.apache.spark.sql.DataFrame,
+      served: String => Seq[org.apache.spark.sql.Row],
+      fresh: org.apache.spark.sql.DataFrame => Seq[org.apache.spark.sql.Row])
+
+  private lazy val listIndexes = Seq(
+    ListIndex("ivfpq", Seq("codes", "refine"),
+      d => Pq.saveIvfPq(emb.select("vec_id", "embedding"), d),
+      (d, ids) => Pq.deleteIvfPq(spark, d, ids),
+      d => Pq.compactIvfPq(spark, d),
+      d => spark.read.schema("vec_id BIGINT, " +
+        (0 until Pq.NumSub).map(m => s"code_$m BIGINT").mkString(", ") +
+        ", list_id BIGINT").parquet(s"$d/codes"),
+      d => Pq.servedIvfPqKnn(spark, d,
+        emb.filter(col("vec_id") < Pq.QueryIds)
+          .select(col("vec_id").as("query_id"), col("embedding").as("eq")),
+        col("vec_id") >= Pq.QueryIds).collect().toSeq,
+      e => Pq.knnIvfPq(e.select("vec_id", "embedding")).collect().toSeq),
+    ListIndex("ivf", Seq("lists"),
+      d => IndexStore.saveGiven(emb, d),
+      (d, ids) => IndexStore.deleteGiven(spark, d, ids),
+      d => IndexStore.compactGiven(spark, d),
+      readLists,
+      d => IndexStore.servedKnnGiven(spark, d, col("vec_id") < 5, 3)
+        .collect().toSeq,
+      e => Ivf.knnGivenCentroids(e, col("vec_id") < 5, 3).collect().toSeq))
+
   test("ivfpq delete crash recovery: a list stranded under _delete_old " +
       "rolls back into the live layout before the next maintenance pass") {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft_ivfpq_recover").toString
-    Pq.saveIvfPq(emb.select("vec_id", "embedding"), d)
-    // crash simulation: a prior delete renamed one list out of each
-    // live layout and died before renaming the rewrite in — the
-    // sidecar holds the only copy (the r17 ADVICE scenario, where the
-    // next delete's stale sweep silently destroyed it)
-    val stranded = new java.io.File(s"$d/codes").listFiles()
-      .map(_.getName).filter(_.startsWith("list_id=")).sorted.head
-    for (sub <- Seq("codes", "refine")) {
-      val oldRoot = new java.io.File(s"$d/${sub}_delete_old")
-      assert(oldRoot.mkdirs())
-      assert(new java.io.File(s"$d/$sub/$stranded")
-        .renameTo(new java.io.File(s"$d/${sub}_delete_old/$stranded")))
-    }
-    // the natural recovery: just run the next maintenance pass
     val n = emb.count()
     val delIds = Seq(n / 2, n / 2 + 1, n / 2 + 2).map(_.toLong)
-    Pq.deleteIvfPq(spark, d, delIds.toDF("vec_id"))
-    assert(new java.io.File(s"$d/codes/$stranded").exists(),
-      "stranded list was not rolled back")
-    // serving equals the fresh build over corpus minus deleted — the
-    // stranded list's vectors included
-    val queries = emb.filter(col("vec_id") < Pq.QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-    val served = Pq.servedIvfPqKnn(spark, d, queries,
-      col("vec_id") >= Pq.QueryIds)
-    val fresh = Pq.knnIvfPq(emb.filter(!col("vec_id").isin(delIds: _*))
-      .select("vec_id", "embedding"))
-    assert(served.collect().toSeq == fresh.collect().toSeq)
+    for (ix <- listIndexes) {
+      val d = Files.createTempDirectory(s"graft_${ix.name}_recover").toString
+      ix.save(d)
+      // crash simulation: a prior delete renamed one list out of each
+      // live layout and died before renaming the rewrite in — the
+      // sidecar holds the only copy (the r17 ADVICE scenario, where
+      // the next delete's stale sweep silently destroyed it)
+      val stranded = new java.io.File(s"$d/${ix.subs.head}").listFiles()
+        .map(_.getName).filter(_.startsWith("list_id=")).sorted.head
+      for (sub <- ix.subs) {
+        val oldRoot = new java.io.File(s"$d/${sub}_delete_old")
+        assert(oldRoot.mkdirs())
+        assert(new java.io.File(s"$d/$sub/$stranded")
+          .renameTo(new java.io.File(s"$d/${sub}_delete_old/$stranded")))
+      }
+      // the natural recovery: just run the next maintenance pass
+      ix.delete(d, delIds.toDF("vec_id"))
+      assert(new java.io.File(s"$d/${ix.subs.head}/$stranded").exists(),
+        s"${ix.name}: stranded list was not rolled back")
+      // serving equals the fresh build over corpus minus deleted — the
+      // stranded list's vectors included
+      assert(ix.served(d) == ix.fresh(emb.filter(!col("vec_id").isin(delIds: _*))),
+        s"${ix.name}: serve after recovery differs from the fresh build")
+    }
   }
 
   private def deleteTree(f: java.io.File): Unit = {
@@ -308,36 +342,36 @@ class IndexStoreSpec extends SparkSpec {
   test("ivfpq delete: a list EMPTIED by a delete stays deleted " +
       "through crash recovery (the emptied sidecar is never rolled back)") {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft_ivfpq_emptied").toString
-    Pq.saveIvfPq(emb.select("vec_id", "embedding"), d)
-    val schemaCodes = "vec_id BIGINT, " +
-      (0 until Pq.NumSub).map(m => s"code_$m BIGINT").mkString(", ") +
-      ", list_id BIGINT"
-    def codes = spark.read.schema(schemaCodes).parquet(s"$d/codes")
-    // the smallest list's full membership — deleting it empties the
-    // list and its directory must drop
-    val lid = codes.groupBy("list_id").count()
-      .orderBy("count", "list_id").collect()(0).getLong(0)
-    val members = codes.filter(col("list_id") === lid)
-      .select("vec_id").as[Long].collect().toSeq
-    val preDir = Files.createTempDirectory("graft_ivfpq_pre").toString
-    copyDirTree(new java.io.File(s"$d/codes/list_id=$lid"),
-      new java.io.File(s"$preDir/list_id=$lid"))
-    Pq.deleteIvfPq(spark, d, members.toDF("vec_id"))
-    assert(!new java.io.File(s"$d/codes/list_id=$lid").exists())
-    // nothing for the rollback heuristic to chew on
-    assert(!new java.io.File(s"$d/codes_delete_old").exists())
-    // crash simulation: the delete parked the emptied list under the
-    // emptied sidecar but died before the final sweep
-    copyDirTree(new java.io.File(s"$preDir/list_id=$lid"),
-      new java.io.File(s"$d/codes_delete_emptied/list_id=$lid"))
-    // the next maintenance pass runs recovery first — the r18 review
-    // found the old single-sidecar design resurrected the rows here
-    Pq.compactIvfPq(spark, d)
-    assert(!new java.io.File(s"$d/codes/list_id=$lid").exists(),
-      "crash recovery resurrected an emptied list")
-    assert(codes.filter(col("vec_id").isin(members: _*)).count() == 0)
+    for (ix <- listIndexes) {
+      val d = Files.createTempDirectory(s"graft_${ix.name}_emptied").toString
+      ix.save(d)
+      val sub = ix.subs.head
+      // the smallest list's full membership — deleting it empties the
+      // list and its directory must drop
+      val lid = ix.rows(d).groupBy("list_id").count()
+        .orderBy("count", "list_id").collect()(0).getLong(0)
+      val members = ix.rows(d).filter(col("list_id") === lid)
+        .select("vec_id").as[Long].collect().toSeq
+      val preDir = Files.createTempDirectory(s"graft_${ix.name}_pre").toString
+      copyDirTree(new java.io.File(s"$d/$sub/list_id=$lid"),
+        new java.io.File(s"$preDir/list_id=$lid"))
+      ix.delete(d, members.toDF("vec_id"))
+      assert(!new java.io.File(s"$d/$sub/list_id=$lid").exists())
+      // nothing for the rollback heuristic to chew on
+      assert(!new java.io.File(s"$d/${sub}_delete_old").exists())
+      // crash simulation: the delete parked the emptied list under the
+      // emptied sidecar but died before the final sweep
+      copyDirTree(new java.io.File(s"$preDir/list_id=$lid"),
+        new java.io.File(s"$d/${sub}_delete_emptied/list_id=$lid"))
+      // the next maintenance pass runs recovery first — the r18 review
+      // found the old single-sidecar design resurrected the rows here
+      ix.compact(d)
+      assert(!new java.io.File(s"$d/$sub/list_id=$lid").exists(),
+        s"${ix.name}: crash recovery resurrected an emptied list")
+      assert(ix.rows(d).filter(col("vec_id").isin(members: _*)).count() == 0)
+    }
   }
+
 
   test("incremental append equals a full rebuild over the union corpus") {
     val n = emb.count()
@@ -766,7 +800,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$d/lists_rebalance_staging")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$d/centroids_rebalance_old")))
+      s"$d/centroids_old")))
   }
 
   test("rebalance under the standard band is a no-op on a balanced index") {
