@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark — NOISE-ROBUST since round 10: the whole
@@ -96,15 +95,15 @@ object Bench {
     // between two otherwise-identical full-bench runs)
     System.gc()
     (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0L, 100000000L, 1L,
-          spark.sparkContext.defaultParallelism)
-        .selectExpr("id % 1000 AS k", "md5(cast(id as string)) AS h")
-        .groupBy("k")
-        .agg(org.apache.spark.sql.functions.expr(
-          "count(distinct substring(h, 1, 4)) AS d"))
-        .count()
-      (System.nanoTime() - t0) / 1e9
+      Harness.seconds {
+        spark.range(0L, 100000000L, 1L,
+            spark.sparkContext.defaultParallelism)
+          .selectExpr("id % 1000 AS k", "md5(cast(id as string)) AS h")
+          .groupBy("k")
+          .agg(org.apache.spark.sql.functions.expr(
+            "count(distinct substring(h, 1, 4)) AS d"))
+          .count()
+      }._1
     }.min
   }
 
@@ -242,89 +241,21 @@ object Bench {
         graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
           .limit(50), "doc_id", "text").count()
     } catch { case _: Throwable => () }
-    // A throwing item records its error, not a ~4 ms phantom success:
-    // r8's regenerated events parquet broke 15 queries and the bench
-    // reported them as the fastest entries of the round.
-    // Also counts the Janino compiles inside the item: once sweep 1
-    // has warmed the generated-class cache, a later sweep that still
-    // compiles means the cache is thrashing (see Engine.CodegenCacheEntries).
-    def timed(fn: () => Unit): (Double, Long, Option[String]) = {
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val t0 = System.nanoTime()
-      val err = try { fn(); None } catch { case e: Throwable =>
-        Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-      }
-      ((System.nanoTime() - t0) / 1e9,
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, err)
-    }
-    val buildFns = Bench.buildFns(spark, sfDir)
-    val queryFns = SparkEntry.queries.toSeq.sortBy(_._1)
-    val bTimes = buildFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-    val qTimes = queryFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-    // per item, the codegen compiles of every sweep (failed ones too)
-    val bCompiles = buildFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Long]).toMap
-    val qCompiles = queryFns.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Long]).toMap
-    val errs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val errCount = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     // SPARK_GRAFT_BENCH_WARM=1: clear the build memos only before the
-    // FIRST sweep — later sweeps hit warm builds, so query times carry
-    // no fresh-build churn (GC/spill contention). Comparing a warm run
-    // against the default cold-every-sweep run separates build-phase
-    // contention from genuine per-query plan cost (round-13 verdict
-    // item 5). The driver's bench always runs cold.
+    // FIRST sweep and time the builds there only — later sweeps hit
+    // warm builds, so query times carry no fresh-build churn (GC/spill
+    // contention). Comparing a warm run against the default
+    // cold-every-sweep run separates build-phase contention from
+    // genuine per-query plan cost (round-13 verdict item 5). The
+    // driver's bench always runs cold.
     val warmBuilds = sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("1")
-    for (rep <- 1 to reps) {
-      if (!warmBuilds || rep == 1) Caches.clearAll()
-      buildFns.foreach { case (name, fn) =>
-        val (t, c, err) = timed(fn)
-        bCompiles(name) += c
-        err match {
-          case None => bTimes(name) += t
-          case Some(e) => errs(name) = e; errCount(name) += 1
-        }
-      }
-      queryFns.foreach { case (name, fn) =>
-        val (t, c, err) = timed(() => { fn(spark, sfDir).count(); () })
-        qCompiles(name) += c
-        // release per-query persisted relations so cached blocks don't
-        // accumulate GC pressure across the suite — outside the timed
-        // window, so one query's teardown doesn't bill the next
-        spark.catalog.clearCache()
-        err match {
-          case None => qTimes(name) += t
-          case Some(e) => errs(name) = e; errCount(name) += 1
-        }
-      }
+    val builds = buildFns(spark, sfDir).map { case (n, f) => Harness.Item(n, f, build = true) }
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
+      Harness.Item(n, () => { fn(spark, sfDir).count(); () })
     }
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    // per item: {"med":…,"min":…,"max":…,"n":…} over successful reps
-    // (max doubles as the spread indicator next to med); an item with
-    // ZERO successful reps reports {"err":…} instead of numbers, and
-    // a flaky item (some reps failed) carries "errs" alongside stats;
-    // every item carries "codegen_compiles", one count per sweep
-    def statsJson(name: String, ts: Seq[Double], cs: Seq[Long]): String = {
-      val comp = cs.mkString(""""codegen_compiles":[""", ",", "]")
-      if (ts.isEmpty) "{\"err\":" + jstr(errs(name)) + "," + comp + "}"
-      else {
-        val base = f"""{"med":${med(ts)},"min":${ts.min},"max":${ts.max},"n":${ts.size}"""
-        (if (errCount(name) > 0) base + s""","errs":${errCount(name)}""" else base) +
-          "," + comp + "}"
-      }
-    }
-    def block(items: Seq[String], times: Map[String, scala.collection.mutable.ArrayBuffer[Double]],
-        comps: Map[String, scala.collection.mutable.ArrayBuffer[Long]]): String =
-      items.map(n => jstr(n) + ":" + statsJson(n, times(n).toSeq, comps(n).toSeq))
-        .mkString("{", ",", "}")
-    val failures = queryFns.count { case (n, _) => qTimes(n).isEmpty }
+    val (bStats, qStats) = Harness.sweep(spark, "BENCH", builds ++ queries, reps, warmBuilds)
+      .splitAt(builds.size)
+    val failures = qStats.count(!_.ok)
     // headline total = Σ per-item MIN across sweeps (builds + queries).
     // r10 showed med-of-3 still loses when one contention window spans
     // two sweeps (events_windowed med 9.48 s vs min 0.83 s); min of
@@ -332,10 +263,9 @@ object Bench {
     // is a complete cold-build pass, so the min is a time the suite
     // actually achieved end to end. med/max stay in the per-item
     // stats as the spread indicator.
-    val total = bTimes.values.filter(_.nonEmpty).map(_.min).sum +
-      qTimes.values.filter(_.nonEmpty).map(_.min).sum
-    val medTotal = bTimes.values.filter(_.nonEmpty).map(ts => med(ts.toSeq)).sum +
-      qTimes.values.filter(_.nonEmpty).map(ts => med(ts.toSeq)).sum
+    val ok = (bStats ++ qStats).filter(_.ok)
+    val total = ok.map(_.min).sum
+    val medTotal = ok.map(_.med).sum
     // host ledger AFTER the sweeps (the JVM is warm, matching how the
     // reference constant was pinned)
     val calib = calibrate(spark)
@@ -348,7 +278,7 @@ object Bench {
       case _ => ""
     }
     val calibJson = f""""calib_sec":$calib%.3f,"host_factor":$hostFactor%.3f,"reference_set":"$CalibReferenceSet"""" + forkJson
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm":$warmBuilds,"med_total":$medTotal,"reps":$reps,"failures":$failures,$calibJson,"builds":${block(buildFns.map(_._1), bTimes, bCompiles)},"queries":${block(queryFns.map(_._1), qTimes, qCompiles)},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm":$warmBuilds,"med_total":$medTotal,"reps":$reps,"failures":$failures,$calibJson,"builds":${Harness.block(bStats)},"queries":${Harness.block(qStats)},"sf":"$sfDir"}"""
     println(line)
     // stdout is shared with stray log lines; the file is the
     // machine-parseable copy (r6 item: BENCH_r08 had "parsed": null).
@@ -366,10 +296,9 @@ object Bench {
     // scanning the tail for `{"metric"` finds one complete object
     // (the detail line's own `{"metric"` head sits outside the
     // window). Full per-item stats stay in the line above / BENCH.json.
-    val slowest = queryFns.map(_._1).filter(n => qTimes(n).nonEmpty)
-      .sortBy(n => -qTimes(n).min).take(5)
-      .map(n => jstr(n) + ":" + f"${qTimes(n).min}%.3f").mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","med_total":$medTotal,"reps":$reps,"failures":$failures,$calibJson,"n_queries":${queryFns.size},"n_builds":${buildFns.size},"slowest_min":$slowest,"full":"BENCH.json","sf":"$sfDir"}""")
+    val slowest = qStats.filter(_.ok).sortBy(-_.min).take(5)
+      .map(q => Harness.jstr(q.name) + ":" + f"${q.min}%.3f").mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","med_total":$medTotal,"reps":$reps,"failures":$failures,$calibJson,"n_queries":${queries.size},"n_builds":${builds.size},"slowest_min":$slowest,"full":"BENCH.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -56,17 +56,8 @@ object Par {
     * targets — the caller asserts independence (same contract as
     * submitting them from separate threads by hand).
     */
-  /** Measurement kill-switch (SPARK_GRAFT_PAR_SEQ=1): run the thunks
-    * strictly sequentially in submission order — the A/B control for
-    * proving the overlap's worth at a data-bound rung (results and
-    * error behavior identical; each thunk is independent by the
-    * caller's contract).
-    */
-  private val forceSequential: Boolean =
-    sys.env.get("SPARK_GRAFT_PAR_SEQ").contains("1")
-
   def jobs[T](thunks: Seq[() => T], maxConcurrent: Int = 4): Seq[T] =
-    if (forceSequential || thunks.sizeIs <= 1) thunks.map(_())
+    if (thunks.sizeIs <= 1) thunks.map(_())
     else {
       // daemon threads: a wedged Spark action must not pin the JVM
       // past main's exit (the drain below still joins every thunk on

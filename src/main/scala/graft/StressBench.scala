@@ -1,110 +1,88 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev tool: scaling check beyond the largest test SF — self-union
-  * the fact tables ×N (distinct keys via an offset) and run headline
-  * operators, to observe whether runtimes scale ~linearly and no
-  * plan knee appears. Usage: runMain graft.StressBench [sfDir] [N]
-  * [onlyPrefix,...] — the optional third arg restricts to checks
-  * whose name starts with a listed prefix (targeted re-runs).
+import graft.Harness.Item
+import graft.sources.Tables
+
+/** Dev tool: scaling check beyond the largest test SF — [[Amplify]]
+  * the tables ×N (distinct keys via an offset) and run headline
+  * operators through [[Harness]], to observe whether runtimes scale
+  * ~linearly and no plan knee appears.
+  * Usage: runMain graft.StressBench [sfDir] [N[,N...]]
+  * [onlyPrefix,...|all] [out.json] — the optional third arg restricts
+  * to items whose name starts with a listed prefix (targeted re-runs),
+  * the fourth writes the JSON artifact.
   */
 object StressBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val mult = args.lift(1).map(_.toInt).getOrElse(8)
+    val mults = args.lift(1).getOrElse("8").split(",").map(_.toInt).toSeq
     val only: Seq[String] =
-      args.lift(2).map(_.split(",").toSeq).getOrElse(Nil)
+      args.lift(2).filter(_ != "all").map(_.split(",").toSeq).getOrElse(Nil)
     val spark = Engine.session("graft-stress")
-    import graft.sources.Tables
-
-    def amplified(name: String, keyCols: Seq[String]) = {
-      val base = Tables.table(spark, sfDir, name)
-      (0 until mult).map { i =>
-        keyCols.foldLeft(base) { (df, k) =>
-          df.withColumn(k, col(k) + lit(i.toLong * 100000000L))
-        }
-      }.reduce(_ unionByName _)
+    val facts = ArrayBuffer[(String, Any)]("sf" -> sfDir)
+    val stats = mults.flatMap { mult =>
+      // the rung's stores are throwaways: drop them so repeated sweeps
+      // don't accumulate dead artifacts on the spill volume
+      val tmp = Files.createTempDirectory(s"graft_stress_x$mult").toString
+      try Harness.sweep(spark, "STRESS",
+        items(spark, sfDir, mult, tmp, facts)
+          .filter(i => only.isEmpty || only.exists(i.name.startsWith)), 1)
+      finally FsOps.fs(spark, tmp).delete(new Path(tmp), true)
     }
+    Harness.write(args.lift(3), Harness.artifact("StressBench", stats, facts.toSeq))
+    spark.stop()
+  }
 
-    val li = amplified("lineitem", Seq("l_orderkey"))
-    val o = amplified("orders", Seq("o_orderkey", "o_custkey"))
-    println(s"rows: lineitem=${li.count()} orders=${o.count()}")
-
-    def time(name: String)(f: => Long): Unit =
-      if (only.isEmpty || only.exists(name.startsWith)) {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"STRESS $name ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-
-    time("q1_agg_x" + mult) {
+  /** The ×mult items in run order, each named `<op>_x<mult>`; `tmp` is
+    * this rung's scratch directory, `facts` collects untimed readings.
+    */
+  private def items(spark: SparkSession, sfDir: String, mult: Int, tmp: String,
+      facts: ArrayBuffer[(String, Any)]): Seq[Item] = {
+    val timed = ArrayBuffer.empty[Item]
+    def time(name: String)(f: => Any): Unit = timed += Item(s"${name}_x$mult", () => f)
+    val li = Amplify(Tables.table(spark, sfDir, "lineitem"), mult, Seq("l_orderkey"))
+    val o = Amplify(Tables.table(spark, sfDir, "orders"), mult,
+      Seq("o_orderkey", "o_custkey"))
+    val docsAmp = Amplify(Tables.table(spark, sfDir, "documents"), mult,
+      Seq("doc_id"), Amplify.letters("text"))
+    val embAmp = Amplify(Tables.table(spark, sfDir, "embeddings"), mult,
+      Seq("vec_id"), Amplify.dims("embedding"))
+    // user ids are offset per copy so user count scales with mult
+    val eventsAmp = Amplify(Tables.events(spark, sfDir), mult,
+      Seq("event_id", "user_id"))
+    lazy val nEmb = embAmp.count()
+    time("input_lineitem")(li.count())
+    time("input_orders")(o.count())
+    time("input_documents")(docsAmp.count())
+    time("input_embeddings")(nEmb)
+    time("q1_agg") {
       li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(Fp.dsum2(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
         .count()
     }
-    time("join_agg_x" + mult) {
+    time("join_agg") {
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("o_orderpriority")
         .agg(Fp.dsum2(col("l_extendedprice")).as("rev"))
         .count()
     }
-    time("window_x" + mult) {
+    time("window") {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber")
       li.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).count()
     }
 
     // --- LLM-pipeline ops under amplification -------------------------
-    // Text copies must NOT near-dup each other, or pair counts grow
-    // quadratically in mult and CC measures output size, not operator
-    // scaling. A per-copy letter substitution preserves every
-    // WITHIN-copy similarity exactly while making cross-copy Jaccard
-    // land below tau. Each copy's transform is a seeded Fisher-Yates
-    // permutation — uniformly mixed for EVERY index. (A rotation
-    // aliases with period n; a Lehmer-indexed permutation is worse:
-    // for index i « n! only the last few positions move, so copies
-    // share all but ~log(i) coordinates.)
-    //
-    // Embeddings get the same permutation treatment, but with a
-    // different expectation: a vector's cosine against a permuted
-    // copy of ITSELF (its permutation autocorrelation) clears a 0.45
-    // threshold with ~constant probability for clustered vectors, and
-    // the number of (vector, copy-pair) combinations grows as mult² —
-    // so cross-copy pairs appear at large mult under ANY fixed
-    // per-copy isometry. That is fine for THIS op's diagnostic: F5 is
-    // exact quadratic-work by design (the grid θ-join), so the check
-    // is time ≲ mult² (observed ×12→×24: 3.2× for 4× work), while the
-    // LINEAR checks (pair counts ≈ mult × base, CC rounds flat) are
-    // read from the text ops, whose cross-copy leakage is zero.
-    def rngPerm(n: Int, seed: Long): Array[Int] = {
-      val r = new java.util.Random(seed * 0x9E3779B97F4A7C15L + n)
-      val out = Array.range(0, n)
-      for (k <- n - 1 to 1 by -1) {
-        val j = r.nextInt(k + 1)
-        val t = out(k); out(k) = out(j); out(j) = t
-      }
-      out
-    }
-    val subAlpha = "etaoinshr"
-    def docsAmp = (0 until mult).map { i =>
-      val subst = rngPerm(subAlpha.length, i.toLong).map(subAlpha).mkString
-      graft.sources.Tables.table(spark, sfDir, "documents")
-        .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        .withColumn("text", translate(col("text"), subAlpha, subst))
-    }.reduce(_ unionByName _)
-    def embAmp = (0 until mult).map { i =>
-      val p = rngPerm(64, i.toLong)
-      graft.sources.Tables.table(spark, sfDir, "embeddings")
-        .withColumn("vec_id", col("vec_id") + lit(i.toLong * 100000000L))
-        .withColumn("embedding", expr(
-          p.map(d => s"element_at(embedding, ${d + 1})")
-            .mkString("array(", ", ", ")")))
-    }.reduce(_ unionByName _)
-    println(s"rows: documents=${docsAmp.count()} embeddings=${embAmp.count()}")
-
-    time("minhash_pairs_x" + mult) {
+    time("minhash_pairs") {
       val sh = graft.dedup.Dedup.shingleSets(docsAmp, "doc_id", "text").persist()
       val n = graft.dedup.Dedup.jaccardVerify(
         graft.dedup.Dedup.bucketPairs(graft.dedup.Dedup.minhashBuckets(sh)),
@@ -112,62 +90,61 @@ object StressBench {
       sh.unpersist()
       n
     }
-    time("ngram_jaccard_x" + mult) {
+    time("ngram_jaccard") {
       graft.dedup.Dedup.ngramJaccardPairs(docsAmp, "doc_id", "text", 0.5).count()
     }
-    time("embedding_neardup_x" + mult) {
+    // F5 is exact quadratic work by design (the grid θ-join), and
+    // permuted embedding copies leak cross-copy pairs at large mult
+    // (see Amplify), so the check here is time ≲ mult² (observed
+    // ×12→×24: 3.2× for 4× work)
+    time("embedding_neardup") {
       graft.dedup.DedupQueries.neardupPairs(embAmp, 0.45).count()
     }
     // substring windows are 30 chars, so the per-copy letter
     // substitution breaks every cross-copy window — duplicated-window
     // volume stays mult × base and time should track it linearly
-    time("substring_dedup_x" + mult) {
+    time("substring_dedup") {
       graft.dedup.Dedup.substringDup(docsAmp, "doc_id", "text").count()
     }
     // map-only projection: the trivially-linear control
-    time("embedding_quantize_x" + mult) {
+    time("embedding_quantize") {
       graft.sim.SimQueries.embeddingQuantizeFrame(embAmp).count()
     }
     // map-only fan-out: linear control like embedding_quantize
-    time("doc_chunk_x" + mult) {
+    time("doc_chunk") {
       graft.text.Chunk.chunks(docsAmp, "doc_id", "text").count()
     }
-    // per-user window + one combinable agg; user ids are offset per
-    // copy so user count scales with mult and time should be ~linear
-    def eventsAmp = (0 until mult).map { i =>
-      graft.sources.Tables.events(spark, sfDir)
-        .withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
-        .withColumn("user_id", col("user_id") + lit(i.toLong * 100000000L))
-    }.reduce(_ unionByName _)
-    time("event_transitions_x" + mult) {
+    // per-user window + one combinable agg: user count scales with
+    // mult, so time should be ~linear
+    time("event_transitions") {
       graft.streaming.StreamQueries.transitions(eventsAmp).count()
     }
     // one per-user window + O(channels) output: linear
-    time("attribution_x" + mult) {
+    time("attribution") {
       graft.analytics.EventOps.attributionOf(eventsAmp).count()
     }
     // exact grouped percentiles gather per-(type) arrays — the
     // documented gather path; time should track the sort of
     // mult × values per type (~linearithmic)
-    time("anomaly_mad_x" + mult) {
+    time("anomaly_mad") {
       graft.analytics.EventOps.anomalyMadOf(eventsAmp).count()
     }
     // event-volume work is ONE hourly aggregate; the window/seasonal
     // passes run on the O(types×hours) series, which amplification
     // does NOT grow (copies share the time range) — expect time ≈ the
     // hourly aggregate's linear cost
-    time("ts_decompose_x" + mult) {
+    time("ts_decompose") {
       graft.analytics.EventOps.tsDecomposeOf(eventsAmp).count()
     }
     // explode + combinable agg over (labels × dims): linear scan,
     // constant-size shuffle
-    time("embedding_centroids_x" + mult) {
+    time("embedding_centroids") {
       graft.sim.SimQueries.centroidsOf(embAmp).count()
     }
     // cross-copy pairs are zero (letter substitution), so the graph
     // grows linearly and PageRank's per-round join/agg should too;
     // rounds are fixed at 10 regardless of mult
-    time("pagerank_x" + mult) {
+    time("pagerank") {
       val sh = graft.dedup.Dedup.shingleSets(docsAmp, "doc_id", "text").persist()
       val pairs = graft.dedup.Dedup.jaccardVerify(
         graft.dedup.Dedup.bucketPairs(graft.dedup.Dedup.minhashBuckets(sh)),
@@ -184,14 +161,28 @@ object StressBench {
     // boundaries: bucket counts move in powers of two, so the ratio
     // wobbles around 2× per doubling instead of the fixed-geometry
     // mult² that r5 measured at 171→665 s).
-    time("knn_join_x" + mult) {
+    time("knn_join") {
       graft.sim.Knn.lshJoin(embAmp, 3).count()
+    }
+    // the plane count at this corpus size and the candidate-pair
+    // volume under the occupancy-capped cell key
+    time("knn_pairs") {
+      val planes = sim.Knn.planesFor(nEmb)
+      facts += s"knn_planes_x$mult" -> planes
+      val sig = sim.Knn.saltByOccupancy(Par.spread(embAmp)
+          .select(col("vec_id"), sim.Knn.lshBucket("embedding", planes).as("bucket"))
+          .localCheckpoint(true))
+        .localCheckpoint(true)
+      sig.select(col("vec_id"), col("bucket"), col("salt"))
+        .join(sig.select(col("vec_id").as("v2"), col("bucket"), col("salt")),
+          Seq("bucket", "salt"))
+        .filter(col("vec_id") =!= col("v2")).count()
     }
     // √n-list IVF geometry: within-list pair volume (the semdedup
     // join) should grow ~n^1.5 — ≈2.8× per corpus doubling — not the
     // n²/16 of the old fixed 16-list quantizer. The time includes the
     // one-time KMeans quantizer fit at this corpus size.
-    time("semdedup_pairs_x" + mult) {
+    time("semdedup_pairs") {
       graft.sim.Ivf.semdedupPairCount(embAmp)
     }
     // IVFPQ with the GIVEN 16-centroid quantizer: residual encode is
@@ -200,19 +191,19 @@ object StressBench {
     // at fixed centroids) — expect ~linear time, the serving property
     // the PQ layer exists for. Includes the assignment + residual
     // builds at this corpus size (memos are per-plan).
-    time("knn_ivfpq_x" + mult) {
+    time("knn_ivfpq") {
       graft.sim.Pq.knnIvfPq(embAmp).count()
     }
     // DSIR: one token explode + two 256-row bucket aggregates + a
     // co-partitioned bucket join + one decimal sum per doc — linear
     // in token volume; the Gumbel-top-k draw is a TakeOrdered
-    time("dsir_x" + mult) {
+    time("dsir") {
       graft.pipeline.Corpus.dsir(docsAmp,
         Seq("src0", "src1"), 100).count()
     }
     // RRF fusion rides two top-20 retrievals over the (fresh) posting
     // index — time tracks the index build, which is linear in tokens
-    time("hybrid_rrf_x" + mult) {
+    time("hybrid_rrf") {
       val idx = graft.text.Tfidf.index(docsAmp, "doc_id", "text")
       idx.weights.count()
     }
@@ -220,7 +211,7 @@ object StressBench {
     // bucket self-join for candidates — letter substitution keeps
     // cross-copy hamming distances wide, so pair volume stays
     // ~mult × base and time should track it linearly
-    time("simhash_x" + mult) {
+    time("simhash") {
       val sims = graft.dedup.Dedup.simhash(docsAmp, "doc_id", "text")
         .localCheckpoint(true)
       // geometry from the DOCUMENTS count, exactly as dedupSimhash
@@ -237,38 +228,34 @@ object StressBench {
     // frames (corpus-independent round count), then one linear encode
     // pass applies the merge ranks per doc — expect ~linear time in
     // corpus with a fixed induction floor
-    time("bpe_fertility_x" + mult) {
+    time("bpe_fertility") {
       graft.text.Bpe.fertility(docsAmp, "doc_id", "text").count()
     }
     // PCA: the covariance generate is the one corpus-sized pass
     // (d(d+1)/2 quantized products per vector, partial-aggregated
     // map-side); iteration cost is corpus-independent — expect
     // ~linear time in vectors
-    time("embedding_pca_x" + mult) {
+    time("embedding_pca") {
       graft.sim.Pca.pca1(embAmp).count()
     }
     // sketch store: the daily build is the ONE corpus-sized pass
     // (bounded aggregates per family — linear in event volume; user
     // ids offset per copy so distinct users scale too)...
-    val sketchDir = s"/tmp/graft_stress_sketch_x$mult-${System.nanoTime()}"
-    time("sketch_daily_build_x" + mult) {
+    val sketchDir = s"$tmp/sketch"
+    time("sketch_daily_build") {
       // per-family attribution (round-13 verdict: the aggregate
       // build's ×12→×24 scaling read super-linear with no culprit
       // named) — each family is its own corpus pass, timed alone
-      for ((sub, fam) <- graft.relational.SketchStore.dailyFamilies) {
-        val t0 = System.nanoTime()
-        graft.relational.SketchStore.writeFamily(
-          fam(eventsAmp), sub, sketchDir)
-        println(f"STRESS   sketch_daily_${sub}_x$mult%d " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
+      for ((sub, fam) <- graft.relational.SketchStore.dailyFamilies)
+        facts += s"sketch_daily_${sub}_sec_x$mult" -> Harness.seconds(
+          graft.relational.SketchStore.writeFamily(fam(eventsAmp), sub, sketchDir))._1
       spark.read.parquet(s"$sketchDir/kmv").count()
     }
     // ...while the rollup reads ONLY the O(days×groups×K) artifact —
     // its time must stay ~FLAT as mult grows (amplified copies share
     // the 30-day range and 5 types, so the artifact size is pinned;
     // THAT is the point of the store at 100 TB)
-    time("sketch_rollup_x" + mult) {
+    time("sketch_rollup") {
       graft.relational.Sketches.kmvEstimate(graft.relational.Sketches
         .kmvBottomK(spark.read
           .schema("event_type STRING, bot ARRAY<BIGINT>, day DATE")
@@ -276,12 +263,7 @@ object StressBench {
           .select(col("event_type"), explode(col("bot")).as("hv"))))
         .count()
     }
-    // the stress store is a throwaway: drop it so repeated sweeps
-    // don't accumulate dead artifacts on the spill volume
-    val sketchStorePath = new org.apache.hadoop.fs.Path(sketchDir)
-    sketchStorePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(sketchStorePath, true)
-    time("neardup_clusters_x" + mult) {
+    time("neardup_clusters") {
       val sh = graft.dedup.Dedup.shingleSets(docsAmp, "doc_id", "text").persist()
       val pairs = graft.dedup.Dedup.jaccardVerify(
         graft.dedup.Dedup.bucketPairs(graft.dedup.Dedup.minhashBuckets(sh)),
@@ -301,22 +283,19 @@ object StressBench {
     // volume too), and report rows/s plus peak state rows. Files are
     // written time-sorted so the watermark advances like production
     // ingest; ~8 micro-batches via maxFilesPerTrigger.
-    if (only.isEmpty || only.exists("sessionize_stream_x".startsWith)) {
-      val evAmp = (0 until mult).map { i =>
-        Tables.events(spark, sfDir)
-          .withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
-          .withColumn("user_id", col("user_id") + lit(i.toLong * 100000000L))
-      }.reduce(_ unionByName _)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      val dir = s"/tmp/graft_stress_stream_x$mult"
-      val ckpt = s"$dir-ckpt-${System.nanoTime()}"
-      // prep (not timed): 32 time-ranged files so the stream sees
-      // ordered micro-batches
-      evAmp.withColumn("b", expr("unix_micros(ts) div 81000000000"))
+    val dir = s"$tmp/stream"
+    // prep, its own item: 32 time-ranged files so the stream sees
+    // ordered micro-batches
+    lazy val inRows = {
+      eventsAmp.select("event_id", "ts", "user_id", "event_type", "value")
+        .withColumn("b", expr("unix_micros(ts) div 81000000000"))
         .repartitionByRange(32, col("b")).drop("b")
         .sortWithinPartitions("ts")
         .write.mode("overwrite").parquet(dir)
-      val inRows = spark.read.parquet(dir).count()
+      spark.read.parquet(dir).count()
+    }
+    time("sessionize_prep")(inRows)
+    time("sessionize_stream") {
       val sch = spark.read.parquet(dir).schema
       import spark.implicits._
       val src = spark.readStream.schema(sch)
@@ -324,18 +303,27 @@ object StressBench {
         .as[graft.streaming.Streaming.Event]
       val out = graft.streaming.Streaming
         .sessionizeStream(src, graft.streaming.Streaming.SessionGapUs / 1000L)
-      val t0 = System.nanoTime()
       val q = out.writeStream.format("noop")
-        .option("checkpointLocation", ckpt).outputMode("append").start()
+        .option("checkpointLocation", s"$tmp/stream_ckpt").outputMode("append").start()
       q.processAllAvailable()
-      val stateRows = q.recentProgress
+      facts += s"sessionize_peak_state_rows_x$mult" -> q.recentProgress
         .flatMap(p => p.stateOperators.map(_.numRowsTotal))
         .foldLeft(0L)(math.max)
       q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"STRESS sessionize_stream_x$mult $secs%.2f s " +
-        f"($inRows rows, ${inRows / secs}%.0f rows/s, peak state rows=$stateRows)")
+      inRows
     }
-    spark.stop()
+
+    // --- the §2.6 job overlap (Par.jobs) at a data-bound rung ---------
+    // the two overlapped builds: the five daily-family writes into
+    // disjoint subdirs, and the M per-subspace KMeans fits of the
+    // trained IVFPQ index (its sampled residual volume scales with
+    // mult); inputs are checkpointed first so the items time the builds
+    lazy val overlapEvents = eventsAmp.localCheckpoint(true)
+    lazy val overlapEmb = embAmp.select("vec_id", "embedding").localCheckpoint(true)
+    time("overlap_events")(overlapEvents.count())
+    time("sketch_save")(relational.SketchStore.save(overlapEvents, s"$tmp/overlap_sketch"))
+    time("overlap_embeddings")(overlapEmb.count())
+    time("trained_build")(sim.PqTrained.index(overlapEmb))
+    timed.toSeq
   }
 }

@@ -1,7 +1,11 @@
 package graft.tools
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** Dev tool: scaling check for the PERSISTED composed IVFPQ index
   * (G26/G27) — build+save per rung, time the served residual-ADC
@@ -26,7 +30,7 @@ import org.apache.spark.sql.functions._
   * speed. Planted ids live at the top of the range so the given
   * twin's first-16-ids quantizer stays unpolluted.
   *
-  * Usage: runMain graft.tools.StressIvfPq [n1,n2,...] [nCenters]
+  * Usage: runMain graft.tools.StressIvfPq [n1,n2,...] [nCenters] [out.json]
   */
 object StressIvfPq {
 
@@ -91,117 +95,92 @@ object StressIvfPq {
     val nCenters = args.lift(1).map(_.toInt).getOrElse(256)
     val spark = graft.Engine.session("graft-stress-ivfpq")
     spark.sparkContext.setLogLevel("WARN")
+    import graft.sim.Pq.QueryIds
 
-    def timed(f: => Long): (Double, Long) = {
-      var best = Double.MaxValue; var n = 0L
-      for (_ <- 1 to 2) {
-        val t0 = System.nanoTime()
-        n = f
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      (best, n)
-    }
-
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (n <- ns) {
+    val info = ArrayBuffer[(String, Any)]("fixture" -> "planted_clusters",
+      "n_centers" -> nCenters, "sigma_noise" -> SigmaNoise, "sigma_plant" -> SigmaPlant)
+    val stats = ns.toSeq.flatMap { n =>
       val corpus = planted(spark, n, nCenters, seed = 18L)
         .localCheckpoint(true)
       require(corpus.count() == n)
       val d = java.nio.file.Files
         .createTempDirectory(s"graft_stress_ivfpq_$n").toString
-      val t0 = System.nanoTime()
-      graft.sim.Pq.saveIvfPq(corpus, d)
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      val queries = corpus.filter(col("vec_id") < graft.sim.Pq.QueryIds)
-        .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-        .localCheckpoint(true)
-      val (tServe, _) = timed {
-        graft.sim.Pq.servedIvfPqKnn(spark, d, queries,
-          col("vec_id") >= graft.sim.Pq.QueryIds).count()
-      }
-      val (tRerank, _) = timed {
-        graft.sim.Pq.servedIvfPqRerank(spark, d, queries,
-          col("vec_id") >= graft.sim.Pq.QueryIds).count()
-      }
-      // TRAINED index (√n lists, capped probes — the production
-      // geometry): build+save once, then time the served ADC and
-      // sweep recall@k over nProbe against exact ground truth
       val dT = java.nio.file.Files
         .createTempDirectory(s"graft_stress_ivfpq_trained_$n").toString
-      val tT0 = System.nanoTime()
-      graft.sim.PqTrained.save(corpus, dT)
-      val tBuildTrained = (System.nanoTime() - tT0) / 1e9
-      val nListsTrained = graft.sim.Ivf.numLists(n)
-      val (tServeTrained, _) = timed {
-        graft.sim.PqTrained.servedKnn(spark, dT, queries,
-          col("vec_id") >= graft.sim.Pq.QueryIds).count()
-      }
-      // exact ground truth once (its timing IS the honest brute
-      // competitor); with the planted fixture it should BE the
-      // planted set — reported as a fixture sanity check
-      val tB0 = System.nanoTime()
-      val exactTop = {
-        val c = corpus.filter(col("vec_id") >= graft.sim.Pq.QueryIds)
-          .select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("ec"))
-        val scored = c.crossJoin(broadcast(queries))
-          .withColumn("dsq", expr(
-            """aggregate(zip_with(eq, ec, (x, y) ->
-              |  (cast(x as double) - cast(y as double)) *
-              |  (cast(x as double) - cast(y as double))),
-              |  cast(0 as double), (a, v) -> a + v)""".stripMargin))
-          .withColumn("sim", -col("dsq"))
-        graft.plans.AggExpressions
-          .topKPerKey(scored, "query_id", "sim", "neighbor_id", Nil,
-            graft.sim.Pq.K)
-          .select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
-      val tBrute = (System.nanoTime() - tB0) / 1e9
-      val firstPlant =
-        n - graft.sim.Pq.QueryIds.toLong * graft.sim.Pq.K
-      val plantedFrac = exactTop.count(_._2 >= firstPlant).toDouble /
-        math.max(1, exactTop.size)
-      val recallSweep = Seq(1, 2, 4, 8, 16, 32).map { p =>
-        def rec(df: org.apache.spark.sql.DataFrame): Double = {
+      val queries = corpus.filter(col("vec_id") < QueryIds)
+        .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
+        .localCheckpoint(true)
+      // exact ground truth (its timing IS the honest brute competitor);
+      // with the planted fixture it should BE the planted set —
+      // reported as a fixture sanity check
+      var exactTop = Set.empty[(Long, Long)]
+      def item(name: String, build: Boolean = false)(f: => Any) =
+        Harness.Item(s"${name}_n$n", () => f, build)
+      // builds run once, serves are the min of 2 back-to-back sweeps
+      val st = Harness.sweep(spark, "STRESSIVFPQ", Seq(
+        item("build", build = true)(graft.sim.Pq.saveIvfPq(corpus, d)),
+        item("served_adc") {
+          graft.sim.Pq.servedIvfPqKnn(spark, d, queries,
+            col("vec_id") >= QueryIds).count()
+        },
+        item("served_rerank") {
+          graft.sim.Pq.servedIvfPqRerank(spark, d, queries,
+            col("vec_id") >= QueryIds).count()
+        },
+        // TRAINED index (√n lists, capped probes — the production
+        // geometry): build+save once, then time the served ADC and
+        // sweep recall@k over nProbe against exact ground truth
+        item("build_trained", build = true)(graft.sim.PqTrained.save(corpus, dT)),
+        item("served_adc_trained") {
+          graft.sim.PqTrained.servedKnn(spark, dT, queries,
+            col("vec_id") >= QueryIds).count()
+        },
+        item("brute_exact", build = true) {
+          val c = corpus.filter(col("vec_id") >= QueryIds)
+            .select(col("vec_id").as("neighbor_id"),
+              col("embedding").as("ec"))
+          val scored = c.crossJoin(broadcast(queries))
+            .withColumn("dsq", expr(
+              """aggregate(zip_with(eq, ec, (x, y) ->
+                |  (cast(x as double) - cast(y as double)) *
+                |  (cast(x as double) - cast(y as double))),
+                |  cast(0 as double), (a, v) -> a + v)""".stripMargin))
+            .withColumn("sim", -col("dsq"))
+          exactTop = graft.plans.AggExpressions
+            .topKPerKey(scored, "query_id", "sim", "neighbor_id", Nil,
+              graft.sim.Pq.K)
+            .select("query_id", "neighbor_id").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          exactTop.size.toLong
+        }), 2, warm = true)
+      val firstPlant = n - QueryIds.toLong * graft.sim.Pq.K
+      info += s"planted_in_exact_top_n$n" ->
+        exactTop.count(_._2 >= firstPlant).toDouble / math.max(1, exactTop.size)
+      for (p <- Seq(1, 2, 4, 8, 16, 32)) {
+        def rec(df: DataFrame): Double = {
           val got = df.select("query_id", "neighbor_id").collect()
             .map(r => (r.getLong(0), r.getLong(1)))
           got.count(exactTop.contains).toDouble /
             math.max(1, exactTop.size)
         }
-        val adc = rec(graft.sim.PqTrained.knn(corpus, Some(p)))
-        val rr = rec(graft.sim.PqTrained.knnRerank(corpus, Some(p)))
-        s""""$p":{"adc":${f"$adc%.4f"},"rerank":${f"$rr%.4f"}}"""
-      }.mkString("{", ",", "}")
+        info += s"recall_adc_trained_p${p}_n$n" ->
+          rec(graft.sim.PqTrained.knn(corpus, Some(p)))
+        info += s"recall_rerank_trained_p${p}_n$n" ->
+          rec(graft.sim.PqTrained.knnRerank(corpus, Some(p)))
+      }
       // pruning bound: directories the served scan listed vs total
       val totalLists = new java.io.File(s"$d/codes").listFiles()
         .count(_.getName.startsWith("list_id="))
-      val probed = graft.sim.Pq.servedIvfPqKnn(spark, d, queries,
-          col("vec_id") >= graft.sim.Pq.QueryIds)
-        .select("list_id").distinct().count()
-      val line =
-        s"""{"fixture":"planted_clusters","n_centers":$nCenters,
-           |"sigma_noise":$SigmaNoise,"sigma_plant":$SigmaPlant,
-           |"n_vectors":$n,"planted_in_exact_top":$plantedFrac,
-           |"sec_build":$tBuild,
-           |"sec_served_adc":$tServe,"sec_served_rerank":$tRerank,
-           |"sec_brute_exact":$tBrute,
-           |"lists_total":$totalLists,"lists_in_topk":$probed,
-           |"probe_bound":"${graft.sim.Ivf.GivenProbe}/$totalLists",
-           |"sec_build_trained":$tBuildTrained,
-           |"sec_served_adc_trained":$tServeTrained,
-           |"lists_trained":$nListsTrained,
-           |"probe_trained":${graft.sim.PqTrained.probeCount(nListsTrained)},
-           |"recall_at_probes_trained":$recallSweep}"""
-          .stripMargin.replaceAll("\n", "")
-      println("STRESSIVFPQ " + line)
-      out += line
-      graft.Caches.clearAll()
-      spark.catalog.clearCache()
+      val nListsTrained = graft.sim.Ivf.numLists(n)
+      info ++= Seq(s"lists_total_n$n" -> totalLists,
+        s"lists_in_topk_n$n" -> graft.sim.Pq.servedIvfPqKnn(spark, d, queries,
+            col("vec_id") >= QueryIds).select("list_id").distinct().count(),
+        s"probe_bound_n$n" -> s"${graft.sim.Ivf.GivenProbe}/$totalLists",
+        s"lists_trained_n$n" -> nListsTrained,
+        s"probe_trained_n$n" -> graft.sim.PqTrained.probeCount(nListsTrained))
+      st
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of("STRESSIVFPQ_r18.json"),
-      out.mkString("[", ",\n", "]\n"))
+    Harness.write(args.lift(2), Harness.artifact("StressIvfPq", stats, info.toSeq))
     spark.stop()
   }
 }

@@ -1,7 +1,11 @@
 package graft.tools
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** Dev tool: scaling check for the round-15 join-acceleration trio —
   * plain vs bloom-prefiltered (K66) vs salted (K64) joins on an
@@ -10,7 +14,7 @@ import org.apache.spark.sql.functions._
   * (the K38 bloomMExpr discipline, next power of two ≥ 16·n) —
   * exactly what a deployment does; the gate's fixed 32 KB m would
   * saturate past ~30k keys and is reported alongside for honesty.
-  * Usage: runMain graft.tools.StressJoin [sfDir] [mult1,mult2,...]
+  * Usage: runMain graft.tools.StressJoin [sfDir] [mult1,mult2,...] [out.json]
   */
 object StressJoin {
   def main(args: Array[String]): Unit = {
@@ -20,23 +24,14 @@ object StressJoin {
     spark.sparkContext.setLogLevel("WARN")
 
     def amp(t: String, key: String, mult: Int): DataFrame =
-      (0 until mult).map { i =>
-        graft.sources.Tables.table(spark, sfDir, t)
-          .withColumn(key, col(key) + lit(i.toLong * 1000000000L))
-      }.reduce(_ unionByName _)
-
-    def timed(f: => Long): (Double, Long) = {
-      var best = Double.MaxValue; var n = 0L
-      for (_ <- 1 to 2) {
-        val t0 = System.nanoTime()
-        n = f
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      (best, n)
+      graft.Amplify(graft.sources.Tables.table(spark, sfDir, t), mult, Seq(key))
+    def skewSplitOff[T](f: => T): T = {
+      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+      try f finally spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     }
 
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (mult <- mults) {
+    val info = ArrayBuffer[(String, Any)]("sf" -> sfDir)
+    val stats = mults.toSeq.flatMap { mult =>
       val facts = amp("lineitem", "l_orderkey", mult)
         .select("l_orderkey", "l_extendedprice", "l_returnflag")
         .localCheckpoint(true)
@@ -51,41 +46,14 @@ object StressJoin {
       // near-empty dim
       val mBits = java.lang.Long.highestOneBit(
         math.max(16L * nDim, 64L) * 2 - 1)
-      val (tPlain, nPlain) = timed {
-        facts.join(urgent, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("l_returnflag").agg(count(lit(1))).count()
-      }
-      val (tBloom, _) = timed {
-        graft.relational.BloomJoin
-          .bloomFilteredM(facts, "l_orderkey", urgent, "o_orderkey", mBits)
-          .join(urgent, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("l_returnflag").agg(count(lit(1))).count()
-      }
-      val (tSurv, nSurv) = timed {
-        graft.relational.BloomJoin
-          .bloomFilteredM(facts, "l_orderkey", urgent, "o_orderkey", mBits)
-          .count()
-      }
       val nMatch = facts
         .join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi")
         .count()
-      val fpPpm =
-        if (nFact == nMatch) 0L
-        else (nSurv - nMatch) * 1000000L / (nFact - nMatch)
       // salted vs plain on the full (3.19x-skew) orders join
       val fullDim = amp("orders", "o_orderkey", mult)
         .select("o_orderkey", "o_orderpriority").localCheckpoint(true)
       val factsPk = facts.withColumn("li_pk",
         expr("l_orderkey * 10 + monotonically_increasing_id() % 10"))
-      val (tPlainFull, _) = timed {
-        factsPk.join(fullDim, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("o_orderpriority").agg(count(lit(1))).count()
-      }
-      val (tSalt, _) = timed {
-        graft.relational.SkewJoin
-          .salted(factsPk, fullDim, "l_orderkey", "o_orderkey", "li_pk")
-          .groupBy("o_orderpriority").agg(count(lit(1))).count()
-      }
       // HOT-KEY fixtures (round 16): a fraction of fact ROWS remapped
       // onto ONE existing dim key — the straggler/OOM shape the salt
       // arm exists for (the r15 fixture's 3.19× ratio over 7-row keys
@@ -98,50 +66,65 @@ object StressJoin {
       // requirement), and the K64 salted two-path (mitigation off, so
       // the win is the salt's own).
       val hotKey = fullDim.agg(min("o_orderkey")).collect()(0).getLong(0)
-      def skewRuns(hotMod: Int): (Long, Double, Double, Double, Long) = {
+      val skewed = Seq(20 -> 1, 80 -> 4).map { case (pct, hotMod) =>
         val factsSkew = factsPk.withColumn("l_orderkey",
             expr(s"CASE WHEN l_orderkey % 5 < $hotMod THEN ${hotKey}L " +
               "ELSE l_orderkey END"))
           .localCheckpoint(true)
-        val hotCnt = factsSkew.filter(col("l_orderkey") === hotKey).count()
-        val (tAqe, _) = timed {
-          factsSkew.join(fullDim, col("l_orderkey") === col("o_orderkey"))
-            .groupBy("o_orderpriority").agg(count(lit(1))).count()
-        }
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        val (tNoAqe, _) = timed {
-          factsSkew.join(fullDim, col("l_orderkey") === col("o_orderkey"))
-            .groupBy("o_orderpriority").agg(count(lit(1))).count()
-        }
-        val (tSaltS, nGroups) = timed {
-          graft.relational.SkewJoin
-            .salted(factsSkew, fullDim, "l_orderkey", "o_orderkey", "li_pk")
-            .groupBy("o_orderpriority").agg(count(lit(1))).count()
-        }
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        factsSkew.unpersist()
-        (hotCnt, tAqe, tNoAqe, tSaltS, nGroups)
+        info += s"hot${pct}_cnt_x$mult" ->
+          factsSkew.filter(col("l_orderkey") === hotKey).count()
+        pct -> factsSkew
       }
-      val (hot20, t20Aqe, t20NoAqe, t20Salt, _) = skewRuns(1)
-      val (hot80, t80Aqe, t80NoAqe, t80Salt, nG) = skewRuns(4)
-      val line =
-        s"""{"mult":$mult,"n_fact":$nFact,"n_dim":$nDim,"m_bits":$mBits,
-           |"sec_plain_sel":$tPlain,"sec_bloom_sel":$tBloom,
-           |"sec_bloom_filter":$tSurv,"survivors":$nSurv,
-           |"n_match":$nMatch,"fp_ppm":$fpPpm,
-           |"sec_plain_full":$tPlainFull,"sec_salted_full":$tSalt,
-           |"hot20_cnt":$hot20,"sec_plain_hot20_aqe":$t20Aqe,
-           |"sec_plain_hot20_noaqe":$t20NoAqe,"sec_salted_hot20":$t20Salt,
-           |"hot80_cnt":$hot80,"sec_plain_hot80_aqe":$t80Aqe,
-           |"sec_plain_hot80_noaqe":$t80NoAqe,"sec_salted_hot80":$t80Salt,
-           |"n_groups_salted":$nG}"""
-          .stripMargin.replaceAll("\n", "")
-      println("STRESSJOIN " + line)
-      out += line
+      info ++= Seq(s"n_fact_x$mult" -> nFact, s"n_dim_x$mult" -> nDim,
+        s"m_bits_x$mult" -> mBits, s"n_match_x$mult" -> nMatch)
+
+      def item(name: String)(f: => Long) = Harness.Item(s"${name}_x$mult", () => f)
+      val items = Seq(
+        item("plain_sel") {
+          facts.join(urgent, col("l_orderkey") === col("o_orderkey"))
+            .groupBy("l_returnflag").agg(count(lit(1))).count()
+        },
+        item("bloom_sel") {
+          graft.relational.BloomJoin
+            .bloomFilteredM(facts, "l_orderkey", urgent, "o_orderkey", mBits)
+            .join(urgent, col("l_orderkey") === col("o_orderkey"))
+            .groupBy("l_returnflag").agg(count(lit(1))).count()
+        },
+        // its rows are the bloom survivors
+        item("bloom_filter") {
+          graft.relational.BloomJoin
+            .bloomFilteredM(facts, "l_orderkey", urgent, "o_orderkey", mBits)
+            .count()
+        },
+        item("plain_full") {
+          factsPk.join(fullDim, col("l_orderkey") === col("o_orderkey"))
+            .groupBy("o_orderpriority").agg(count(lit(1))).count()
+        },
+        item("salted_full") {
+          graft.relational.SkewJoin
+            .salted(factsPk, fullDim, "l_orderkey", "o_orderkey", "li_pk")
+            .groupBy("o_orderpriority").agg(count(lit(1))).count()
+        }) ++ skewed.flatMap { case (pct, factsSkew) =>
+          def plain = factsSkew.join(fullDim, col("l_orderkey") === col("o_orderkey"))
+            .groupBy("o_orderpriority").agg(count(lit(1))).count()
+          Seq(
+            item(s"plain_hot${pct}_aqe")(plain),
+            item(s"plain_hot${pct}_noaqe")(skewSplitOff(plain)),
+            item(s"salted_hot$pct")(skewSplitOff {
+              graft.relational.SkewJoin
+                .salted(factsSkew, fullDim, "l_orderkey", "o_orderkey", "li_pk")
+                .groupBy("o_orderpriority").agg(count(lit(1))).count()
+            }))
+        }
+      // min of 2 back-to-back sweeps per item
+      val st = Harness.sweep(spark, "STRESSJOIN", items, 2, warm = true)
+      st.find(_.name == s"bloom_filter_x$mult").flatMap(_.rows).foreach { nSurv =>
+        info += s"fp_ppm_x$mult" ->
+          (if (nFact == nMatch) 0L else (nSurv - nMatch) * 1000000L / (nFact - nMatch))
+      }
+      st
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of("STRESSJOIN_r16.json"),
-      out.mkString("[", ",\n", "]\n"))
+    Harness.write(args.lift(2), Harness.artifact("StressJoin", stats, info.toSeq))
     spark.stop()
   }
 }

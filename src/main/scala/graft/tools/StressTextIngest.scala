@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.Harness
+
 /** Dev tool: measure the text-index ingest cost model the J22/J23
   * docs CLAIM — BM25 appends are O(batch) (every stored table
   * additive, idf derived at serve), tf-idf appends pay an O(index)
@@ -12,7 +14,7 @@ import org.apache.spark.sql.functions._
   * append the other half in equal batches timing each append, serve
   * after every append, compact, serve again.
   *
-  * Usage: runMain graft.tools.StressTextIngest [sfDir] [mult] [batches]
+  * Usage: runMain graft.tools.StressTextIngest [sfDir] [mult] [batches] [out.json]
   */
 object StressTextIngest {
   def main(args: Array[String]): Unit = {
@@ -21,73 +23,49 @@ object StressTextIngest {
     val nBatches = args.lift(2).map(_.toInt).getOrElse(5)
     val spark = graft.Engine.session("graft-stress-text")
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val base = graft.sources.Tables.table(spark, sfDir, "documents")
       .select("doc_id", "text")
-    val reps = (0 until mult).map(_.toLong).toDF("rep")
-    val docs = base.crossJoin(broadcast(reps))
-      .select((col("doc_id") + col("rep") * 10000000L).as("doc_id"),
-        col("text"))
-      .localCheckpoint(true)
+    val docs = graft.Amplify(base, mult, Seq("doc_id")).localCheckpoint(true)
     val n = docs.count()
     val seed = docs.filter(col("doc_id") % 2 === 0)
     val query = "energy consumption in european countries"
 
-    def sec(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (kind <- Seq("bm25", "tfidf")) {
+    val stats = Seq("bm25", "tfidf").flatMap { kind =>
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_stress_text_$kind").toString
-      val tSeed = sec {
-        if (kind == "bm25")
-          graft.text.Bm25.save(spark, seed, "doc_id", "text", dir)
-        else graft.text.Tfidf.save(
-          graft.text.Tfidf.index(seed, "doc_id", "text"), dir)
-      }
-      def serve(): Double = sec {
+      def item(name: String)(f: => Any) = Harness.Item(s"${kind}_$name", () => f)
+      def serve(name: String) = item(name) {
         if (kind == "bm25")
           graft.text.Bm25.servedTopK(spark, dir, query, 10).count()
         else graft.text.Tfidf.searchSaved(spark, dir, query, 10).count()
       }
-      val appends = (0 until nBatches).map { b =>
+      val appends = (0 until nBatches).flatMap { b =>
         val batch = docs.filter(col("doc_id") % 2 === 1 &&
           pmod(col("doc_id"), lit(2L * nBatches)) === (2 * b + 1))
-        val t = sec {
+        Seq(item(s"append_$b") {
           if (kind == "bm25")
             graft.text.Bm25.appendSavedOnce(batch, "doc_id", "text",
               dir, b.toLong)
           else graft.text.Tfidf.appendSavedOnce(batch, "doc_id", "text",
             dir, b.toLong)
-        }
-        (t, serve())
+        }, serve(s"serve_after_$b"))
       }
-      val tCompact = sec {
+      val seedBuild = item("seed_build") {
+        if (kind == "bm25")
+          graft.text.Bm25.save(spark, seed, "doc_id", "text", dir)
+        else graft.text.Tfidf.save(
+          graft.text.Tfidf.index(seed, "doc_id", "text"), dir)
+      }
+      val compact = item("compact") {
         if (kind == "bm25") graft.text.Bm25.compactSaved(spark, dir)
         else graft.text.Tfidf.compactSaved(spark, dir)
       }
-      val sAfter = serve()
-      val line =
-        s"""{"kind":"$kind","n_docs":$n,"mult":$mult,
-           |"sec_seed_build":${f"$tSeed%.2f"},
-           |"sec_append_per_batch":[${appends.map(a => f"${a._1}%.2f")
-             .mkString(",")}],
-           |"sec_serve_after_each":[${appends.map(a => f"${a._2}%.2f")
-             .mkString(",")}],
-           |"sec_compact":${f"$tCompact%.2f"},
-           |"sec_serve_compacted":${f"$sAfter%.2f"}}"""
-          .stripMargin.replaceAll("\n", "")
-      println("STRESSTEXT " + line)
-      out += line
-      graft.Caches.clearAll()
-      spark.catalog.clearCache()
+      Harness.sweep(spark, "STRESSTEXT",
+        (seedBuild +: appends) ++ Seq(compact, serve("serve_compacted")), 1)
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of("STRESSTEXT_r18.json"),
-      out.mkString("[", ",\n", "]\n"))
+    Harness.write(args.lift(3), Harness.artifact("StressTextIngest", stats,
+      Seq("sf" -> sfDir, "n_docs" -> n, "mult" -> mult)))
     spark.stop()
   }
 }

@@ -112,9 +112,7 @@ class RelationalSpec extends SparkSpec {
     // is the whole point; this pins their error at stress scale
     val base = graft.sources.Tables.lineitem(spark, sf)
       .select("l_returnflag", "l_orderkey", "l_extendedprice")
-    val amp = (0 until 24).map(i =>
-      base.withColumn("l_orderkey", col("l_orderkey") + lit(i.toLong * 100000000L))
-    ).reduce(_ unionByName _)
+    val amp = graft.Amplify(base, 24, Seq("l_orderkey"))
     val approx = Relational.approxOf(amp).collect()
       .map(r => r.getAs[String]("l_returnflag") ->
         (r.getAs[Long]("approx_orders"), r.getAs[Double]("approx_median_price")))
