@@ -247,7 +247,7 @@ object Bench {
     // contention). Comparing a warm run against the default
     // cold-every-sweep run separates build-phase contention from
     // genuine per-query plan cost (round-13 verdict item 5). The
-    // driver's bench always runs cold.
+    // default bench always runs cold.
     val warmBuilds = sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("1")
     val builds = buildFns(spark, sfDir).map { case (n, f) => Harness.Item(n, f, build = true) }
     val queries = SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
