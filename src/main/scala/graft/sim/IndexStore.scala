@@ -85,64 +85,36 @@ object IndexStore extends graft.QueryModule {
       .parquet(s"$dir/lists")
   }
 
-  /** Top-k cosine served from a SAVED index — the same probe-then-
-    * re-rank algebra as [[Ivf.knnGivenCentroids]], with the candidate
-    * scan bounded by partition pruning instead of a join against the
-    * full corpus. Bit-identical to the fresh path on the same corpus:
-    * every score uses the same decimal-quantized reductions over the
-    * same stored values.
+  /** Top-k cosine served from a SAVED index — the
+    * [[Ivf.knnGivenCentroids]] composition over the loaded quantizer
+    * and lists, with the candidate scan bounded by partition pruning
+    * instead of a join against the full corpus. Bit-identical to the
+    * fresh path on the same corpus.
     */
   def servedKnnGiven(spark: SparkSession, dir: String,
       queryPred: Column, k: Int): DataFrame = {
     val lists = loadLists(spark, dir)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val queries = lists.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"),
-        col("nsq").as("nq"))
-    // probe routing as a projection over the packed quantizer row
-    // (Ivf.probeSliceExpr — the former row_number window needed its
-    // own exchange); checkpointed because it is read twice — the
-    // partition-prune id collect and the in-list candidate join
-    val probes = queries.crossJoin(broadcast(Ivf.packedCents(cents)))
-      .select(col("query_id"), col("eq"), col("nq"),
-        explode(expr(Ivf.probeSliceExpr(Ivf.GivenProbe))).as("p"))
-      .select(col("query_id"), col("eq"), col("nq"),
-        col("p.cid").as("list_id"))
-      .localCheckpoint(true)
+    // checkpointed because it is read twice — the partition-prune id
+    // collect and the in-list candidate join
+    val probes = Search.probes(Search.queryRows(lists, queryPred),
+      spark.read.parquet(s"$dir/centroids")).localCheckpoint(true)
     // the driver-collected probe set (see object doc) becomes a
     // partition IN-filter: the scan lists only probed directories
     val probedIds = probes.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    val cand = lists
-      .filter(!queryPred && col("list_id").isin(probedIds: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ec"),
-        col("nsq").as("nc"), col("list_id"))
-    val scored = probes.join(cand, "list_id")
-      .withColumn("cosine",
-        Vectors.cosineFrom(Vectors.dot("eq", "ec"), col("nq"), col("nc")))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "cosine", "neighbor_id",
-        Seq("list_id"), k)
-      .select("query_id", "rank", "neighbor_id", "cosine", "list_id")
-      .orderBy("query_id", "rank")
+    Search.topK(Search.cosines(probes,
+      lists.filter(!queryPred && col("list_id").isin(probedIds: _*)),
+      Seq("list_id")), "cosine", Seq("list_id"), k)
   }
 
   /** Maintenance companion to [[appendGiven]]: each append lays one
     * file per touched list, so a long-lived index accumulates small
     * files (the classic ops cost — listing + per-file open dominate a
-    * probe's read). Compaction rewrites the lists layout at one file
-    * per list directory through a staging dir and
-    * [[graft.FsOps.swapDir]]. Serving results are unchanged
-    * (spec-pinned).
+    * probe's read). [[Pq.compactListLayouts]] over the lists layout;
+    * serving results are unchanged (spec-pinned).
     */
-  def compactGiven(spark: SparkSession, dir: String): Unit = {
-    val fs = graft.FsOps.fs(spark, dir)
-    graft.FsOps.recoverDeleteOld(fs, dir, Seq("lists"))
-    val staged = s"$dir/lists_compact_staging"
-    loadLists(spark, dir).repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(staged)
-    graft.FsOps.swapDir(fs, staged, s"$dir/lists")
-  }
+  def compactGiven(spark: SparkSession, dir: String): Unit =
+    Pq.compactListLayouts(spark, dir, Seq("lists" -> loadLists _))
 
   /** Deletion — the last face of the index CRUD lifecycle
     * (save / serve / append / compact / DELETE): remove a set of
@@ -161,63 +133,24 @@ object IndexStore extends graft.QueryModule {
 
   /** J11 — a STREAM of query vectors served against the saved index
     * (the online half of the serving story; [[servedKnnGiven]] is the
-    * batch half). Structured-Streaming constraints shape the plan:
-    *
-    *  - probe selection is STATELESS — no window function (disallowed
-    *    on streams): the loaded centroids pack into ONE broadcast row
-    *    (the [[Pq.packedCodebook]] pattern) and each query scores
-    *    them inside a projection, sorts the 16-struct array, and
-    *    explodes its first nProbe entries;
-    *  - candidates come from a stream-static join on list_id against
-    *    the saved lists;
-    *  - per-query top-k is the collectTopK aggregate — run the sink
-    *    in UPDATE mode; a query's rows land in one micro-batch, so
-    *    its final emission is the complete top-k.
-    *
-    * Scores reuse the exact decimal-quantized reductions, so emitted
-    * rows are bit-equal to the batch serve (spec-pinned).
+    * batch half): the same [[Search.probes]] / [[Search.cosines]] /
+    * [[Search.topK]] composition — stateless projections and
+    * stream-static broadcast joins, so emitted rows are bit-equal to
+    * the batch serve (spec-pinned). Candidates are every stored list
+    * (a stream cannot collect its probe set); per-query top-k is the
+    * collectTopK aggregate — run the sink in UPDATE mode; a query's
+    * rows land in one micro-batch, so its final emission is the
+    * complete top-k.
     */
   def knnServeStream(queries: DataFrame, indexDir: String,
       candPred: Column, k: Int): DataFrame = {
     val spark = queries.sparkSession
-    val lists = loadLists(spark, indexDir)
-    val packed = spark.read.parquet(s"$indexDir/centroids")
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"),
-        col("cn")))).as("cb"))
-      .withColumn("j", lit(1)) // stream-static cross joins are
-    // restricted — a constant equi-join is the streaming idiom
-    // decimal-quantized dot against a lambda-bound centroid — the
-    // same reduction as Vectors.dot, inlined because the codegen'd
-    // helper binds column names, not lambda variables
-    val scoredArr =
-      s"""transform(cb, c -> named_struct(
-         |  'negcos', -(cast(aggregate(
-         |      zip_with(eq, c.ce, (xv, yv) ->
-         |        cast(cast(xv as double) * cast(yv as double)
-         |             as decimal(24,12))),
-         |      cast(0 as decimal(24,12)),
-         |      (acc, v) -> cast(acc + v as decimal(24,12))) as double)
-         |    / (sqrt(nq) * sqrt(c.cn))),
-         |  'cid', c.cid))""".stripMargin
-    val probes = queries
-      .select(col("query_id"), col("eq"), Vectors.normSq("eq").as("nq"),
-        lit(1).as("j"))
-      .join(broadcast(packed), "j")
-      .select(col("query_id"), col("eq"), col("nq"),
-        explode(expr(s"slice(array_sort($scoredArr), 1, ${Ivf.GivenProbe})"))
-          .as("p"))
-      .select(col("query_id"), col("eq"), col("nq"),
-        col("p.cid").as("list_id"))
-    val cand = lists.filter(candPred)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ec"),
-        col("nsq").as("nc"), col("list_id"))
-    val scored = probes.join(cand, "list_id")
-      .withColumn("cosine",
-        Vectors.cosineFrom(Vectors.dot("eq", "ec"), col("nq"), col("nc")))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "cosine", "neighbor_id",
-        Seq("list_id"), k)
-      .select("query_id", "rank", "neighbor_id", "cosine", "list_id")
+    val probes = Search.probes(
+      queries.select(col("query_id"), col("eq"), Vectors.normSq("eq").as("nq")),
+      spark.read.parquet(s"$indexDir/centroids"))
+    Search.topK(Search.cosines(probes,
+      loadLists(spark, indexDir).filter(candPred), Seq("list_id")),
+      "cosine", Seq("list_id"), k, sorted = false)
   }
 
   // --- driver-query face ---------------------------------------------
@@ -356,13 +289,9 @@ object IndexStore extends graft.QueryModule {
     * (codes + codebook only, no raw embeddings), gated by knn_pq's
     * oracle verbatim.
     */
-  def knnPqServedQ(spark: SparkSession, dir: String): DataFrame = {
-    val queries = graft.sources.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < Pq.QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-    Pq.servedKnn(spark, prebuildSavedPq(spark, dir), queries,
-      col("vec_id") >= Pq.QueryIds)
-  }
+  def knnPqServedQ(spark: SparkSession, dir: String): DataFrame =
+    Pq.servedKnn(spark, prebuildSavedPq(spark, dir),
+      pqQueries(spark, dir), col("vec_id") >= Pq.QueryIds)
 
   // --- the composed IVFPQ twin (SURVEY §2 G26/G27) -------------------
 
@@ -407,7 +336,7 @@ object IndexStore extends graft.QueryModule {
     */
   def knnIvfPqAppendedQ(spark: SparkSession, dir: String): DataFrame =
     Pq.servedIvfPqKnn(spark, prebuildSavedIvfPqAppended(spark, dir),
-      ivfPqQueriesOf(spark, dir), col("vec_id") >= Pq.QueryIds)
+      pqQueries(spark, dir), col("vec_id") >= Pq.QueryIds)
 
   /** A third composed index with [DeletedLo, DeletedHi) deleted — the
     * G30 face's gate fixture (bench: `ivfpq_deleted_index`).
@@ -431,7 +360,7 @@ object IndexStore extends graft.QueryModule {
     */
   def knnIvfPqDeletedQ(spark: SparkSession, dir: String): DataFrame =
     Pq.servedIvfPqKnn(spark, prebuildSavedIvfPqDeleted(spark, dir),
-      ivfPqQueriesOf(spark, dir), col("vec_id") >= Pq.QueryIds)
+      pqQueries(spark, dir), col("vec_id") >= Pq.QueryIds)
 
   /** G31 gate fixture: a fourth composed index, saved then rebalanced
     * ONE pass under the tight band (both actions fire on the gate
@@ -461,12 +390,10 @@ object IndexStore extends graft.QueryModule {
     */
   def knnIvfPqRebalancedQ(spark: SparkSession, dir: String): DataFrame =
     Pq.servedIvfPqKnn(spark, prebuildSavedIvfPqRebalanced(spark, dir),
-      ivfPqQueriesOf(spark, dir), col("vec_id") >= Pq.QueryIds)
+      pqQueries(spark, dir), col("vec_id") >= Pq.QueryIds)
 
-  private def ivfPqQueriesOf(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < Pq.QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
+  private def pqQueries(spark: SparkSession, dir: String): DataFrame =
+    Pq.queriesOf(graft.sources.Tables.embeddings(spark, dir))
 
   /** G26 gate query — residual-ADC search over the persisted composed
     * index (coarse routing + partition-pruned compressed lists),
@@ -474,14 +401,14 @@ object IndexStore extends graft.QueryModule {
     */
   def knnIvfPqServedQ(spark: SparkSession, dir: String): DataFrame =
     Pq.servedIvfPqKnn(spark, prebuildSavedIvfPq(spark, dir),
-      ivfPqQueriesOf(spark, dir), col("vec_id") >= Pq.QueryIds)
+      pqQueries(spark, dir), col("vec_id") >= Pq.QueryIds)
 
   /** G27 gate query — the refine stage over the persisted composed
     * index, gated by knn_ivfpq_rerank's oracle verbatim.
     */
   def knnIvfPqRerankServedQ(spark: SparkSession, dir: String): DataFrame =
     Pq.servedIvfPqRerank(spark, prebuildSavedIvfPq(spark, dir),
-      ivfPqQueriesOf(spark, dir), col("vec_id") >= Pq.QueryIds)
+      pqQueries(spark, dir), col("vec_id") >= Pq.QueryIds)
 
   // --- index health (SURVEY §2 G17) ----------------------------------
 

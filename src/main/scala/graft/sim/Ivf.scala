@@ -201,10 +201,7 @@ object Ivf extends QueryModule {
     val scored = probes.join(cand, "list_id")
       .withColumn("cosine",
         Vectors.cosineFrom(Vectors.dot("eq", "ec"), col("nq"), col("nc")))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "cosine", "neighbor_id", Seq("list_id"), k)
-      .select("query_id", "rank", "neighbor_id", "cosine", "list_id")
-      .orderBy("query_id", "rank")
+    Search.topK(scored, "cosine", Seq("list_id"), k)
   }
 
   def knnIvf(spark: SparkSession, dir: String): DataFrame =
@@ -327,62 +324,20 @@ object Ivf extends QueryModule {
   /** Probe count for the given-quantizer search (the NProbe floor). */
   val GivenProbe = 4
 
-  /** The coarse quantizer packed into ONE broadcastable row —
-    * cid-sorted (cid, ce, cn) structs. Probe routing over it is a
-    * projection ([[probeSliceExpr]]), replacing the former per-query
-    * row_number window and its exchange.
-    */
-  private[sim] def packedCents(cents: DataFrame): DataFrame =
-    cents.agg(sort_array(collect_list(
-      struct(col("cid"), col("ce"), col("cn")))).as("cents"))
-
-  /** Probe routing over [[packedCents]] as a projection (the
-    * streaming serve face's spec-pinned shape): score every centroid
-    * with the same quantized-dot cosine as the window form, sort by
-    * (negcos, cid) — exactly the (c_cos DESC, cid ASC) row_number
-    * order, ties impossible past cid — and keep the first `probe`.
-    * Requires `eq`/`nq` columns on the input row.
-    */
-  private[sim] def probeSliceExpr(probe: Int): String = {
-    val scoredArr =
-      s"""transform(cents, c -> named_struct(
-         |  'negcos', -(qdot(eq, c.ce) / (sqrt(nq) * sqrt(c.cn))),
-         |  'cid', c.cid, 'ce', c.ce))""".stripMargin
-    s"slice(array_sort($scoredArr), 1, $probe)"
-  }
-
   /** G2c — IVF search with the GIVEN quantizer: the same probe-then-
-    * re-rank plan as [[knn]] (rank the broadcast centroid table per
-    * query, scan only the nProbe nearest inverted lists, exact
-    * re-rank in-list) with [[GivenCentroids]] fixed centroids — so
-    * the ENTIRE inverted-file search algebra (assignment, probe
-    * selection, in-list candidate join, top-k) sits inside the DuckDB
-    * hash gate. [[knn]] keeps the rows-only check only because its
-    * KMeans fit is not SQL-expressible; this is the same plan with
-    * the quantizer pinned.
+    * re-rank plan as [[knn]] ([[Search.probes]] over the
+    * [[GivenCentroids]] fixed centroids, [[Search.cosines]] in the
+    * probed lists, [[Search.topK]]) — so the ENTIRE inverted-file
+    * search algebra sits inside the DuckDB hash gate. [[knn]] keeps
+    * the rows-only check only because its KMeans fit is not
+    * SQL-expressible.
     */
   def knnGivenCentroids(emb: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
     val (cents, assigned) = givenListed(emb)
-    val queries = assigned.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"),
-        col("nsq").as("nq"))
-    val probes = queries.crossJoin(broadcast(packedCents(cents)))
-      .select(col("query_id"), col("eq"), col("nq"),
-        explode(expr(probeSliceExpr(GivenProbe))).as("p"))
-      .select(col("query_id"), col("eq"), col("nq"),
-        col("p.cid").as("list_id"))
-    val cand = assigned.filter(!queryPred)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ec"),
-        col("nsq").as("nc"), col("list_id"))
-    val scored = probes.join(cand, "list_id")
-      .withColumn("cosine",
-        Vectors.cosineFrom(Vectors.dot("eq", "ec"), col("nq"), col("nc")))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "cosine", "neighbor_id",
-        Seq("list_id"), k)
-      .select("query_id", "rank", "neighbor_id", "cosine", "list_id")
-      .orderBy("query_id", "rank")
+    val probes = Search.probes(Search.queryRows(assigned, queryPred), cents)
+    Search.topK(Search.cosines(probes, assigned.filter(!queryPred),
+      Seq("list_id")), "cosine", Seq("list_id"), k)
   }
 
   def knnGivenCentroidsQ(spark: SparkSession, dir: String): DataFrame =
@@ -406,35 +361,20 @@ object Ivf extends QueryModule {
     * tenants, which is precisely the bug class this query pins.
     *
     * Scale shape: [[knnGivenCentroids]] plus one co-partitioned
-    * metadata join on vec_id; the label equality rides the in-list
-    * candidate join as a second key, so the filtered join is
-    * (list_id, label)-hashed — strictly SMALLER than the unfiltered
-    * in-list join, never a post-hoc filter over it.
+    * metadata join on vec_id; the query's label rides through
+    * [[Search.probes]] and [[Search.cosines]] joins on (list_id,
+    * label) — strictly SMALLER than the unfiltered in-list join, never
+    * a post-hoc filter over it.
     */
   def knnGivenFiltered(emb: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
     val (cents, assigned) = givenListed(emb.select("vec_id", "embedding"))
     val listed = assigned.join(emb.select("vec_id", "label"), "vec_id")
-    val queries = listed.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"),
-        col("nsq").as("nq"), col("label"))
-    val probes = queries.crossJoin(broadcast(packedCents(cents)))
-      .select(col("query_id"), col("eq"), col("nq"), col("label"),
-        explode(expr(probeSliceExpr(GivenProbe))).as("p"))
-      .select(col("query_id"), col("eq"), col("nq"), col("label"),
-        col("p.cid").as("list_id"))
-    val cand = listed.filter(!queryPred)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ec"),
-        col("nsq").as("nc"), col("list_id"), col("label"))
-    val scored = probes.join(cand, Seq("list_id", "label"))
-      .withColumn("cosine",
-        Vectors.cosineFrom(Vectors.dot("eq", "ec"), col("nq"), col("nc")))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "cosine", "neighbor_id",
-        Seq("list_id", "label"), k)
-      .select("query_id", "rank", "neighbor_id", "cosine",
-        "list_id", "label")
-      .orderBy("query_id", "rank")
+    val keys = Seq("list_id", "label")
+    val probes = Search.probes(
+      Search.queryRows(listed, queryPred, "label"), cents)
+    Search.topK(Search.cosines(probes, listed.filter(!queryPred), keys),
+      "cosine", keys, k)
   }
 
   // pass the base table, not a projection: knnGivenFiltered's inner

@@ -15,11 +15,10 @@ import graft.sources.Tables
   *
   * Scale shape: encoding is one broadcast join (the codebook is tiny
   * by construction) + a map-side-combinable argmin — a linear scan at
-  * any corpus size; search precomputes the per-query lookup table
-  * (queries × M × K rows — broadcastable at any corpus size) and the
-  * candidate scoring is a broadcast equi-join on (subspace, code) +
-  * one combinable sum: no per-candidate vector math at all, which is
-  * the entire point of PQ at 10⁹ vectors.
+  * any corpus size; search composes the [[Search]] stages — one
+  * broadcast lookup table per query (M × K entries) and candidate
+  * scoring by M lookups in one projection: no per-candidate vector
+  * math at all, which is the entire point of PQ at 10⁹ vectors.
   *
   * Gate shape (the given-centroids discipline, Ivf.scala): the
   * codebook is the subvectors of a FIXED id set (vec_id <
@@ -40,57 +39,27 @@ object Pq extends QueryModule {
   val QueryIds = 5
   val K = 3
 
-  /** Quantized-exact squared L2 over subspace m of two float-array
-    * columns — the subspace form of [[Vectors.normSq]]'s fold, as the
-    * codegen'd [[graft.plans.QuantFold]] kernel (bit-identical to the
-    * former sliced zip_with/aggregate chain — see QuantFoldSpec).
-    */
-  private def subDistSq(x: String, y: String, m: Int): Column =
-    graft.plans.VectorExpressions.qdistsq(col(x), col(y),
-      m * SubDim, SubDim)
-
-  /** [[subDistSq]] where x is already a double array (a residual) and
-    * y is a float-array codeword — the residual-encoding distance
-    * (the kernel reads each side's element type).
+  /** Quantized-exact squared L2 over subspace m of two array columns —
+    * the subspace form of [[Vectors.normSq]]'s fold, as the codegen'd
+    * [[graft.plans.QuantFold]] kernel (see QuantFoldSpec). x is a
+    * float vector or a double residual, y a float codeword; the kernel
+    * reads each side's element type.
     */
   private[sim] def subDistSqD(x: String, y: String, m: Int): Column =
     graft.plans.VectorExpressions.qdistsq(col(x), col(y),
       m * SubDim, SubDim)
 
   /** Quantized-exact squared L2 over the FULL vector (both float
-    * arrays) — the ground-truth metric [[recall]] evaluates against.
+    * arrays) — the ground-truth metric [[recall]] evaluates against
+    * and the refine distance of the rerank faces.
     */
-  private def fullDistSq(x: String, y: String): Column =
-    graft.plans.VectorExpressions.qdistsq(col(x), col(y))
+  private def fullDistSq(x: Column, y: Column): Column =
+    graft.plans.VectorExpressions.qdistsq(x, y)
 
-  /** ADC LUT flattened into ONE map column per (query[, probed list])
-    * row: key m·2³² + cid (collision-free: cids are vec_ids, far
-    * below 2³²), value the per-subspace quantized distance — the same
-    * [[subDistSqD]] kernel the former long LUT computed per (m, cid)
-    * row. `cbkCol` is the packed cid-sorted array<struct(cid, ce)>
-    * codebook row.
-    */
-  private def lutMapExpr(qresCol: String, cbkCol: String): String =
-    s"map_from_entries(concat(${(0 until NumSub).map(m =>
-      s"transform($cbkCol, c -> named_struct('k', ${m * LutKeyStep}L + c.cid, " +
-        s"'v', qdistsq($qresCol, c.ce, ${m * SubDim}, $SubDim)))")
-      .mkString(", ")}))"
-
-  private val LutKeyStep: Long = 1L << 32
-
-  /** The ADC sum as an inline projection over a candidate's M wide
-    * code columns: Σ_m decimal(24,12)-quantized LUT lookups, cast to
-    * double. BIT-IDENTICAL to the former stack ×M → 3-key broadcast
-    * join → groupBy decimal SUM: the addends are the same doubles
-    * through the same double→decimal cast, decimal addition is exact
-    * (order-free), and the final cast sees the same exact value — so
-    * the explode/join/aggregate (and its exchange) collapse into a
-    * projection.
-    */
-  private def adcDistExpr(lutCol: String): String =
-    s"cast(${(0 until NumSub).map(m =>
-      s"cast(element_at($lutCol, ${m * LutKeyStep}L + code_$m) " +
-        "as decimal(24,12))").mkString(" + ")} as double)"
+  /** The query set of a corpus frame: (query_id, eq). */
+  private[sim] def queriesOf(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < QueryIds)
+      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
 
   private def codebook(emb: DataFrame): DataFrame =
     emb.filter(col("vec_id") < CodebookIds)
@@ -114,7 +83,7 @@ object Pq extends QueryModule {
       e.crossJoin(broadcast(codebook(emb)))
         .select(col("vec_id") +: col("cid") +:
           (0 until NumSub).map(m =>
-            subDistSq("embedding", "ce", m).as(s"d$m")): _*)
+            subDistSqD("embedding", "ce", m).as(s"d$m")): _*)
         .groupBy("vec_id")
         .agg(
           min_by(col("cid"), struct(col("d0"), col("cid"))).as("code_0"),
@@ -129,17 +98,14 @@ object Pq extends QueryModule {
     codes(Tables.embeddings(spark, dir).select("vec_id", "embedding")); ()
   }
 
-  /** The codebook packed into ONE row (`cb` = cid-sorted array of
-    * (cid, ce) structs) — the broadcastable static side of the
-    * streaming encode face ([[graft.streaming.Streaming.pqEncodeStream]]):
-    * a stream can't run the batch groupBy argmin, but it can fold a
-    * 16-struct array column in a stateless projection.
+  /** The codebook packed into ONE row ([[Search.packCodebook]]) — the
+    * broadcastable static side of the streaming encode face
+    * ([[graft.streaming.Streaming.pqEncodeStream]]): a stream can't run
+    * the batch groupBy argmin, but it can fold a 16-struct array
+    * column in a stateless projection.
     */
   def packedCodebook(emb: DataFrame): DataFrame =
-    codebook(emb)
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"))))
-        .as("cb"))
-      .withColumn("j", lit(1))
+    Search.packCodebook(codebook(emb))
 
   /** G10 — `pq_encode`: the stored form, one row per vector with its
     * M codes (the 256-byte → M-byte compression a vector store
@@ -159,107 +125,47 @@ object Pq extends QueryModule {
     encode(emb).write.mode("overwrite").parquet(s"$dir/codes")
   }
 
-  /** ADC top-k served from a SAVED artifact: queries arrive with raw
-    * vectors (the serve-time contract — only the corpus is stored
-    * compressed), the per-query LUT is computed against the loaded
-    * codebook exactly as the fresh path does, and candidates unpack
-    * from the packed codes with one `stack` projection. Bit-identical
-    * to [[knn]] on the same corpus.
+  /** ADC top-k served from a SAVED artifact: raw query vectors (the
+    * serve-time contract — only the corpus is stored compressed) build
+    * their [[Search.lut]] against the loaded codebook, and the loaded
+    * codes are scored by [[Search.adc]]. Bit-identical to [[knn]] on
+    * the same corpus.
     */
   def servedKnn(spark: SparkSession, dir: String, queries: DataFrame,
-      candPred: Column): DataFrame = {
-    val packedCb = spark.read.parquet(s"$dir/codebook")
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"))))
-        .as("cbk"))
-    val lut = queries.crossJoin(broadcast(packedCb))
-      .select(col("query_id"),
-        expr(lutMapExpr("eq", "cbk")).as("lutmap"))
-    val cand = spark.read.parquet(s"$dir/codes").filter(candPred)
-    val adist = cand.crossJoin(broadcast(lut))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(adcDistExpr("lutmap")).as("adist"))
-      .withColumn("sim", -col("adist"))
-    graft.plans.AggExpressions
-      .topKPerKey(adist, "query_id", "sim", "neighbor_id",
-        Seq("adist"), K)
-      .select("query_id", "rank", "neighbor_id", "adist")
-      .orderBy("query_id", "rank")
-  }
+      candPred: Column): DataFrame =
+    Search.topK(Search.adc(spark.read.parquet(s"$dir/codes").filter(candPred),
+      Search.lut(queries, spark.read.parquet(s"$dir/codebook"), "eq")),
+      "sim", Seq("adist"), K)
 
-  /** G11 — `knn_pq`: ADC top-k. The per-query lookup table (queries ×
-    * M × K codewords) is computed exact once and broadcast; each
-    * candidate is scored by M equi-join lookups + one quantized sum —
-    * zero vector arithmetic per candidate.
-    */
+  /** G11 — `knn_pq`: ADC top-k over [[adcScores]] ([[Search.topK]]). */
   def knn(emb: DataFrame): DataFrame =
-    graft.plans.AggExpressions
-      .topKPerKey(adcScores(emb), "query_id", "sim", "neighbor_id",
-        Seq("adist"), K)
-      .select("query_id", "rank", "neighbor_id", "adist")
-      .orderBy("query_id", "rank")
+    Search.topK(adcScores(emb), "sim", Seq("adist"), K)
 
-  /** The per-(query, candidate) ADC score frame — the shared stage-1
-    * body of [[knn]] (top-k directly) and [[knnRerank]] (top-R
-    * shortlist, then exact rescoring).
+  /** The per-(query, candidate) ADC score frame of the flat index —
+    * [[Search.lut]] over the query vectors, [[Search.adc]] over the
+    * codes — shared by [[knn]] and [[knnRerank]].
     */
-  private[sim] def adcScores(emb: DataFrame): DataFrame = {
-    val e = emb.select("vec_id", "embedding")
-    val packedCb = codebook(emb)
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"))))
-        .as("cbk"))
-    val lut = e.filter(col("vec_id") < QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-      .crossJoin(broadcast(packedCb))
-      .select(col("query_id"),
-        expr(lutMapExpr("eq", "cbk")).as("lutmap"))
-    codes(emb).filter(col("vec_id") >= QueryIds)
-      .crossJoin(broadcast(lut))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr(adcDistExpr("lutmap")).as("adist"))
-      .withColumn("sim", -col("adist"))
-  }
+  private[sim] def adcScores(emb: DataFrame): DataFrame =
+    Search.adc(codes(emb).filter(col("vec_id") >= QueryIds),
+      Search.lut(queriesOf(emb), codebook(emb), "eq"))
 
   /** Shortlist size of the rerank's first stage (R > k; the
     * compressed index proposes R, the exact metric disposes k).
     */
   val RerankR = 10
 
-  /** G24 — `knn_pq_rerank`: TWO-STAGE retrieval, the standard serving
-    * pattern a compressed index runs in production (FAISS's
-    * refine/rerank stage): the ADC stage proposes a top-[[RerankR]]
-    * shortlist per query with zero per-candidate vector arithmetic,
-    * then ONLY those queries×R rows fetch raw embeddings and re-score
-    * with the exact quantized squared-L2 — so the expensive exact
-    * metric touches R candidates per query instead of the corpus, and
-    * ADC's quantization error can no longer reorder the final top-k
+  /** G24 — `knn_pq_rerank`: TWO-STAGE retrieval, the serving pattern
+    * a compressed index runs in production (FAISS's refine stage):
+    * [[adcScores]] proposes a top-[[RerankR]] shortlist per query and
+    * [[Search.refine]] re-ranks it by the exact quantized squared-L2,
+    * so ADC's quantization error can no longer reorder the final top-k
     * WITHIN the shortlist (recall(rerank@k) ≥ recall(adc@k),
     * spec-pinned against the brute-force ground truth).
-    *
-    * Scale shape: stage 1 is [[knn]]'s bounded ADC plan; stage 2
-    * broadcasts the queries×R shortlist (with the 5 query vectors)
-    * into the corpus scan — one broadcast hash join, no shuffle of
-    * the data side, exact arithmetic on R×queries rows only.
     */
-  def knnRerank(emb: DataFrame): DataFrame = {
-    val e = emb.select("vec_id", "embedding")
-    val shortlist = graft.plans.AggExpressions
-      .topKPerKey(adcScores(emb), "query_id", "sim", "neighbor_id",
-        Seq("adist"), RerankR)
-      .select("query_id", "neighbor_id", "adist")
-    val q = e.filter(col("vec_id") < QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-    val withQ = shortlist.join(broadcast(q), "query_id")
-    val scored = e.filter(col("vec_id") >= QueryIds)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("en"))
-      .join(broadcast(withQ), "neighbor_id")
-      .withColumn("dist", fullDistSq("eq", "en"))
-      .withColumn("sim", -col("dist"))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "sim", "neighbor_id",
-        Seq("dist", "adist"), K)
-      .select("query_id", "rank", "neighbor_id", "dist", "adist")
-      .orderBy("query_id", "rank")
-  }
+  def knnRerank(emb: DataFrame): DataFrame =
+    Search.refine(
+      Search.topK(adcScores(emb), "sim", Seq("adist"), RerankR, sorted = false),
+      queriesOf(emb), emb.filter(col("vec_id") >= QueryIds), fullDistSq, K)
 
   /** Residual PQ codes under the GIVEN coarse quantizer (the FAISS
     * IVFPQ storage layout): each vector quantizes its residual
@@ -311,84 +217,37 @@ object Pq extends QueryModule {
   }
 
   /** G12 — `knn_ivfpq`: the composed billion-vector serving index
-    * (FAISS IVFPQ shape). A query ranks the broadcast centroid table
-    * (the G2c probe rule — cosine routing, shared assignment chain),
-    * takes its residual AGAINST EACH PROBED LIST's centroid, builds
-    * the per-(query, list) ADC lookup table exact once (queries ×
-    * nProbe × M × K rows — broadcastable at any corpus size), and
-    * scores only candidates stored in probed lists by M equi-join
-    * lookups + one quantized sum. Per-query work is O(√n-ish list
-    * scan) with zero per-candidate vector arithmetic — the IVF probe
-    * bound and the PQ scoring bound composed, which is the layout
-    * actually serving 10⁹-vector search.
+    * (FAISS IVFPQ shape): [[ivfPqScores]] routes each query to its
+    * probed lists, takes its residual against each probed centroid,
+    * and scores only the candidates stored in those lists through the
+    * per-(query, list) lookup table — the IVF probe bound and the PQ
+    * scoring bound composed, zero per-candidate vector arithmetic.
     */
   def knnIvfPq(emb: DataFrame): DataFrame =
-    graft.plans.AggExpressions
-      .topKPerKey(ivfPqScores(emb), "query_id", "sim", "neighbor_id",
-        Seq("adist", "list_id"), K)
-      .select("query_id", "rank", "neighbor_id", "adist", "list_id")
-      .orderBy("query_id", "rank")
+    Search.topK(ivfPqScores(emb), "sim", Seq("adist", "list_id"), K)
 
-  /** G25 — `knn_ivfpq_rerank`: the refine stage over the COMPOSED
-    * index (the G24 two-stage pattern applied to the production
-    * IVFPQ shape — coarse routing + residual ADC proposes, exact
-    * re-scores): top-[[RerankR]] ADC candidates per query fetch raw
-    * embeddings via a broadcast of the shortlist into the corpus
-    * scan and re-rank by exact quantized squared-L2. The IVF probe
-    * bound and the PQ scoring bound still govern stage 1; stage 2
-    * touches queries×R rows at any corpus size.
+  /** G25 — `knn_ivfpq_rerank`: the G24 two-stage pattern over the
+    * COMPOSED index — the top-[[RerankR]] [[ivfPqScores]] shortlist
+    * through [[Search.refine]].
     */
-  def knnIvfPqRerank(emb: DataFrame): DataFrame = {
-    val e = emb.select("vec_id", "embedding")
-    val shortlist = graft.plans.AggExpressions
-      .topKPerKey(ivfPqScores(emb), "query_id", "sim", "neighbor_id",
-        Seq("adist", "list_id"), RerankR)
-      .select("query_id", "neighbor_id", "adist")
-    val q = e.filter(col("vec_id") < QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-    val withQ = shortlist.join(broadcast(q), "query_id")
-    val scored = e.filter(col("vec_id") >= QueryIds)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("en"))
-      .join(broadcast(withQ), "neighbor_id")
-      .withColumn("dist", fullDistSq("eq", "en"))
-      .withColumn("sim", -col("dist"))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "sim", "neighbor_id",
-        Seq("dist", "adist"), K)
-      .select("query_id", "rank", "neighbor_id", "dist", "adist")
-      .orderBy("query_id", "rank")
-  }
+  def knnIvfPqRerank(emb: DataFrame): DataFrame =
+    Search.refine(
+      Search.topK(ivfPqScores(emb), "sim", Seq("adist", "list_id"), RerankR,
+        sorted = false),
+      queriesOf(emb), emb.filter(col("vec_id") >= QueryIds), fullDistSq, K)
 
-  /** The per-(query, candidate) residual-ADC score frame — the shared
-    * stage-1 body of [[knnIvfPq]] and [[knnIvfPqRerank]].
+  /** The per-(query, candidate) residual-ADC score frame — the
+    * [[Search.probes]] residual route over the given quantizer, its
+    * per-(query, list) [[Search.lut]], and [[Search.adc]] over the
+    * residual codes — shared by [[knnIvfPq]] and [[knnIvfPqRerank]].
     */
   private[sim] def ivfPqScores(emb: DataFrame): DataFrame = {
     val (cents, assigned) = Ivf.givenListed(emb)
-    val queries = assigned.filter(col("vec_id") < QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"),
-        col("nsq").as("nq"))
-    // probe routing in ONE projection over the packed centroid row
-    // (the streaming face's spec-pinned shape — the former
-    // row_number window needed its own exchange): struct sort by
-    // (negcos, cid) = the window's (c_cos DESC, cid ASC), same
-    // qdot/sqrt cosine arithmetic
-    val probes = queries.crossJoin(broadcast(Ivf.packedCents(cents)))
-      .select(col("query_id"),
-        explode(expr(Ivf.probeSliceExpr(Ivf.GivenProbe))).as("p"), col("eq"))
-      .select(col("query_id"), col("p.cid").as("list_id"),
-        expr("zip_with(eq, p.ce, " +
-          "(x, c) -> cast(x as double) - cast(c as double))").as("qres"))
-    val packedCb = codebook(emb)
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"))))
-        .as("cbk"))
-    val lut = probes.crossJoin(broadcast(packedCb))
-      .select(col("query_id"), col("list_id"),
-        expr(lutMapExpr("qres", "cbk")).as("lutmap"))
-    residualCodes(emb).filter(col("vec_id") >= QueryIds)
-      .join(broadcast(lut), "list_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("list_id"), expr(adcDistExpr("lutmap")).as("adist"))
-      .withColumn("sim", -col("adist"))
+    val probes = Search.probes(
+      Search.queryRows(assigned, col("vec_id") < QueryIds), cents,
+      residual = true)
+    Search.adc(residualCodes(emb).filter(col("vec_id") >= QueryIds),
+      Search.lut(probes, codebook(emb), "qres"))
   }
 
   // --- persisted IVFPQ (SURVEY §2 G26/G27) ---------------------------
@@ -586,27 +445,36 @@ object Pq extends QueryModule {
     * touches each layout once, bounded by index size, never the raw
     * corpus.
     */
-  def compactIvfPq(spark: SparkSession, dir: String): Unit = {
-    val fs = graft.FsOps.fs(spark, dir)
-    graft.FsOps.recoverDeleteOld(fs, dir, Layouts)
-    // the two layout rewrites are independent (disjoint staging dirs,
-    // per-layout swap atomicity — the documented crash contract
-    // already allows the layouts to sit in different compaction
-    // generations) — overlap them (guide §2.6)
-    graft.Par.jobs[Unit](Seq(
-      "codes" -> loadIvfPqCodes(spark, dir),
-      "refine" -> loadIvfPqRefine(spark, dir)).map { case (sub, df) =>
-      () => {
-        val staged = s"$dir/${sub}_compact_staging"
-        df.repartition(col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id").parquet(staged)
-        graft.FsOps.swapDir(fs, staged, s"$dir/$sub")
-      }
-    })
-  }
+  def compactIvfPq(spark: SparkSession, dir: String): Unit =
+    compactListLayouts(spark, dir, Layouts)
+
+  /** A list-partitioned layout's name under the index dir and its
+    * loader; loaders run only after [[graft.FsOps.recoverDeleteOld]].
+    */
+  private[sim] type ListLayout = (String, (SparkSession, String) => DataFrame)
 
   /** The two list-partitioned layouts of the composed index. */
-  private val Layouts = Seq("codes", "refine")
+  private val Layouts: Seq[ListLayout] =
+    Seq("codes" -> loadIvfPqCodes _, "refine" -> loadIvfPqRefine _)
+
+  /** The compaction shared by [[compactIvfPq]], [[IndexStore.compactGiven]]
+    * and [[PqTrained.compactTrained]]: after the per-list recovery,
+    * each layout rewrites to one file per list directory under a
+    * staging dir that [[graft.FsOps.swapDir]] commits. The rewrites
+    * are independent (disjoint staging dirs, per-layout swap
+    * atomicity), so they overlap through [[graft.Par.jobs]].
+    */
+  private[sim] def compactListLayouts(spark: SparkSession, dir: String,
+      layouts: Seq[ListLayout]): Unit = {
+    val fs = graft.FsOps.fs(spark, dir)
+    graft.FsOps.recoverDeleteOld(fs, dir, layouts.map(_._1))
+    graft.Par.jobs[Unit](layouts.map { case (sub, load) => () => {
+      val staged = s"$dir/${sub}_compact_staging"
+      load(spark, dir).repartition(col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id").parquet(staged)
+      graft.FsOps.swapDir(fs, staged, s"$dir/$sub")
+    }})
+  }
 
   /** G30 — deletion from the composed index, completing its CRUD
     * lifecycle (save / serve / append / compact / DELETE): the delete
@@ -623,7 +491,8 @@ object Pq extends QueryModule {
     // scan would silently miss their rows) and before the old
     // sidecar is cleared as stale (the r17 ADVICE window: re-running
     // the delete — the natural recovery — destroyed them)
-    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir, Layouts)
+    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir,
+      Layouts.map(_._1))
     val del = ids.select(col("vec_id")).distinct().localCheckpoint(true)
     // touched lists computed PER LAYOUT, not from codes alone: after
     // a crash between the codes and refine passes the ids are
@@ -631,10 +500,8 @@ object Pq extends QueryModule {
     // the re-run — the documented recovery — return early while
     // refine/ retains the deleted vectors' raw embeddings forever
     // (found by review in round 18)
-    for ((sub, df) <- Seq(
-        "codes" -> loadIvfPqCodes(spark, dir),
-        "refine" -> loadIvfPqRefine(spark, dir)))
-      deleteFromListLayout(spark, dir, sub, df, del)
+    for ((sub, load) <- Layouts)
+      deleteFromListLayout(spark, dir, sub, load(spark, dir), del)
   }
 
   /** The per-layout delete shared by [[deleteIvfPq]],
@@ -678,7 +545,8 @@ object Pq extends QueryModule {
   def rebalanceIvfPq(spark: SparkSession, dir: String,
       policy: IndexStore.RebalancePolicy =
         IndexStore.RebalancePolicy.Standard): Boolean = {
-    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir, Layouts)
+    graft.FsOps.recoverDeleteOld(graft.FsOps.fs(spark, dir), dir,
+      Layouts.map(_._1))
     val refine = loadIvfPqRefine(spark, dir)
       .withColumn("nsq", Vectors.normSq("embedding"))
     IndexStore.rebalancePlan(refine, spark.read.parquet(s"$dir/centroids"),
@@ -716,112 +584,50 @@ object Pq extends QueryModule {
   }
 
   /** J20 — a STREAM of query vectors answered from the SAVED composed
-    * IVFPQ index (the online half of G26's serving story, under the
-    * same Structured-Streaming constraints as the IVF serve stream):
-    *
-    *  - probe selection is STATELESS — the loaded centroids pack into
-    *    ONE broadcast row and each query scores/sorts/slices them
-    *    inside a projection (windows are disallowed on streams);
-    *  - the residual-ADC distance computes INLINE per candidate from
-    *    the packed codebook row (codeword looked up by code id inside
-    *    the projection) instead of materializing the per-(query,
-    *    list) LUT — arithmetic is the same decimal-quantized per-
-    *    subspace sums in the same order, so scores are BIT-equal to
-    *    the batch serve (spec-pinned);
-    *  - candidates come from a stream-static equi-join on list_id
-    *    against the loaded codes;
-    *  - per-query top-k is the collectTopK aggregate in UPDATE mode.
+    * IVFPQ index (the online half of G26's serving story): the same
+    * [[servedLut]] and [[Search.adc]] composition as
+    * [[servedIvfPqKnn]] — every stage is a projection or a broadcast
+    * stream-static join, so scores are BIT-equal to the batch serve
+    * (spec-pinned). Candidates are every stored list (a stream cannot
+    * collect its probe set for partition pruning); per-query top-k is
+    * the collectTopK aggregate in UPDATE mode.
     */
   def ivfPqServeStream(queries: DataFrame, indexDir: String,
       candPred: Column): DataFrame = {
     val spark = queries.sparkSession
-    val packedCents = spark.read.parquet(s"$indexDir/centroids")
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"),
-        col("cn")))).as("cents"))
-      .withColumn("j", lit(1))
-    val packedCb = spark.read.parquet(s"$indexDir/codebook")
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"))))
-        .as("cbk"))
-      .withColumn("j", lit(1))
-    // (negcos, cid) struct sort = the batch probe ranking (cos desc,
-    // cid asc); ce rides along for the residual
-    val scoredArr =
-      s"""transform(cents, c -> named_struct(
-         |  'negcos', -(qdot(eq, c.ce) / (sqrt(nq) * sqrt(c.cn))),
-         |  'cid', c.cid, 'ce', c.ce))""".stripMargin
-    val probes = queries
-      .select(col("query_id"), col("eq"), Vectors.normSq("eq").as("nq"),
-        lit(1).as("j"))
-      .join(broadcast(packedCents), "j")
-      .select(col("query_id"), col("j"),
-        explode(expr(
-          s"slice(array_sort($scoredArr), 1, ${Ivf.GivenProbe})"))
-          .as("p"),
-        col("eq"))
-      .select(col("query_id"), col("j"), col("p.cid").as("list_id"),
-        expr("zip_with(eq, p.ce, " +
-          "(x, c) -> cast(x as double) - cast(c as double))").as("qres"))
-      .join(broadcast(packedCb), "j")
-    val cand = loadIvfPqCodes(spark, indexDir).filter(candPred)
-      .select(col("vec_id").as("neighbor_id") +: col("list_id") +:
-        (0 until NumSub).map(m => col(s"code_$m")): _*)
-    // per-subspace quantized distance against the code's codeword,
-    // looked up in the packed codebook row — subDistSqD inlined
-    def dm(m: Int): String =
-      s"""qdistsq(qres, filter(cbk, c -> c.cid = code_$m)[0].ce,
-         |  ${m * SubDim}, $SubDim)""".stripMargin
-    val scored = probes.join(cand, "list_id")
-      .withColumn("adist", expr(
-        s"cast(${(0 until NumSub)
-          .map(m => s"cast(${dm(m)} as decimal(24,12))")
-          .mkString(" + ")} as double)"))
-      .withColumn("sim", -col("adist"))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "sim", "neighbor_id",
-        Seq("adist", "list_id"), K)
-      .select("query_id", "rank", "neighbor_id", "adist", "list_id")
+    Search.topK(
+      Search.adc(loadIvfPqCodes(spark, indexDir).filter(candPred),
+        servedLut(spark, indexDir, queries)),
+      "sim", Seq("adist", "list_id"), K, sorted = false)
   }
 
+  /** The per-(query, probed list) lookup table from the SAVED index:
+    * the [[Search.probes]] residual route over the loaded centroids and
+    * [[Search.lut]] over the loaded codebook (parquet round-trips
+    * floats and doubles losslessly, so it equals [[ivfPqScores]]'
+    * table).
+    */
+  private def servedLut(spark: SparkSession, dir: String,
+      queries: DataFrame): DataFrame =
+    Search.lut(
+      Search.probes(queries.withColumn("nq", Vectors.normSq("eq")),
+        spark.read.parquet(s"$dir/centroids"), residual = true),
+      spark.read.parquet(s"$dir/codebook"), "qres")
+
   /** The served stage-1 residual-ADC score frame — [[ivfPqScores]]
-    * replayed from the loaded artifact: probe routing against the
-    * loaded centroids, per-(query, list) LUT against the loaded
-    * codebook, and the candidate scan bounded by PARTITION PRUNING on
-    * the driver-collected probe set (O(#queries × nProbe) ids — the
-    * serving-size quantity, never the corpus). Bit-identical scores:
-    * parquet round-trips floats/doubles losslessly and every
-    * reduction is the same decimal-quantized sum.
+    * replayed from the loaded artifact, with the candidate scan bounded
+    * by PARTITION PRUNING on the driver-collected probe set
+    * (O(#queries × nProbe) ids — the serving-size quantity, never the
+    * corpus). The table is checkpointed because it is read twice: the
+    * probe-set collect and the ADC join.
     */
   private def servedIvfPqScores(spark: SparkSession, dir: String,
       queries: DataFrame, candPred: Column): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val cb = spark.read.parquet(s"$dir/codebook")
-    val q = queries.withColumn("nq", Vectors.normSq("eq"))
-    // probe routing + the per-(query, list) LUT in ONE projection
-    // chain over the packed centroid/codebook rows ([[ivfPqScores]]'
-    // shape from the loaded artifact); checkpointed because it is
-    // read twice — the partition-prune id collect and the ADC join —
-    // and each read would otherwise rescan three parquet inputs
-    val packedCb = cb
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce"))))
-        .as("cbk"))
-    val lut = q.crossJoin(broadcast(Ivf.packedCents(cents)))
-      .select(col("query_id"),
-        explode(expr(Ivf.probeSliceExpr(Ivf.GivenProbe))).as("p"), col("eq"))
-      .select(col("query_id"), col("p.cid").as("list_id"),
-        expr("zip_with(eq, p.ce, " +
-          "(x, c) -> cast(x as double) - cast(c as double))").as("qres"))
-      .crossJoin(broadcast(packedCb))
-      .select(col("query_id"), col("list_id"),
-        expr(lutMapExpr("qres", "cbk")).as("lutmap"))
-      .localCheckpoint(true)
+    val lut = servedLut(spark, dir, queries).localCheckpoint(true)
     val probedIds = lut.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    loadIvfPqCodes(spark, dir)
-      .filter(candPred && col("list_id").isin(probedIds: _*))
-      .join(broadcast(lut), "list_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("list_id"), expr(adcDistExpr("lutmap")).as("adist"))
-      .withColumn("sim", -col("adist"))
+    Search.adc(loadIvfPqCodes(spark, dir)
+      .filter(candPred && col("list_id").isin(probedIds: _*)), lut)
   }
 
   /** G26 — IVFPQ top-k served from the SAVED composed index: queries
@@ -833,65 +639,49 @@ object Pq extends QueryModule {
     */
   def servedIvfPqKnn(spark: SparkSession, dir: String,
       queries: DataFrame, candPred: Column): DataFrame =
-    graft.plans.AggExpressions
-      .topKPerKey(servedIvfPqScores(spark, dir, queries, candPred),
-        "query_id", "sim", "neighbor_id", Seq("adist", "list_id"), K)
-      .select("query_id", "rank", "neighbor_id", "adist", "list_id")
-      .orderBy("query_id", "rank")
+    Search.topK(servedIvfPqScores(spark, dir, queries, candPred),
+      "sim", Seq("adist", "list_id"), K)
 
   /** G27 — the refine stage over the SAVED index ([[knnIvfPqRerank]]
-    * served): the ADC shortlist proposes top-[[RerankR]], then ONLY
-    * those queries×R candidates fetch raw vectors from the `refine/`
-    * sidecar — partition-pruned to the shortlist's own lists — and
-    * re-rank by exact quantized squared-L2. Gated by
+    * served): [[Search.refine]] over the top-[[RerankR]] ADC
+    * shortlist, with the raw vectors read from the `refine/` sidecar
+    * partition-pruned to the shortlist's own lists. Gated by
     * knn_ivfpq_rerank's oracle verbatim.
     */
   def servedIvfPqRerank(spark: SparkSession, dir: String,
       queries: DataFrame, candPred: Column): DataFrame = {
-    val shortlist = graft.plans.AggExpressions
-      .topKPerKey(servedIvfPqScores(spark, dir, queries, candPred),
-        "query_id", "sim", "neighbor_id", Seq("adist", "list_id"),
-        RerankR)
-      .select("query_id", "neighbor_id", "adist", "list_id")
-      .localCheckpoint(true) // read twice: list ids + the join below
+    val shortlist = Search.topK(servedIvfPqScores(spark, dir, queries,
+        candPred), "sim", Seq("adist", "list_id"), RerankR, sorted = false)
+      .localCheckpoint(true) // read twice: list ids + the refine join
     val shortIds = shortlist.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    val withQ = shortlist.select("query_id", "neighbor_id", "adist")
-      .join(broadcast(queries), "query_id")
-    val scored = loadIvfPqRefine(spark, dir)
-      .filter(candPred && col("list_id").isin(shortIds: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("en"))
-      .join(broadcast(withQ), "neighbor_id")
-      .withColumn("dist", fullDistSq("eq", "en"))
-      .withColumn("sim", -col("dist"))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "sim", "neighbor_id",
-        Seq("dist", "adist"), K)
-      .select("query_id", "rank", "neighbor_id", "dist", "adist")
-      .orderBy("query_id", "rank")
+    Search.refine(shortlist, queries, loadIvfPqRefine(spark, dir)
+      .filter(candPred && col("list_id").isin(shortIds: _*)), fullDistSq, K)
   }
 
-  /** G13 — `pq_recall`: recall@k of the ADC search ([[knn]]) against
-    * exact squared-L2 ground truth — the G6 measurement loop applied
-    * to the PQ index (the number a serving team actually watches when
-    * they trade bytes for recall). Both inputs are top-k outputs
-    * (queries × k rows at any corpus size) so the eval join is free
-    * next to the searches; queries the ADC index misses entirely
-    * still surface with recall 0 via the left join.
+  /** G13 — `pq_recall` (and `ivfpq_recall` with `search` =
+    * [[knnIvfPq]]): recall@k of an ADC search against exact
+    * squared-L2 ground truth — the G6 measurement loop applied to the
+    * compressed index (the number a serving team trades bytes, probes
+    * and latency against). Both inputs are top-k outputs (queries × k
+    * rows at any corpus size) so the eval join is free next to the
+    * searches; queries the index misses entirely (a probe-bounded
+    * search can miss whole lists) still surface with recall 0 via the
+    * left join.
     */
-  def recall(emb: DataFrame): DataFrame = {
+  def recall(emb: DataFrame,
+      search: DataFrame => DataFrame = knn): DataFrame = {
     val e = graft.Par.spread(emb.select("vec_id", "embedding"))
-    val q = e.filter(col("vec_id") < QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
+    val q = queriesOf(e)
     val c = e.filter(col("vec_id") >= QueryIds)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ec"))
     val scored = c.crossJoin(broadcast(q))
-      .withColumn("dsq", fullDistSq("eq", "ec"))
+      .withColumn("dsq", fullDistSq(col("eq"), col("ec")))
       .withColumn("sim", -col("dsq"))
     val exact = graft.plans.AggExpressions
       .topKPerKey(scored, "query_id", "sim", "neighbor_id", Nil, K)
       .select("query_id", "neighbor_id")
-    val adc = knn(emb).select("query_id", "neighbor_id")
+    val adc = search(emb).select("query_id", "neighbor_id")
     val hits = adc.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("hits"))
     q.select("query_id").join(hits, Seq("query_id"), "left")
@@ -919,38 +709,9 @@ object Pq extends QueryModule {
     knnIvfPqRerank(
       Tables.embeddings(spark, dir).select("vec_id", "embedding"))
 
-  /** `ivfpq_recall` — the G13/G6 measurement loop applied to the
-    * COMPOSED index: recall@[[K]] of the given-quantizer IVFPQ search
-    * against exact squared-L2 ground truth over the full corpus (the
-    * number a serving team trades probes/bytes/latency against).
-    * Fully hash-gated: both stages are the already-gated relational
-    * chains. Misses from unprobed lists are exactly what this
-    * measures; queries the index misses entirely surface with
-    * recall 0 via the left join.
-    */
-  def ivfPqRecall(emb: DataFrame): DataFrame = {
-    val e = graft.Par.spread(emb.select("vec_id", "embedding"))
-    val q = e.filter(col("vec_id") < QueryIds)
-      .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-    val c = e.filter(col("vec_id") >= QueryIds)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ec"))
-    val scored = c.crossJoin(broadcast(q))
-      .withColumn("dsq", fullDistSq("eq", "ec"))
-      .withColumn("sim", -col("dsq"))
-    val exact = graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "sim", "neighbor_id", Nil, K)
-      .select("query_id", "neighbor_id")
-    val adc = knnIvfPq(emb).select("query_id", "neighbor_id")
-    val hits = adc.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-    q.select("query_id").join(hits, Seq("query_id"), "left")
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
-      .withColumn("recall", col("hits").cast("double") / K)
-      .orderBy("query_id")
-  }
-
   def ivfPqRecallQ(spark: SparkSession, dir: String): DataFrame =
-    ivfPqRecall(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
+    recall(Tables.embeddings(spark, dir).select("vec_id", "embedding"),
+      knnIvfPq)
 
   override def queries: Map[String, Q] = Map(
     "pq_encode" -> (encodeQ _),

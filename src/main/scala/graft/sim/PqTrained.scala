@@ -278,26 +278,18 @@ object PqTrained extends graft.QueryModule {
       }
     })
 
-  /** ADC top-k over the trained index: candidates equi-join the
-    * broadcast LUT frame on list_id (queries × nProbe rows — the
-    * serving-size bound) and score with M element_at picks.
+  /** ADC scoring over the trained index: [[Search.adc]] against the
+    * [[lutFrame]] tables, each candidate scored with M element_at
+    * picks summed in plain doubles.
     */
-  private def adcTopK(codes: DataFrame, lut: DataFrame,
-      k: Int): DataFrame = {
-    val adistExpr = (0 until NumSub)
-      .map(m => element_at(col(s"lut_$m"),
-        col(s"code_$m").cast("int") + 1))
-      .reduce(_ + _)
-    val scored = codes.join(broadcast(lut), "list_id")
-      .withColumn("adist", adistExpr)
-      .withColumn("sim", -col("adist"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "sim", "neighbor_id",
-        Seq("adist", "list_id"), k)
-      .select("query_id", "rank", "neighbor_id", "adist", "list_id")
-      .orderBy("query_id", "rank")
-  }
+  private def adcScores(codes: DataFrame, lut: DataFrame): DataFrame =
+    Search.adc(codes, lut, (0 until NumSub)
+      .map(m => element_at(col(s"lut_$m"), col(s"code_$m").cast("int") + 1))
+      .reduce(_ + _))
+
+  /** The trained refine distance: plain double squared L2. */
+  private def exactDsq(q: Column, n: Column): Column =
+    dsq(q.cast("array<double>"), n.cast("array<double>"))
 
   /** G12 (trained) — `knn_ivfpq`: top-[[K]] residual-ADC search over
     * the √n-list trained index. Rows-only at the gate (the quantizer
@@ -312,10 +304,9 @@ object PqTrained extends graft.QueryModule {
         Seq.empty[(Long, Int, Long, Double, Long)]
           .toDF("query_id", "rank", "neighbor_id", "adist", "list_id")
       case Some(ix) =>
-        val queries = emb.filter(col("vec_id") < QueryIds)
-          .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-        adcTopK(ix.codes.filter(col("vec_id") >= QueryIds),
-          lutFrame(queries, ix, nProbe), K)
+        Search.topK(adcScores(ix.codes.filter(col("vec_id") >= QueryIds),
+          lutFrame(Pq.queriesOf(emb), ix, nProbe)),
+          "sim", Seq("adist", "list_id"), K)
     }
   }
 
@@ -328,11 +319,10 @@ object PqTrained extends graft.QueryModule {
   val TrainedRerankR = 50
 
   /** The refine stage over the trained index (the G24/G25 two-stage
-    * pattern): ADC proposes top-[[TrainedRerankR]] per query from the
-    * probed lists, then ONLY those queries×R rows fetch raw
-    * embeddings (broadcast of the shortlist into the corpus scan) and
-    * re-rank by exact squared L2. This is the number a deployment
-    * actually serves; the recall-vs-probes sweep reports both stages.
+    * pattern): the top-[[TrainedRerankR]] ADC shortlist through
+    * [[Search.refine]] by exact double squared L2. This is the number
+    * a deployment actually serves; the recall-vs-probes sweep reports
+    * both stages.
     */
   def knnRerank(emb: DataFrame, nProbe: Option[Int] = None,
       r: Int = TrainedRerankR): DataFrame = {
@@ -343,25 +333,12 @@ object PqTrained extends graft.QueryModule {
         Seq.empty[(Long, Int, Long, Double, Double)]
           .toDF("query_id", "rank", "neighbor_id", "dist", "adist")
       case Some(ix) =>
-        val queries = emb.filter(col("vec_id") < QueryIds)
-          .select(col("vec_id").as("query_id"), col("embedding").as("eq"))
-        val shortlist =
-          adcTopK(ix.codes.filter(col("vec_id") >= QueryIds),
-            lutFrame(queries, ix, nProbe), r)
-          .select("query_id", "neighbor_id", "adist")
-        val withQ = shortlist.join(broadcast(queries), "query_id")
-        val scored = emb.filter(col("vec_id") >= QueryIds)
-          .select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("en"))
-          .join(broadcast(withQ), "neighbor_id")
-          .withColumn("dist", dsq(col("eq").cast("array<double>"),
-            col("en").cast("array<double>")))
-          .withColumn("sim", -col("dist"))
-        graft.plans.AggExpressions
-          .topKPerKey(scored, "query_id", "sim", "neighbor_id",
-            Seq("dist", "adist"), K)
-          .select("query_id", "rank", "neighbor_id", "dist", "adist")
-          .orderBy("query_id", "rank")
+        val queries = Pq.queriesOf(emb)
+        Search.refine(
+          Search.topK(adcScores(ix.codes.filter(col("vec_id") >= QueryIds),
+            lutFrame(queries, ix, nProbe)), "sim", Seq("adist"), r,
+            sorted = false),
+          queries, emb.filter(col("vec_id") >= QueryIds), exactDsq, K)
     }
   }
 
@@ -465,11 +442,6 @@ object PqTrained extends graft.QueryModule {
       .parquet(s"$dir/codes")
   }
 
-  /** Serve from the SAVED trained index: quantizer + codebook load as
-    * serving-size driver arrays (O(√n)·d and M·k·d doubles), the
-    * probe set partition-prunes `codes/`, and scoring is the same
-    * broadcast-LUT element_at plan as the in-session path.
-    */
   /** Load the SAVED model (quantizer + codebook) as driver arrays —
     * serving-size quantities: O(√n)·d and M·k·d doubles.
     */
@@ -484,30 +456,28 @@ object PqTrained extends graft.QueryModule {
     Index(centers, cb, null)
   }
 
+  /** Serve from the SAVED trained index: the loaded model's
+    * [[lutFrame]], the probe set partition-pruning `codes/`, and the
+    * in-session [[adcScores]] and [[Search.topK]].
+    */
   def servedKnn(spark: SparkSession, dir: String, queries: DataFrame,
       candPred: Column): DataFrame =
-    servedAdc(spark, dir, queries, candPred, K)
+    Search.topK(servedAdc(spark, dir, queries, candPred),
+      "sim", Seq("adist", "list_id"), K)
 
   private def servedAdc(spark: SparkSession, dir: String,
-      queries: DataFrame, candPred: Column, k: Int): DataFrame = {
-    val ix = loadModel(spark, dir)
-    val lut = lutFrame(queries, ix).localCheckpoint(true)
+      queries: DataFrame, candPred: Column): DataFrame = {
+    val lut = lutFrame(queries, loadModel(spark, dir)).localCheckpoint(true)
     val probedIds = lut.select("list_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    val codes = spark.read
-      .schema("vec_id BIGINT, " +
-        (0 until NumSub).map(m => s"code_$m BIGINT").mkString(", ") +
-        ", list_id BIGINT")
-      .parquet(s"$dir/codes")
-      .filter(candPred && col("list_id").isin(probedIds: _*))
-    adcTopK(codes, lut, k)
+    adcScores(Pq.loadIvfPqCodes(spark, dir)
+      .filter(candPred && col("list_id").isin(probedIds: _*)), lut)
   }
 
   /** The two-stage serve from the SAVED trained index (the G27 shape
-    * on the production geometry): ADC proposes top-[[TrainedRerankR]]
-    * per query from the partition-pruned codes scan, then ONLY those
-    * queries×R rows fetch raw embeddings from the CALLER's corpus
-    * frame and re-rank by exact squared L2. The trained layout
+    * on the production geometry): the top-[[TrainedRerankR]] served
+    * ADC shortlist through [[Search.refine]], fetching raw embeddings
+    * from the CALLER's corpus frame. The trained layout
     * deliberately stores codes only — no refine sidecar, the
     * memory/precision trade a PQ deployment makes — so the raw
     * vectors come from the primary store the corpus already lives
@@ -517,24 +487,11 @@ object PqTrained extends graft.QueryModule {
     */
   def servedKnnRerank(spark: SparkSession, dir: String,
       queries: DataFrame, corpus: DataFrame,
-      candPred: Column): DataFrame = {
-    val shortlist =
-      servedAdc(spark, dir, queries, candPred, TrainedRerankR)
-        .select("query_id", "neighbor_id", "adist")
-    val withQ = shortlist.join(broadcast(queries), "query_id")
-    val scored = corpus.filter(candPred)
-      .select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("en"))
-      .join(broadcast(withQ), "neighbor_id")
-      .withColumn("dist", dsq(col("eq").cast("array<double>"),
-        col("en").cast("array<double>")))
-      .withColumn("sim", -col("dist"))
-    graft.plans.AggExpressions
-      .topKPerKey(scored, "query_id", "sim", "neighbor_id",
-        Seq("dist", "adist"), K)
-      .select("query_id", "rank", "neighbor_id", "dist", "adist")
-      .orderBy("query_id", "rank")
-  }
+      candPred: Column): DataFrame =
+    Search.refine(
+      Search.topK(servedAdc(spark, dir, queries, candPred), "sim",
+        Seq("adist"), TrainedRerankR, sorted = false),
+      queries, corpus.filter(candPred), exactDsq, K)
 
   /** G34 — incremental maintenance of the TRAINED composed index: the
     * G28 arrival contract applied to the production geometry (which
@@ -609,15 +566,8 @@ object PqTrained extends graft.QueryModule {
     * accumulates small files; rewrite `codes/` to one file per list
     * and commit it with [[graft.FsOps.swapDir]]. Serving is unchanged.
     */
-  def compactTrained(spark: SparkSession, dir: String): Unit = {
-    val fs = graft.FsOps.fs(spark, dir)
-    graft.FsOps.recoverDeleteOld(fs, dir, Seq("codes"))
-    val staged = s"$dir/codes_compact_staging"
-    Pq.loadIvfPqCodes(spark, dir)
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(staged)
-    graft.FsOps.swapDir(fs, staged, s"$dir/codes")
-  }
+  def compactTrained(spark: SparkSession, dir: String): Unit =
+    Pq.compactListLayouts(spark, dir, Seq("codes" -> Pq.loadIvfPqCodes _))
 
   /** [[appendTrained]] guarded by a batch-id marker (the
     * appendIvfPqOnce discipline): an at-least-once re-delivered batch

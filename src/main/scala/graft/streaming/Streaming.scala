@@ -276,8 +276,8 @@ object Streaming {
   /** J10 — streaming PQ encode (the vector-store INGEST face of G10):
     * arriving vectors are product-quantized in a stateless projection.
     * The 16-codeword codebook packs into ONE static row
-    * ([[graft.sim.Pq.packedCodebook]]); the stream-static equi-join
-    * pins one broadcast per micro-batch; per subspace the argmin
+    * ([[graft.sim.Pq.packedCodebook]]); the stream-static broadcast
+    * cross join pins one broadcast per micro-batch; per subspace the argmin
     * codeword is `array_min` over (distance, cid) structs — the
     * identical (dsq, cid) total order as the batch `min_by`, so
     * stream codes are BIT-EQUAL to batch [[graft.sim.Pq.encode]]
@@ -289,12 +289,11 @@ object Streaming {
     val cb = graft.sim.Pq.packedCodebook(corpus)
     val codeCols = (0 until graft.sim.Pq.NumSub).map { m =>
       val off = m * graft.sim.Pq.SubDim
-      expr(s"""array_min(transform(cb, kv -> named_struct(
+      expr(s"""array_min(transform(cbk, kv -> named_struct(
         |  'd', qdistsq(embedding, kv.ce, $off, ${graft.sim.Pq.SubDim}),
         |  'cid', kv.cid))).cid""".stripMargin).as(s"code_$m")
     }
-    vecs.withColumn("j", lit(1)).join(broadcast(cb), "j")
-      .select(col("vec_id") +: codeCols: _*)
+    vecs.crossJoin(broadcast(cb)).select(col("vec_id") +: codeCols: _*)
   }
 
   /** J7 — streaming anomaly flags (the streaming face of the batch

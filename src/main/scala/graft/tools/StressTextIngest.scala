@@ -29,16 +29,23 @@ object StressTextIngest {
     val docs = graft.Amplify(base, mult, Seq("doc_id")).localCheckpoint(true)
     val n = docs.count()
     val seed = docs.filter(col("doc_id") % 2 === 0)
-    val query = "energy consumption in european countries"
+    // the RAG question: its terms occur in the synthetic documents, so
+    // every serve scores a non-empty top-k
+    val query = graft.text.RagQueries.question
 
     val stats = Seq("bm25", "tfidf").flatMap { kind =>
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_stress_text_$kind").toString
       def item(name: String)(f: => Any) = Harness.Item(s"${kind}_$name", () => f)
       def serve(name: String) = item(name) {
-        if (kind == "bm25")
-          graft.text.Bm25.servedTopK(spark, dir, query, 10).count()
-        else graft.text.Tfidf.searchSaved(spark, dir, query, 10).count()
+        val rows =
+          if (kind == "bm25")
+            graft.text.Bm25.servedTopK(spark, dir, query, 10).count()
+          else graft.text.Tfidf.searchSaved(spark, dir, query, 10).count()
+        // an empty top-k times no scoring: the harness records it as err
+        if (rows == 0)
+          throw new IllegalStateException(s"$kind serve of '$query' returned no rows")
+        rows
       }
       val appends = (0 until nBatches).flatMap { b =>
         val batch = docs.filter(col("doc_id") % 2 === 1 &&

@@ -6,7 +6,7 @@ import graft.SparkSpec
 
 /** QuantFold must be BIT-IDENTICAL to the zip_with/aggregate
   * decimal(24,12) HOF chain it replaces (graft.sim.Vectors.dot,
-  * Pq.subDistSq/subDistSqD/fullDistSq): the fold's outputs land in
+  * Pq.subDistSqD/fullDistSq): the fold's outputs land in
   * oracle-gated results, so "close" is not enough. This spec replays
   * both forms over random and adversarial inputs (nulls, null
   * elements, NaN/Inf, decimal-overflow magnitudes, empty and

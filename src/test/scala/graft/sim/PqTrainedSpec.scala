@@ -54,7 +54,7 @@ class PqTrainedSpec extends SparkSpec {
         "a recall guarantee in general)")
     // training the codebook must beat the pinned given-quantizer twin
     // on the same corpus (its measured mean is 1/15 here)
-    val givenMean = Pq.ivfPqRecall(emb)
+    val givenMean = Pq.recall(emb, Pq.knnIvfPq)
       .agg(avg("recall")).collect()(0).getDouble(0)
     info(s"given-twin meanRecall=$givenMean")
     assert(atDefault >= givenMean,
